@@ -89,8 +89,8 @@ object Collocations {
   }
 
   /** J2: attach c2 on (lang, w2). One persisted count table feeds both
-    * join sides (two subtree instances never hit exchange reuse — see
-    * [[topCollocations]]). Cache lifecycle: the count table is released
+    * join sides (see [[topCollocations]] for what exchange reuse already
+    * shares without it). Cache lifecycle: the count table is released
     * before returning; only the RETURNED (bigram-vocabulary-sized) result
     * stays cached, and the caller owns it — `result.unpersist()` leaves
     * zero session caches behind (asserted in DedupSpec). */
@@ -132,13 +132,9 @@ object Collocations {
     out
   }
 
-  /** F3 + P8: LLR column, NaN/Inf rows dropped, rounded to 6 decimals for
-    * cross-engine (DuckDB oracle) hash parity. */
-  def scored(docs: DataFrame): DataFrame =
-    withN(docs)
-      .withColumn("llr_raw", Llr.llr(col("c1"), col("c2"), col("c12"), col("n")))
-      .filter(!isnan(col("llr_raw")) && !col("llr_raw").isin(Double.PositiveInfinity, Double.NegativeInfinity))
-      .withColumn("llr", round(col("llr_raw"), 6))
+  /** F3 + P8: LLR column, NaN rows dropped (see [[Llr.scored]]), rounded
+    * to 6 decimals for cross-engine (DuckDB oracle) hash parity. */
+  def scored(docs: DataFrame): DataFrame = Llr.scored(withN(docs))
 
   /** PMI companion to [[scored]] (extension — the reference computes LLR
     * only): ln((c12·N)/(c1·c2)) over the same contingency table. Every
@@ -154,16 +150,16 @@ object Collocations {
   /** A5/A6/O2: Top-K per language with deterministic tie-breaks.
     *
     * Unlike the step-by-step builders above (kept 1:1 with the operator
-    * inventory for the per-operator oracle queries), this composition
-    * materializes the unigram-count table once and reuses it for c1, c2
-    * and N. Without that, the corpus subtree appears four times in the DAG
-    * and Spark re-scans + re-tokenizes it four times — exchange reuse does
-    * not fire here because plans containing higher-order-function lambdas
-    * don't canonicalize equal. The count table is vocabulary-sized
-    * (orders of magnitude smaller than the corpus), so caching it is the
-    * same call a 100 TB pipeline makes by writing counts to a table: two
-    * corpus passes total (unigrams, bigrams), like the reference's
-    * separate 1-gram and 2-gram jobs. */
+    * inventory for the per-operator oracle queries), this composition goes
+    * through [[withN]], which caches the tokenized corpus and the
+    * unigram-count table and materializes the joined table before
+    * returning. Exchange reuse alone already shares the count table: in
+    * the same plan built lazily on Spark 4.1.2, the c2 broadcast is a
+    * `ReusedExchange` of the c1 broadcast and N's aggregation reads the
+    * unigram shuffle as a `ReusedExchange`, so the corpus is scanned and
+    * tokenized twice (unigram and bigram aggregations), not four times.
+    * The caches save one of those two tokenizer passes; whether that pays
+    * for their extra jobs is not yet measured. */
   def topCollocations(docs: DataFrame, k: Int = K): DataFrame =
     TopK.topKPerGroup(
       scored(docs).select(col("lang"), col("w1"), col("w2"), col("llr")),
@@ -236,11 +232,7 @@ object Collocations {
       .join(u.select(col("lang"), col("w").as("w1"), col("c").as("c1")), Seq("lang", "w1"))
       .join(u.select(col("lang"), col("w").as("w2"), col("c").as("c2")), Seq("lang", "w2"))
       .join(broadcast(n), Seq("lang"))
-    val sc = joined
-      .withColumn("llr_raw", Llr.llr(col("c1"), col("c2"), col("c12"), col("n")))
-      .filter(!isnan(col("llr_raw")) && !col("llr_raw").isin(Double.PositiveInfinity, Double.NegativeInfinity))
-      .withColumn("llr", round(col("llr_raw"), 6))
-      .select(col("lang"), col("w1"), col("w2"), col("llr"))
+    val sc = Llr.scored(joined).select(col("lang"), col("w1"), col("w2"), col("llr"))
     val (scObs, preTopk) = Metrics.observed(sc, "graft_pre_topk",
       count(lit(1)).as("records"))
     val top = TopK.topKPerGroup(scObs, Seq(col("lang")),

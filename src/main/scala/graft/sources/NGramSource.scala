@@ -1,8 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.ops.Normalize
 
 /** Raw Google-Books-style n-gram ingestion, format-compatible with the
   * reference (SURVEY §2.1 S1-S3):
@@ -18,9 +19,8 @@ import org.apache.spark.sql.types._
   *
   * Reading as text + `split` (rather than a csv schema) keeps the "ignore
   * trailing fields" semantics and never fails on ragged rows — at 100 TB a
-  * malformed shard must degrade to dropped rows, not a job abort. Filters
-  * on the parsed columns still push down to the scan for the year/occ
-  * predicates after the projection.
+  * malformed shard must degrade to dropped rows, not a job abort. Every
+  * split and clean runs once per row (see [[once]]).
   */
 object NGramSource {
 
@@ -54,15 +54,23 @@ object NGramSource {
     parse(tagged.reduce(_ unionByName _))
   }
 
+  /** Evaluates `cols` once per row and appends them to `keep`, behind an
+    * `inline(array(struct(..)))` Generate. A filter on a projected alias is
+    * pushed below its Project as a copy of the aliased expression
+    * (`PushPredicateThroughNonJoin`), so split/clean would run once in the
+    * filter and again in the projection; a generator's output is never
+    * copied back, so filters above this node test the computed values. */
+  private def once(df: DataFrame, keep: Seq[String], cols: Column*): DataFrame =
+    df.select(keep.map(col) :+ inline(array(struct(cols: _*))): _*)
+
   /** Shared TSV-line parse: (lang, value) → (lang, ngram, year,
-    * occurrences), malformed rows dropped. */
+    * occurrences), malformed rows dropped. The line is split once. */
   private[graft] def parse(raw: DataFrame): DataFrame = {
-    val f = split(col("value"), "\t")
+    val f = col("f")
     // try_element_at / try_cast, not element_at / cast: Spark 4 ANSI mode
     // makes the plain forms *throw* on ragged rows or malformed numbers;
     // the reference's semantics are drop-the-row.
-    raw.select(
-        col("lang"),
+    once(once(raw, Seq("lang"), split(col("value"), "\t").as("f")), Seq("lang"),
         try_element_at(f, lit(1)).as("ngram"),
         try_element_at(f, lit(2)).try_cast("int").as("year"),
         try_element_at(f, lit(3)).try_cast("long").as("occurrences"))
@@ -70,21 +78,25 @@ object NGramSource {
         col("occurrences").isNotNull && col("occurrences") > 0)
   }
 
-  /** 1-gram view: (lang, w, year, occurrences), token cleaned, empties
-    * dropped (`Job1.java:139-145`). */
+  /** 1-gram view: (lang, w, year, occurrences), token cleaned once,
+    * empties dropped (`Job1.java:139-145`). */
   def unigrams(df: DataFrame): DataFrame =
-    df.withColumn("w", graft.ops.Normalize.cleanToken(col("ngram")))
+    once(df, Seq("lang", "year", "occurrences"), Normalize.cleanToken(col("ngram")).as("w"))
       .filter(length(col("w")) > 0)
       .select("lang", "w", "year", "occurrences")
 
   /** 2-gram view: (lang, w1, w2, year, occurrences). The ngram splits on
-    * `\s+`, needs >= 2 tokens, takes the first two (`Job1.java:170-186`);
-    * each is cleaned and the row dropped if either cleans to empty. */
+    * `\s+` once, needs >= 2 tokens, takes the first two (`Job1.java:170-186`);
+    * each is cleaned once and the row dropped if either cleans to empty. A
+    * one-token ngram has no second token: `try_element_at` yields NULL, so
+    * the length test drops the row without a separate size filter, and
+    * nothing throws under ANSI mode whatever order the filters run in. */
   def bigrams(df: DataFrame): DataFrame = {
-    val parts = split(col("ngram"), "\\s+")
-    df.filter(size(parts) >= 2)
-      .withColumn("w1", graft.ops.Normalize.cleanToken(element_at(parts, 1)))
-      .withColumn("w2", graft.ops.Normalize.cleanToken(element_at(parts, 2)))
+    val parts = col("parts")
+    val cols = Seq("lang", "year", "occurrences")
+    once(once(df, cols, split(col("ngram"), "\\s+").as("parts")), cols,
+        Normalize.cleanToken(try_element_at(parts, lit(1))).as("w1"),
+        Normalize.cleanToken(try_element_at(parts, lit(2))).as("w2"))
       .filter(length(col("w1")) > 0 && length(col("w2")) > 0)
       .select("lang", "w1", "w2", "year", "occurrences")
   }

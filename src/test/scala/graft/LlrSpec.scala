@@ -76,4 +76,29 @@ class LlrSpec extends SparkSpec {
       (3L, 4L, 2L, 4L))     // k22 < 0
     sparkLlr(bad).foreach(g => assert(g.isNaN))
   }
+
+  test("valid holds exactly when llr is not NaN, and a valid table scores finite") {
+    import spark.implicits._
+    // random tables around the valid region: each cell may be pushed out
+    // of it, so both sides of every guard are hit
+    val anyGen: Gen[(Long, Long, Long, Long)] = validGen.flatMap { case (c1, c2, c12, n) =>
+      for {
+        d1  <- Gen.oneOf(0L, 0L, -c1, -c12 - 1, 1L)
+        d2  <- Gen.oneOf(0L, 0L, -c2, -c12 - 1, 1L)
+        d12 <- Gen.oneOf(0L, 0L, -c12, c1 + 1, -c12 - 5)
+        dn  <- Gen.oneOf(0L, 0L, -n, -n - 3, c1 + c2)
+      } yield (c1 + d1, c2 + d2, c12 + d12, n + dn)
+    }
+    val cases = Gen.listOfN(500, anyGen).sample.get ++ Gen.listOfN(100, validGen).sample.get
+    val (c1, c2, c12, n) = (col("c1"), col("c2"), col("c12"), col("n"))
+    val got = cases.toDF("c1", "c2", "c12", "n")
+      .select(Llr.valid(c1, c2, c12, n), Llr.llr(c1, c2, c12, n)).collect()
+    assert(got.exists(_.getBoolean(0)) && got.exists(!_.getBoolean(0)))
+    cases.zip(got).foreach { case (c, r) =>
+      val (ok, llr) = (r.getBoolean(0), r.getDouble(1))
+      assert(ok == !llr.isNaN, s"$c -> valid=$ok llr=$llr")
+      assert(ok == !(refLlr _).tupled(c).isNaN, s"$c: valid=$ok disagrees with the reference guards")
+      assert(!ok || !llr.isInfinite, s"$c -> $llr")
+    }
+  }
 }

@@ -20,6 +20,15 @@ class NGramCollocationsSpec extends SparkSpec {
   private lazy val bg = NGramSource.bigrams(
     NGramSource.read(spark, res("eng-2gram.tsv"), res("heb-2gram.tsv")))
 
+  private val uniPaths = Seq(res("eng-1gram.tsv"), res("heb-1gram.tsv"))
+  private val bgPaths = Seq(res("eng-2gram.tsv"), res("heb-2gram.tsv"))
+
+  /** `body` without whole-stage codegen — the mode Spark falls back to on
+    * its own when a stage's generated code fails to compile or exceeds
+    * `hugeMethodLimit`; no filter then runs fused ahead of a projection. */
+  private def interpreted[T](body: => T): T =
+    withConf("spark.sql.codegen.wholeStage" -> "false")(body)
+
   test("fromPaths runs the whole chain from raw TSV paths") {
     val top = graft.collocations.NGramCollocations.fromPaths(spark,
       Seq(res("eng-1gram.tsv"), res("heb-1gram.tsv")),
@@ -159,5 +168,33 @@ class NGramCollocationsSpec extends SparkSpec {
     val he = top.filter(_._1 == "he").toSeq
     assert(he.map(_._5).distinct.size == 1, "expected an exact LLR tie")
     assert(he.map(t => (t._3, t._4)) == Seq(("עולם", "טוב"), ("שלום", "עולם")))
+  }
+
+  test("a one-token 2-gram line drops without throwing when whole-stage codegen is off") {
+    // eng-2gram.tsv holds `onetoken\t1994\t9`: it has no second token
+    val rows = interpreted {
+      val b = NGramSource.bigrams(NGramSource.read(spark, res("eng-2gram.tsv")))
+      b.write.format("noop").mode("overwrite").save()
+      b.collect()
+    }
+    assert(rows.nonEmpty)
+    assert(!rows.exists(r => r.getString(1) == "onetoken" || r.getString(2) == "onetoken"))
+  }
+
+  test("golden chain: identical rows with whole-stage codegen off") {
+    // every DataFrame is built inside the run: a collected DataFrame keeps
+    // its physical plan, so one built under codegen would stay codegen'd
+    def chain(): Seq[Seq[String]] = {
+      val u = NGramSource.unigrams(NGramSource.read(spark, uniPaths: _*))
+      val b = NGramSource.bigrams(NGramSource.read(spark, bgPaths: _*))
+      Seq(u, b, NGramCollocations.unigramCounts(u),
+          NGramCollocations.grandTotalN(NGramCollocations.unigramCounts(u)),
+          NGramCollocations.bigramCounts(b), NGramCollocations.topCollocations(u, b),
+          NGramCollocations.fromPaths(spark, uniPaths, bgPaths))
+        .map(_.collect().map(_.toString).sorted.toSeq)
+    }
+    val codegen = chain()
+    assert(codegen.forall(_.nonEmpty))
+    assert(interpreted(chain()) == codegen)
   }
 }

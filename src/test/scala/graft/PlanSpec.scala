@@ -344,6 +344,44 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("LeftAnti"), s"expected stopword anti-joins:\n$p")
   }
 
+  test("n-gram path evaluates each per-row expression once, in one lazy plan small enough to JIT") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, Log, RegExpReplace, StringSplit}
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import graft.collocations.NGramCollocations
+    import graft.sources.NGramSource
+    val dir = OracleSqlExt.ngramFixtureDir
+    val (uniPaths, bgPaths) = (Seq(s"$dir/eng-1gram.tsv", s"$dir/heb-1gram.tsv"),
+      Seq(s"$dir/eng-2gram.tsv", s"$dir/heb-2gram.tsv"))
+    def in(p: LogicalPlan): Seq[Expression] = p.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    def splits(p: LogicalPlan, re: String) =
+      in(p).count { case StringSplit(_, Literal(r, _), _) => r.toString == re; case _ => false }
+    def regexes(p: LogicalPlan) = in(p).count(_.isInstanceOf[RegExpReplace])
+
+    // a filter on a projected alias would be pushed down as a second copy
+    val bg = NGramSource.bigrams(NGramSource.read(spark, bgPaths: _*)).queryExecution.optimizedPlan
+    assert(splits(bg, "\t") == 1 && splits(bg, "\\s+") == 1, s"one split per line and ngram:\n$bg")
+    assert(regexes(bg) == 4, s"two regexes per token, two tokens:\n$bg")
+    val uni = NGramSource.unigrams(NGramSource.read(spark, uniPaths: _*)).queryExecution.optimizedPlan
+    assert(splits(uni, "\t") == 1 && regexes(uni) == 2, s"one split, one clean:\n$uni")
+
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val top = NGramCollocations.fromPaths(spark, uniPaths, bgPaths)
+    assert(top.collect().length == 4)
+    val exec = physicalPlan(top)
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val logs = aqe.flatMap(exec)(_.expressions.flatMap(_.collect { case l: Log => l }))
+    assert(logs.size == 4, s"one LLR (four ln terms):\n$exec")
+    // HotSpot never JIT-compiles a method over 8,000 bytes of bytecode
+    // (DontCompileHugeMethods), so such a stage runs interpreted
+    val huge = org.apache.spark.sql.execution.debug.codegenStringSeq(top.queryExecution.executedPlan)
+      .collect { case (stage, _, stats) if stats.maxMethodCodeSize > 8000 => s"${stats.maxMethodCodeSize} B: $stage" }
+    assert(huge.isEmpty, s"generated methods too large to JIT:\n${huge.mkString("\n")}")
+    assert(aqe.collect(exec) { case m: InMemoryTableScanExec => m }.isEmpty, s"no cached table:\n$exec")
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty, "nothing left persisted")
+  }
+
   test("document scans prune to the columns the operator touches") {
     // text ops must not drag lang/source/n_chars through a 100 TB scan
     Seq("text_rolling_hash", "multimodal_resize", "text_token_stats").foreach { q =>
