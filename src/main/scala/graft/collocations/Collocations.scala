@@ -47,14 +47,7 @@ object Collocations {
 
   /** c1 per (lang, w) — A2. Partial aggregation is automatic. */
   def unigramCounts(docs: DataFrame): DataFrame =
-    unigramCountsFromToks(tokenized(docs))
-
-  /** [[unigramCounts]] from an already-tokenized (lang, toks) table —
-    * lets [[joinedC2]]/[[withN]] share ONE cached tokenizer pass across
-    * the unigram and bigram aggregations. */
-  private[graft] def unigramCountsFromToks(t: DataFrame): DataFrame =
-    Stopwords.anti(t.select(col("lang"), explode(col("toks")).as("w")), "w")
-      .groupBy("lang", "w").agg(count(lit(1)).as("c"))
+    unigrams(docs).groupBy("lang", "w").agg(count(lit(1)).as("c"))
 
   /** Grand total N per lang — A4, as a *global* sum (fixes the reference's
     * one-reducer assumption). */
@@ -65,11 +58,8 @@ object Collocations {
     * (pairs are formed over the cleaned token sequence *including*
     * stopwords, then filtered — matching the reference, where Google's
     * bigrams were formed from raw text and stopword bigrams dropped after). */
-  def bigramPairs(docs: DataFrame): DataFrame =
-    bigramPairsFromToks(tokenized(docs))
-
-  private[graft] def bigramPairsFromToks(t: DataFrame): DataFrame = {
-    val pairs = t
+  def bigramPairs(docs: DataFrame): DataFrame = {
+    val pairs = tokenized(docs)
       .select(col("lang"), explode(Normalize.bigramsCol(col("toks"))).as("p"))
       .select(col("lang"), col("p.w1").as("w1"), col("p.w2").as("w2"))
     Stopwords.anti(Stopwords.anti(pairs, "w1"), "w2")
@@ -77,10 +67,33 @@ object Collocations {
 
   /** c12 per (lang, w1, w2) — A3, with real summation. */
   def bigramCounts(docs: DataFrame): DataFrame =
-    bigramCountsFromToks(tokenized(docs))
+    bigramPairs(docs).groupBy("lang", "w1", "w2").agg(count(lit(1)).as("c12"))
 
-  private[graft] def bigramCountsFromToks(t: DataFrame): DataFrame =
-    bigramPairsFromToks(t).groupBy("lang", "w1", "w2").agg(count(lit(1)).as("c12"))
+  /** J1 + J2 + J3 — the reference's Job1→Job2 join chain, written once for
+    * every path (text, counter run, n-gram): attaches c1 on w1 and c2 on w2
+    * from ONE unigram-count table `u` (`keys`, w, `c`), then broadcast-joins
+    * N = Σ`c` per group. Output: keys, w2, w1, c12, c1, c2, n. One lazy
+    * plan: the three reads of `u` canonicalize equal, so the executed plan
+    * computes the unigram shuffle once — the c2 broadcast is a
+    * `ReusedExchange` of the c1 broadcast and N's aggregation reads the
+    * unigram shuffle as a `ReusedExchange` (pinned in PlanSpec). */
+  private[collocations] def withCounts(bigrams: DataFrame, u: DataFrame, keys: Seq[String],
+                                       c: String): DataFrame = {
+    def counts(w: String, cw: String) = u.select(keys.map(col) :+ col("w").as(w) :+ col(c).as(cw): _*)
+    bigrams.join(counts("w1", "c1"), keys :+ "w1")
+      .join(counts("w2", "c2"), keys :+ "w2")
+      .join(broadcast(u.groupBy(keys.map(col): _*).agg(sum(c).as("n"))), keys)
+  }
+
+  /** F3 + P8 + A5/A6/O2 — the reference's Job3, written once for every path:
+    * [[Llr.scored]] over a [[withCounts]] table, then the top k per group of
+    * `keys` by (llr desc, w1, w2), so ties break deterministically. */
+  private[collocations] def topByLlr(joined: DataFrame, keys: Seq[String], k: Int): DataFrame =
+    TopK.topKPerGroup(
+      Llr.scored(joined).select((keys ++ Seq("w1", "w2", "llr")).map(col): _*),
+      keys.map(col),
+      Seq(col("llr").desc, col("w1").asc, col("w2").asc),
+      k)
 
   /** J1: attach c1 on (lang, w1). */
   def joinedC1(docs: DataFrame): DataFrame = {
@@ -88,49 +101,17 @@ object Collocations {
     bigramCounts(docs).join(u1, Seq("lang", "w1"))
   }
 
-  /** J2: attach c2 on (lang, w2). One persisted count table feeds both
-    * join sides (see [[topCollocations]] for what exchange reuse already
-    * shares without it). Cache lifecycle: the count table is released
-    * before returning; only the RETURNED (bigram-vocabulary-sized) result
-    * stays cached, and the caller owns it — `result.unpersist()` leaves
-    * zero session caches behind (asserted in DedupSpec). */
-  def joinedC2(docs: DataFrame): DataFrame = {
-    // cache the TOKENIZED corpus, not just the count table: the unigram
-    // and bigram aggregations each explode it, and without the cache the
-    // regex-heavy tokenizer (the expensive part of the scan) runs twice
-    val t = tokenized(docs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val u = unigramCountsFromToks(t).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = bigramCountsFromToks(t)
-      .join(u.select(col("lang"), col("w").as("w1"), col("c").as("c1")), Seq("lang", "w1"))
-      .join(u.select(col("lang"), col("w").as("w2"), col("c").as("c2")), Seq("lang", "w2"))
-      .select("lang", "w2", "w1", "c12", "c1", "c2")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    u.unpersist()
-    t.unpersist()
-    out
-  }
+  /** J2: c1 and c2 attached — the [[withCounts]] chain with N projected
+    * away (every lang with a bigram has an N row, so the inner N join drops
+    * nothing). A lazy plan like every builder here: nothing is cached. */
+  def joinedC2(docs: DataFrame): DataFrame = withN(docs).drop("n")
 
-  /** J3: attach the grand total N via an explicit broadcast join; same
-    * shared count table serves c1, c2 and N. Same lifecycle as
-    * [[joinedC2]]: the count table is released once the joined result is
-    * materialized — the cached return value is the single-DAG equivalent
-    * of the reference writing Job2's joined output to a table. */
-  def withN(docs: DataFrame): DataFrame = {
-    // same single-tokenize discipline as [[joinedC2]]
-    val t = tokenized(docs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val u = unigramCountsFromToks(t).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = u.groupBy("lang").agg(sum("c").as("n"))
-    val out = bigramCountsFromToks(t)
-      .join(u.select(col("lang"), col("w").as("w1"), col("c").as("c1")), Seq("lang", "w1"))
-      .join(u.select(col("lang"), col("w").as("w2"), col("c").as("c2")), Seq("lang", "w2"))
-      .join(broadcast(n), Seq("lang"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    u.unpersist()
-    t.unpersist()
-    out
-  }
+  /** J3: c1, c2 and the grand total N (explicit broadcast join) attached
+    * from one unigram-count table — see [[withCounts]]. The lazy
+    * single-DAG equivalent of the reference writing Job2's joined output to
+    * a table. */
+  def withN(docs: DataFrame): DataFrame =
+    withCounts(bigramCounts(docs), unigramCounts(docs), Seq("lang"), "c")
 
   /** F3 + P8: LLR column, NaN rows dropped (see [[Llr.scored]]), rounded
     * to 6 decimals for cross-engine (DuckDB oracle) hash parity. */
@@ -147,50 +128,15 @@ object Collocations {
         round(log(col("c12").cast("double") * col("n") /
           (col("c1").cast("double") * col("c2"))), 6).as("pmi"))
 
-  /** A5/A6/O2: Top-K per language with deterministic tie-breaks.
-    *
-    * Unlike the step-by-step builders above (kept 1:1 with the operator
-    * inventory for the per-operator oracle queries), this composition goes
-    * through [[withN]], which caches the tokenized corpus and the
-    * unigram-count table and materializes the joined table before
-    * returning. Exchange reuse alone already shares the count table: in
-    * the same plan built lazily on Spark 4.1.2, the c2 broadcast is a
-    * `ReusedExchange` of the c1 broadcast and N's aggregation reads the
-    * unigram shuffle as a `ReusedExchange`, so the corpus is scanned and
-    * tokenized twice (unigram and bigram aggregations), not four times.
-    * The caches save one of those two tokenizer passes; whether that pays
-    * for their extra jobs is not yet measured. */
+  /** A5/A6/O2: Top-K per language with deterministic tie-breaks — the text
+    * path's [[withCounts]] then [[topByLlr]], one lazy plan. The corpus is
+    * scanned and tokenized twice (once for the unigram, once for the bigram
+    * aggregation); exchange reuse shares the unigram count table across c1,
+    * c2 and N. Caching the tokenized corpus and the count table instead
+    * saved one tokenizer pass but ran eager construction jobs and lost an
+    * interleaved A/B on set-up time and heap (ARCHITECTURE.md). */
   def topCollocations(docs: DataFrame, k: Int = K): DataFrame =
-    TopK.topKPerGroup(
-      scored(docs).select(col("lang"), col("w1"), col("w2"), col("llr")),
-      Seq(col("lang")),
-      Seq(col("llr").desc, col("w1").asc, col("w2").asc),
-      k)
-
-  /** Runs the flagship pipeline with the reference's COUNTERS attached and
-    * returns (output_rows, pre_agg_records, post_agg_groups,
-    * pre_topk_records). The reference's only published performance numbers
-    * are counter ratios (`StatisticalReport .md:29-116`): the Job1/Job2
-    * combiners cut ~75-78% of map output records, and Job3's bounded heap
-    * cuts >99.9% of its input. The Spark-native counters are
-    * `df.observe` nodes ([[graft.ops.Metrics.observed]]) — computed inline
-    * during the ONE action, zero extra passes, exactly how Hadoop counters
-    * ride the job:
-    *  - pre_agg: bigram pair records entering the count aggregation (the
-    *    reference's Job1 map output records);
-    *  - post_agg: final (lang,w1,w2) groups — a lower bound on combiner
-    *    output (each partial emits each group at most once per partition),
-    *    so `1 - post_agg/pre_agg` is an UPPER bound of the map→combine cut
-    *    the reference reports;
-    *  - pre_topk: scored rows entering the top-k window (Job3's combiner
-    *    input), against which the ≤ k-per-lang output is the heap cut.
-    * Same plan shape as [[topCollocations]] (observe is a metadata-only
-    * node; the WindowGroupLimit rewrite lands above it), with the count
-    * table released before returning. */
-  def flagshipCounters(docs: DataFrame, k: Int = K): (Long, Long, Long, Long) = {
-    val c = observedRun(docs, k)
-    (c.topkRows, c.preAggRecords, c.postAggGroups, c.preTopkRecords)
-  }
+    topByLlr(withN(docs), Seq("lang"), k)
 
   /** The observed counter values of one flagship run — every stage count
     * the reference's `StatisticalReport .md` tables publish. */
@@ -198,9 +144,11 @@ object Collocations {
                                    preAggRecords: Long, postAggGroups: Long,
                                    preTopkRecords: Long, topkRows: Long)
 
-  /** ONE observed flagship run: every counter rides the single top-k
-    * action as an `observe` node (zero extra corpus passes — exactly how
-    * Hadoop counters ride the job). Counters, in pipeline order:
+  /** ONE observed flagship run: the text path's [[withCounts]] and
+    * [[topByLlr]] fed the observed bigram counts, with every counter riding
+    * the single top-k action as an `observe` node (zero extra corpus passes
+    * — exactly how Hadoop counters ride the job). One lazy plan: nothing is
+    * cached, so nothing is left to release. Counters, in pipeline order:
     *  - n_docs: documents entering the tokenizer (map input records);
     *  - raw_pairs: adjacent pairs over the cleaned token sequence BEFORE
     *    the stopword filter;
@@ -208,13 +156,12 @@ object Collocations {
     *    the count aggregation (Job1 map output records);
     *  - post_agg: final (lang,w1,w2) groups — a lower bound on combiner
     *    output, so `1 - post/pre` UPPER-bounds the map→combine cut;
-    *  - pre_topk: scored rows entering the top-k window (Job3 input);
+    *  - pre_topk: scored rows entering the top-k window (Job3 input),
+    *    counted on the joined table as the rows [[Llr.valid]] keeps;
     *  - topk_rows: the ≤ k-per-lang output (an action count, not an
     *    observe — it's the result itself). */
-  private def observedRun(docs: DataFrame, k: Int = K): PipelineCounterValues = {
+  private def observedRun(docs: DataFrame, k: Int): PipelineCounterValues = {
     import graft.ops.Metrics
-    val u = unigramCounts(docs).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = u.groupBy("lang").agg(sum("c").as("n"))
     val (t, docsObs) = Metrics.observed(tokenized(docs), "graft_n_docs",
       count(lit(1)).as("records"))
     val rawPairs = t
@@ -228,17 +175,10 @@ object Collocations {
     val bc = pairs.groupBy("lang", "w1", "w2").agg(count(lit(1)).as("c12"))
     val (bcObs, postAgg) = Metrics.observed(bc, "graft_post_agg",
       count(lit(1)).as("records"))
-    val joined = bcObs
-      .join(u.select(col("lang"), col("w").as("w1"), col("c").as("c1")), Seq("lang", "w1"))
-      .join(u.select(col("lang"), col("w").as("w2"), col("c").as("c2")), Seq("lang", "w2"))
-      .join(broadcast(n), Seq("lang"))
-    val sc = Llr.scored(joined).select(col("lang"), col("w1"), col("w2"), col("llr"))
-    val (scObs, preTopk) = Metrics.observed(sc, "graft_pre_topk",
-      count(lit(1)).as("records"))
-    val top = TopK.topKPerGroup(scObs, Seq(col("lang")),
-      Seq(col("llr").desc, col("w1").asc, col("w2").asc), k)
-    val outRows = top.count()
-    u.unpersist()
+    val (joined, preTopk) = Metrics.observed(
+      withCounts(bcObs, unigramCounts(docs), Seq("lang"), "c"), "graft_pre_topk",
+      count_if(Llr.valid(col("c1"), col("c2"), col("c12"), col("n"))).as("records"))
+    val outRows = topByLlr(joined, Seq("lang"), k).count()
     PipelineCounterValues(
       docsObs.get("records").asInstanceOf[Long],
       rawPairsObs.get("records").asInstanceOf[Long],

@@ -23,22 +23,34 @@ object CollocationsCli {
 
   case class Args(unigrams: Seq[String], bigrams: Seq[String], out: String, k: Int)
 
-  /** Argument errors fail LOUDLY before any cluster work: a typo'd or
-    * dangling flag on a 100 TB submit must kill the job at parse time,
-    * not silently drop an input or run with a default. */
+  /** Argument errors fail LOUDLY before any cluster work: a typo'd,
+    * dangling or repeated flag, an empty path or a non-positive k on a
+    * 100 TB submit must kill the job at parse time, not silently drop an
+    * input or run with a default. Every message names the flag. */
   def parse(argv: Array[String]): Args = {
     require(argv.length % 2 == 0,
       s"dangling argument '${argv.lastOption.getOrElse("")}': every flag takes a value")
-    val m = argv.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
+    val flags = argv.grouped(2).map { case Array(k, v) => k -> v }.toSeq
     val known = Set("--unigrams", "--bigrams", "--out", "--k")
-    val unknown = m.keySet -- known
+    val unknown = flags.map(_._1).toSet -- known
     require(unknown.isEmpty,
       s"unknown flag(s): ${unknown.toSeq.sorted.mkString(", ")} (known: ${known.toSeq.sorted.mkString(", ")})")
-    def paths(key: String): Seq[String] =
-      m.getOrElse(key, sys.error(s"missing $key")).split(",").toSeq
-    Args(paths("--unigrams"), paths("--bigrams"),
-      m.getOrElse("--out", sys.error("missing --out")),
-      m.getOrElse("--k", "100").toInt)
+    val repeated = flags.groupBy(_._1).collect { case (k, vs) if vs.size > 1 => k }
+    require(repeated.isEmpty,
+      s"flag(s) given more than once: ${repeated.toSeq.sorted.mkString(", ")} " +
+        "(list several paths as one comma-separated value)")
+    val m = flags.toMap
+    def paths(key: String): Seq[String] = {
+      val v = m.getOrElse(key, sys.error(s"missing $key"))
+      val ps = v.split(",", -1).toSeq
+      require(ps.forall(_.trim.nonEmpty), s"$key has an empty path in '$v'")
+      ps
+    }
+    val k = m.get("--k").fold(100) { v =>
+      v.toIntOption.getOrElse(throw new IllegalArgumentException(s"--k must be an integer, got '$v'"))
+    }
+    require(k > 0, s"--k must be positive, got $k")
+    Args(paths("--unigrams"), paths("--bigrams"), m.getOrElse("--out", sys.error("missing --out")), k)
   }
 
   def run(spark: SparkSession, args: Args): Unit = {

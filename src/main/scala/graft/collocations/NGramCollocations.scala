@@ -2,7 +2,7 @@ package graft.collocations
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.{Llr, Normalize, Stopwords, TopK}
+import graft.ops.{Normalize, Stopwords}
 import graft.sources.NGramSource
 
 /** Reference-exact collocation pipeline over pre-counted n-gram corpora —
@@ -32,25 +32,18 @@ object NGramCollocations {
   def grandTotalN(uniCounts: DataFrame): DataFrame =
     uniCounts.groupBy("lang", "decade").agg(sum("c1").as("n"))
 
-  /** J1 + J2 + J3 + F3 + P8 + A5/A6: the full scoring chain, one lazy plan.
-    * c1, c2 and N all read the same unigram aggregate, and each corpus is
-    * scanned once: Spark 4.1 canonicalizes the three subtrees equal, so the
-    * executed plan computes the unigram shuffle once and reuses it (the c2
-    * side and N's aggregation read it as a `ReusedExchange`). Persisting the
-    * count table instead ran more jobs and was slower in an interleaved A/B. */
+  /** J1 + J2 + J3 + F3 + P8 + A5/A6: the full scoring chain — the shared
+    * [[Collocations.withCounts]] and [[Collocations.topByLlr]] at
+    * (lang, decade) grain, one lazy plan. c1, c2 and N all read the same
+    * unigram aggregate, and each corpus is scanned once: Spark 4.1
+    * canonicalizes the three subtrees equal, so the executed plan computes
+    * the unigram shuffle once and reuses it (the c2 side and N's
+    * aggregation read it as a `ReusedExchange`). Persisting the count table
+    * instead ran more jobs and was slower in an interleaved A/B. */
   def topCollocations(uni: DataFrame, bg: DataFrame, k: Int = K): DataFrame = {
-    val u = unigramCounts(uni)
-    val scored = Llr.scored(bigramCounts(bg)
-      .join(u.select(col("lang"), col("decade"), col("w").as("w1"), col("c1")),
-        Seq("lang", "decade", "w1"))
-      .join(u.select(col("lang"), col("decade"), col("w").as("w2"), col("c1").as("c2")),
-        Seq("lang", "decade", "w2"))
-      .join(broadcast(grandTotalN(u)), Seq("lang", "decade")))
-    TopK.topKPerGroup(
-      scored.select(col("lang"), col("decade"), col("w1"), col("w2"), col("llr")),
-      Seq(col("lang"), col("decade")),
-      Seq(col("llr").desc, col("w1").asc, col("w2").asc),
-      k)
+    val keys = Seq("lang", "decade")
+    Collocations.topByLlr(
+      Collocations.withCounts(bigramCounts(bg), unigramCounts(uni), keys, "c1"), keys, k)
   }
 
   /** Convenience: end-to-end from raw TSV paths (unigram + bigram roots). */

@@ -1403,9 +1403,11 @@ object Dedup {
     * bit), and each probe is O(1): `element_at` into the long array +
     * shiftright + mask, vs the O(mBits) per-probe cost of indexing a
     * UTF8String bit-CHAR-string with substr (110 s -> ~1 s at sf0.1).
-    * And the candidate slice materializes ONCE ([[Collocations.withN]]
-    * lifecycle): the LSH and verification branches both read the cached
-    * prefiltered train, not two re-runs of the probe scan. */
+    * And the candidate slice materializes ONCE: the prefiltered train is
+    * persisted and counted, the LSH and verification branches both read
+    * that cache instead of re-running the probe scan, and it is released
+    * once the returned result has materialized (the caller owns only the
+    * result). */
   def contaminationBloom(docs: DataFrame, isBench: Column, k: Int = 3,
                          bands: Int = 4, rowsPerBand: Int = 4,
                          minContainment: Double = 0.3,

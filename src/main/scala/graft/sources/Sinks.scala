@@ -30,15 +30,18 @@ object Sinks {
   /** The reference Job1 fan-out: DATA (per-word counts) and N (grand
     * totals) written side by side (`CollocationExtraction3Jobs.java:64-65`,
     * `Constants.java:4-5`). N derives from the cached counts, so the
-    * corpus is scanned once for both sinks. */
+    * corpus is scanned once for both sinks: the two writes are two actions,
+    * and exchange reuse cannot share work across actions. The cache is
+    * released on every exit path, a failed write included. */
   def writeCollocationOutputs(docs: DataFrame, outRoot: String): Unit = {
     import graft.collocations.Collocations
     import org.apache.spark.sql.functions.{col, sum}
     val u = Collocations.unigramCounts(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    writeTsv(u, s"$outRoot/data")
-    writeTsv(u.groupBy("lang").agg(sum(col("c")).as("n")), s"$outRoot/n")
-    u.unpersist()
+    try {
+      writeTsv(u, s"$outRoot/data")
+      writeTsv(u.groupBy("lang").agg(sum(col("c")).as("n")), s"$outRoot/n")
+    } finally u.unpersist()
   }
 
   /** Near-atomic model publish for the serve-many model directories

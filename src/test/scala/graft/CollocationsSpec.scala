@@ -108,4 +108,34 @@ class CollocationsSpec extends SparkSpec {
     assert(r.getAs[Double]("topk_cut") ==
       cut(r.getAs[Long]("topk_rows"), r.getAs[Long]("pre_topk_records")))
   }
+
+  test("no collocation builder caches anything: every path is one lazy plan") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import graft.collocations.NGramCollocations
+    spark.sharedState.cacheManager.clearCache()
+    val sf = Collocations.documents(spark, "/root/testdata/sf0.001")
+    val ngrams = getClass.getResource("/ngrams").getPath
+    // built and collected, and never unpersisted: a builder that caches
+    // leaves its table behind for the rest of the session
+    val built = Seq(
+      "joinedC2" -> Collocations.joinedC2(sf),
+      "withN" -> Collocations.withN(sf),
+      "scored" -> Collocations.scored(sf),
+      "topCollocations" -> Collocations.topCollocations(sf),
+      "pipelineCounters" -> Collocations.pipelineCounters(sf),
+      "NGramCollocations.fromPaths" -> NGramCollocations.fromPaths(spark,
+        Seq(s"$ngrams/eng-1gram.tsv", s"$ngrams/heb-1gram.tsv"),
+        Seq(s"$ngrams/eng-2gram.tsv", s"$ngrams/heb-2gram.tsv")))
+    val aqe = new AdaptiveSparkPlanHelper {}
+    built.foreach { case (name, df) =>
+      assert(df.collect().nonEmpty, s"$name is empty")
+      val exec = df.queryExecution.executedPlan
+      assert(aqe.collect(exec) { case m: InMemoryTableScanExec => m }.isEmpty,
+        s"$name reads a cached table:\n$exec")
+    }
+    assert(spark.sharedState.cacheManager.isEmpty, "a collocation builder left a cached table")
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"leaked caches: ${spark.sparkContext.getPersistentRDDs.values.map(_.name)}")
+  }
 }

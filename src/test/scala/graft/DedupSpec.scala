@@ -760,9 +760,7 @@ class DedupSpec extends SparkSpec {
       "winnowOverlap" -> (() => Dedup.winnowOverlap(docs, minShared = 1L)),
       "editDistanceVerify" -> (() => Dedup.editDistanceVerify(docs, minSim = 0.5)),
       "sortedNeighborhood" -> (() => Dedup.sortedNeighborhood(docs)),
-      "multipassVerify" -> (() => Dedup.multipassVerify(docs, threshold = 0.0)),
-      "Collocations.joinedC2" -> (() => graft.collocations.Collocations.joinedC2(docs)),
-      "Collocations.withN" -> (() => graft.collocations.Collocations.withN(docs)))
+      "multipassVerify" -> (() => Dedup.multipassVerify(docs, threshold = 0.0)))
     builders.foreach { case (name, build) =>
       val out = build()
       out.count()

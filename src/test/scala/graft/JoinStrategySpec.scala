@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions.abs
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
 /** Results must not depend on the physical join strategy: at small SF the
   * vocabulary joins broadcast, at 100 TB they sort-merge — this pins that
@@ -11,31 +8,20 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
   * structural, not an artifact of the broadcast path the gate happens to
   * take locally).
   *
-  * The flagship builder materializes and caches its joined table
-  * (`Collocations.withN`), so (a) the cache must be cleared between
-  * strategy runs or the second run silently reuses the first run's bytes,
-  * and (b) the join operators live inside `InMemoryRelation.cachedPlan`,
-  * not the top-level executed plan — the assertion descends into cached
-  * subtrees the same way the PlanSpec registry sweep does. */
+  * The flagship builder is one lazy plan that caches nothing
+  * (`Collocations.withN` included), so the join operators sit in the
+  * executed plan itself. The session cache is still cleared before each
+  * strategy run, so a table another suite left cached cannot stand in for
+  * the joins. */
 class JoinStrategySpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
-
-  private def stripAqe(p: SparkPlan): SparkPlan = p match {
-    case a: AdaptiveSparkPlanExec => stripAqe(a.executedPlan)
-    case other                    => other
-  }
-
-  private def expandCached(p: SparkPlan): Seq[SparkPlan] =
-    p +: p.collect { case s: InMemoryTableScanExec => stripAqe(s.relation.cachedPlan) }
-      .flatMap(expandCached).toSeq
 
   test("flagship results are identical under broadcast and sort-merge strategies") {
     def run(): (Seq[String], String) = {
       spark.sharedState.cacheManager.clearCache()
       val df = SparkEntry.queries("collocations_e2e")(spark, sf)
-      val plan = expandCached(stripAqe(df.queryExecution.executedPlan))
-        .map(_.toString).mkString("\n")
+      val plan = physicalPlan(df).toString
       (df.collect().map(_.mkString("|")).sorted.toSeq, plan)
     }
     val (broadcastRows, broadcastPlan) = run()

@@ -13,7 +13,9 @@ class MetricsSpec extends SparkSpec {
 
   test("flagship counter ratios reproduce the reference's published cuts") {
     val docs = Collocations.documents(spark, "/root/testdata/sf0.1")
-    val (outRows, preAgg, postAgg, preTopk) = Collocations.flagshipCounters(docs)
+    val r = Collocations.pipelineCounters(docs).collect().head
+    val Seq(outRows, preAgg, postAgg, preTopk) =
+      Seq("topk_rows", "pre_agg_records", "post_agg_groups", "pre_topk_records").map(c => r.getAs[Long](c))
     assert(preAgg > 0 && postAgg > 0 && preTopk > 0 && outRows > 0)
 
     // map→combine cut: 1 - groups/records. The reference reports 75-78%

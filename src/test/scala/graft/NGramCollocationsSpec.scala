@@ -102,6 +102,20 @@ class NGramCollocationsSpec extends SparkSpec {
       CollocationsCli.parse(good :+ "--k")
     }
     assert(e2.getMessage.contains("--k"), e2.getMessage)
+    // a repeated flag must fail, not keep only its last value (dropping a
+    // corpus); a zero, negative or non-numeric k and an empty path in a
+    // list must fail too — each message names the flag
+    Seq(
+      "--unigrams" -> Array("--unigrams", "a", "--bigrams", "b.tsv", "--out", "/tmp/o", "--unigrams", "c"),
+      "--k" -> (good ++ Array("--k", "0")),
+      "--k" -> (good ++ Array("--k", "-3")),
+      "--k" -> (good ++ Array("--k", "ten")),
+      "--unigrams" -> Array("--unigrams", "a,,b", "--bigrams", "b.tsv", "--out", "/tmp/o"),
+      "--bigrams" -> Array("--unigrams", "a", "--bigrams", "b.tsv,", "--out", "/tmp/o")
+    ).foreach { case (flag, argv) =>
+      val e = intercept[IllegalArgumentException](CollocationsCli.parse(argv))
+      assert(e.getMessage.contains(flag), s"${argv.mkString(" ")}: ${e.getMessage}")
+    }
     // the valid form still parses
     assert(CollocationsCli.parse(good :+ "--k" :+ "7").k == 7)
   }

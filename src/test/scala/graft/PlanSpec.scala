@@ -28,6 +28,30 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("LeftAnti"), s"expected anti-join stopword filter:\n$p")
   }
 
+  test("flagship text plan shares the count table through exchange reuse, not a cache") {
+    // why the text path needs no cache: in the final adaptive plan the c2
+    // broadcast reuses the c1 broadcast, N's aggregation reads the unigram
+    // shuffle, and the corpus is scanned once per aggregation (unigram and
+    // bigram), not once per join side
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
+    spark.sharedState.cacheManager.clearCache()
+    val top = Collocations.topCollocations(Collocations.documents(spark, sf))
+    top.collect()
+    val exec = top.queryExecution.executedPlan
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val reused = aqe.collect(exec) { case r: ReusedExchangeExec => r }
+    assert(reused.exists(r => r.child.isInstanceOf[BroadcastExchangeLike] &&
+      r.output.map(_.name) == Seq("lang", "w2", "c2")), s"c2 side must reuse the c1 broadcast:\n$exec")
+    assert(reused.exists(r => r.child.isInstanceOf[ShuffleExchangeLike] &&
+      r.output.map(_.name) == Seq("lang", "w", "count")), s"N must reuse the unigram shuffle:\n$exec")
+    val scans = aqe.collect(exec) {
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.toString.contains("documents.parquet")) => s
+    }
+    assert(scans.size <= 2, s"documents.parquet scanned ${scans.size} times:\n$exec")
+  }
+
   test("scan_project pushes predicates and prunes columns at the parquet scan") {
     val df = SparkEntry.queries("scan_project")(spark, sf)
     val scan = df.queryExecution.executedPlan.collectLeaves().map(_.toString).mkString("\n")

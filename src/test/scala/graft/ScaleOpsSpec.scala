@@ -95,6 +95,17 @@ class ScaleOpsSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
   }
 
+  test("collocation sinks release their count cache when a write fails") {
+    import graft.collocations.Collocations
+    spark.sharedState.cacheManager.clearCache()
+    intercept[Exception] {
+      Sinks.writeCollocationOutputs(Collocations.documents(spark, sf), "nosuchscheme://sink/out")
+    }
+    assert(spark.sharedState.cacheManager.isEmpty, "the count table is still cached")
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"leaked caches: ${spark.sparkContext.getPersistentRDDs.values.map(_.name)}")
+  }
+
   test("tsv sink round-trips the reference intermediate format") {
     import graft.collocations.Collocations
     val out = java.nio.file.Files.createTempDirectory("sink_test").toString
