@@ -83,7 +83,7 @@ object CcProbe {
       .appName("ccprobe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = graft.collocations.Collocations.documents(spark, sfDir)
-    val pairs = graft.dedup.Dedup.imagePhashPairs(docs)
+    val pairs = graft.dedup.Dedup.fingerprintPairs(graft.multimodal.Modality.Image, docs)
     val reps = pairs.filter(col("hamming") > 0)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     println(s"rep-graph pairs=${reps.count()}")

@@ -801,13 +801,6 @@ object OracleSqlExt {
       s"unicode(substr(px, CAST($base + 3 AS INT), 1)))"
   }
 
-  /** Perceptual-hash near-dup image pairs (mirrors
-    * [[graft.dedup.Dedup.imagePhashPairs]]): re-derive the P6 pixel plane
-    * from the generator's inputs (the Spark side parses the payload
-    * bytes), resample to the 11×6 luminance grid, pack the 60 dHash bits
-    * (bit k set iff lum(k%10+1, k/10) > lum(k%10, k/10)) into one
-    * BIGINT, then the same 4×15-bit band join + exact bit_count verify
-    * as [[simhashPairsSql]]. */
   /** Generator-re-derived (doc_id, phash) CTEs over any relation exposing
     * (doc_id, text) — the exact mirror of
     * [[graft.multimodal.Multimodal.withPpmPayload]] + `imagePhash`:
@@ -833,25 +826,25 @@ object OracleSqlExt {
   /** The image pair/gate oracles' base over raw documents. */
   private def phashBaseSql: String = phashFpCtes("documents", "pb", "base")
 
+  /** Perceptual-hash near-dup image pairs (mirrors
+    * [[graft.dedup.Dedup.fingerprintPairs]] for
+    * [[graft.multimodal.Modality.Image]]): re-derive the P6 pixel plane
+    * from the generator's inputs (the Spark side parses the payload
+    * bytes), resample to the 11×6 luminance grid, pack the 60 dHash bits
+    * (bit k set iff lum(k%10+1, k/10) > lum(k%10, k/10)) into one
+    * BIGINT, then the same 4×15-bit band join + exact bit_count verify
+    * as [[simhashPairsSql]]. */
   def imagePhashPairsSql(maxHamming: Int): String =
     s"""WITH $phashBaseSql,
        |${hammingBandTailSql("phash", maxHamming, graft.dedup.Dedup.MaxLshBucketSize)}""".stripMargin
 
   /** Image ingest gate (mirrors the batch half of
-    * [[graft.streaming.MultimodalDedupStream.gateImageBatch]]): odd-half
+    * [[graft.streaming.MultimodalDedupStream.gateBatch]]): odd-half
     * fresh docs matched against the even-half phash index. */
   def imagePhashGateSql(maxHamming: Int): String =
     s"""WITH $phashBaseSql,
        |${hammingMatchTailSql("phash", maxHamming, graft.dedup.Dedup.MaxLshBucketSize)}""".stripMargin
 
-  /** Frame-energy audio fingerprint near-dup pairs (mirrors
-    * [[graft.dedup.Dedup.audioFingerprintPairs]]): re-derive the 8-bit PCM
-    * plane from the generator's inputs (the Spark side parses the RIFF
-    * payload bytes), sum 61 nearest-neighbor frames, set bit k on the
-    * sign of the energy delta between frames 37·(k+1) mod 61 and
-    * 37·k mod 61 (the permuted schedule — see the engine scaladoc for the
-    * measured adjacent-delta collapse it avoids), then the same 4×15-bit
-    * band join + exact bit_count verify as [[simhashPairsSql]]. */
   /** Generator-re-derived (doc_id, afp) CTEs over any relation exposing
     * (doc_id, text) — parameterized so the composed ingest-gate oracle
     * can fingerprint arrival and index sides separately. */
@@ -882,12 +875,20 @@ object OracleSqlExt {
   /** The audio pair/gate oracles' base over raw documents. */
   private def afpBaseSql: String = afpFpCtes("documents", "pb", "en", "base")
 
+  /** Frame-energy audio fingerprint near-dup pairs (mirrors
+    * [[graft.dedup.Dedup.fingerprintPairs]] for
+    * [[graft.multimodal.Modality.Audio]]): re-derive the 8-bit PCM plane from the generator's inputs (the Spark side parses the RIFF
+    * payload bytes), sum 61 nearest-neighbor frames, set bit k on the
+    * sign of the energy delta between frames 37·(k+1) mod 61 and
+    * 37·k mod 61 (the permuted schedule — see the engine scaladoc for the
+    * measured adjacent-delta collapse it avoids), then the same 4×15-bit
+    * band join + exact bit_count verify as [[simhashPairsSql]]. */
   def audioFingerprintPairsSql(maxHamming: Int): String =
     s"""WITH $afpBaseSql,
        |${hammingBandTailSql("afp", maxHamming, graft.dedup.Dedup.MaxLshBucketSize)}""".stripMargin
 
   /** Audio ingest gate (mirrors the batch half of
-    * [[graft.streaming.MultimodalDedupStream.gateAudioBatch]]): odd-half
+    * [[graft.streaming.MultimodalDedupStream.gateBatch]]): odd-half
     * fresh docs matched against the even-half fingerprint index. */
   def audioFpGateSql(maxHamming: Int): String =
     s"""WITH $afpBaseSql,
@@ -926,14 +927,15 @@ object OracleSqlExt {
   private def vfpBaseSql: String = vfpFpCtes("documents", "pb", "en", "base")
 
   /** Temporal video fingerprint near-dup pairs (mirrors
-    * [[graft.dedup.Dedup.videoFingerprintPairs]]) — the same guarded
+    * [[graft.dedup.Dedup.fingerprintPairs]] for
+    * [[graft.multimodal.Modality.Video]]) — the same guarded
     * star+representative band join as the simhash/image/audio oracles. */
   def videoFpPairsSql(maxHamming: Int): String =
     s"""WITH $vfpBaseSql,
        |${hammingBandTailSql("vfp", maxHamming, graft.dedup.Dedup.MaxLshBucketSize)}""".stripMargin
 
   /** Video ingest gate (mirrors the batch half of
-    * [[graft.streaming.MultimodalDedupStream.gateVideoBatch]]): odd-half
+    * [[graft.streaming.MultimodalDedupStream.gateBatch]]): odd-half
     * fresh docs matched against the even-half fingerprint index. */
   def videoFpGateSql(maxHamming: Int): String =
     s"""WITH $vfpBaseSql,
@@ -1300,7 +1302,7 @@ object OracleSqlExt {
     // record (the text-dirtying simulates page-html noise, which never
     // touches binary payload columns); the index side mirrors the
     // even-half persisted fingerprint tables (all sources, the
-    // writeImagePhashIndex-half convention)
+    // writeFingerprintIndex-half convention)
     val mmFresh = s"(SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1 AND NOT ($benchPredSql))"
     val mmIdx = "(SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0)"
     // RECURSIVE for the SemDeDup gate's kept-set closure (sureach) —
@@ -3701,7 +3703,7 @@ object OracleSqlExt {
        |       CASE WHEN n_docs > 0 THEN round(1.0 - CAST(docs_dedup AS DOUBLE) / n_docs, 6) END AS dedup_doc_cut
        |FROM rep""".stripMargin
 
-  /** Mirror of [[graft.pipelines.PretrainCorpus.pipelineV2]] end to end —
+  /** Mirror of [[graft.pipelines.PretrainCorpus.pipeline]] with a gate end to end —
     * the v1 chain with the PII scrub and the trained quality gate
     * (injected literal weights, the qualityClassifierScoreSql pattern)
     * composed between the scrubs and dedup. */
@@ -3716,7 +3718,7 @@ object OracleSqlExt {
        |       CAST((cum - n_chars) // $windowSize AS BIGINT) AS bin
        |FROM pk""".stripMargin
 
-  /** Mirror of [[graft.pipelines.PretrainCorpus.reportV2]]. */
+  /** Mirror of [[graft.pipelines.PretrainCorpus.report]] with a gate. */
   def pretrainReportV2Sql(w: Seq[Double], thr: Double, benchPredSql: String,
                           minLineWords: Int, bpMinDf: Long, bpMinLineChars: Int,
                           minLen: Int, budgetTokens: Long, maxEpochs: Double,
@@ -3748,9 +3750,9 @@ object OracleSqlExt {
        |       CASE WHEN docs_quality > 0 THEN round(1.0 - CAST(docs_dedup AS DOUBLE) / docs_quality, 6) END AS dedup_doc_cut
        |FROM rep""".stripMargin
 
-  /** Mirror of [[graft.pipelines.PretrainCorpus.pipelineV3]] — the v2
-    * chain with the image keep-canonical stage composed between the gate
-    * and text dedup. */
+  /** Mirror of [[graft.pipelines.PretrainCorpus.pipeline]] with a gate
+    * and the image stage — the v2 chain with the image keep-canonical
+    * stage composed between the gate and text dedup. */
   def pretrainCorpusV3Sql(w: Seq[Double], thr: Double, benchPredSql: String,
                           minLineWords: Int, bpMinDf: Long, bpMinLineChars: Int,
                           minLen: Int, budgetTokens: Long, maxEpochs: Double,
@@ -3762,7 +3764,8 @@ object OracleSqlExt {
        |       CAST((cum - n_chars) // $windowSize AS BIGINT) AS bin
        |FROM pk""".stripMargin
 
-  /** Mirror of [[graft.pipelines.PretrainCorpus.reportV3]]. */
+  /** Mirror of [[graft.pipelines.PretrainCorpus.report]] with a gate and
+    * the image stage. */
   def pretrainReportV3Sql(w: Seq[Double], thr: Double, benchPredSql: String,
                           minLineWords: Int, bpMinDf: Long, bpMinLineChars: Int,
                           minLen: Int, budgetTokens: Long, maxEpochs: Double,
@@ -3797,9 +3800,9 @@ object OracleSqlExt {
        |       CASE WHEN docs_image > 0 THEN round(1.0 - CAST(docs_dedup AS DOUBLE) / docs_image, 6) END AS dedup_doc_cut
        |FROM rep""".stripMargin
 
-  /** Mirror of [[graft.pipelines.PretrainCorpus.pipelineV4]] — the v3
-    * chain with audio and video keep-canonical cascaded after the image
-    * stage. */
+  /** Mirror of [[graft.pipelines.PretrainCorpus.pipeline]] with a gate
+    * and every modality — the v3 chain with audio and video
+    * keep-canonical cascaded after the image stage. */
   def pretrainCorpusV4Sql(w: Seq[Double], thr: Double, benchPredSql: String,
                           minLineWords: Int, bpMinDf: Long, bpMinLineChars: Int,
                           minLen: Int, budgetTokens: Long, maxEpochs: Double,
@@ -3811,7 +3814,8 @@ object OracleSqlExt {
        |       CAST((cum - n_chars) // $windowSize AS BIGINT) AS bin
        |FROM pk""".stripMargin
 
-  /** Mirror of [[graft.pipelines.PretrainCorpus.reportV4]]. */
+  /** Mirror of [[graft.pipelines.PretrainCorpus.report]] with a gate and
+    * every modality. */
   def pretrainReportV4Sql(w: Seq[Double], thr: Double, benchPredSql: String,
                           minLineWords: Int, bpMinDf: Long, bpMinLineChars: Int,
                           minLen: Int, budgetTokens: Long, maxEpochs: Double,

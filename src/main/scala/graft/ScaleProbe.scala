@@ -81,9 +81,8 @@ object ScaleProbe {
           benchPred = col("source") === "src0",
           corpusPred = pmod(col("doc_id"), lit(2L)) === 0 && col("source") =!= "src0")
         val evenRaw = base.filter(pmod(col("doc_id"), lit(2L)) === 0)
-        graft.dedup.Dedup.writeImagePhashIndex(evenRaw, s"$dir/img")
-        graft.dedup.Dedup.writeAudioFpIndex(evenRaw, s"$dir/aud")
-        graft.dedup.Dedup.writeVideoFpIndex(evenRaw, s"$dir/vid")
+        graft.multimodal.Modality.all.foreach(m =>
+          graft.dedup.Dedup.writeFingerprintIndex(m, evenRaw, s"$dir/${m.name}"))
         val emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
         graft.dedup.Dedup.writeSemanticDeconIndex(
           emb.filter(pmod(col("vec_id"), lit(10L)) === 0), s"$dir/semdecon",
@@ -475,9 +474,7 @@ object ScaleProbe {
           spark.read.parquet(s"$dir/anchors"), spark.read.parquet(s"$dir/bench"),
           spark.read.parquet(s"$dir/dedup/minhash_buckets"),
           spark.read.parquet(s"$dir/dedup/shingle_sets"),
-          spark.read.parquet(s"$dir/img/image_phash_banded"),
-          spark.read.parquet(s"$dir/aud/audio_fp_banded"),
-          spark.read.parquet(s"$dir/vid/video_fp_banded"),
+          m => spark.read.parquet(s"$dir/${m.name}/${m.bandedTable}"),
           reps(arrEmb0, "vec_id"), spark.read.parquet(s"$dir/semdecon/bench"),
           semCents, spark.read.parquet(s"$dir/semgate/kept"), semDupCents)
         val n = out.count()
@@ -548,7 +545,7 @@ object ScaleProbe {
         val corpus = docs.select("doc_id", "text", "lang", "source", "n_chars")
           .unionByName(clones)
         val t0 = System.nanoTime()
-        val pairs = graft.dedup.Dedup.imagePhashPairs(corpus)
+        val pairs = graft.dedup.Dedup.fingerprintPairs(graft.multimodal.Modality.Image, corpus)
         val nPairs = pairs.count()
         val tP = (System.nanoTime() - t0) / 1e9
         pairs.unpersist(blocking = true)

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.collocations.Collocations
+import graft.multimodal.Modality
 import graft.ops.{Normalize, Stopwords}
 
 /** Driver contract — one named query per implemented operator (SURVEY.md
@@ -79,50 +80,20 @@ object SparkEntry {
       dir
     })
 
-  /** Perceptual image-phash index (full corpus / even half) — same
+  /** Perceptual fingerprint index of one modality (full corpus, or the
+    * even-doc_id half the incremental and gate queries build on) — same
     * build-once lifecycle and shutdown-cleaned root. */
-  private def imagePhashIndexDir(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d + "#phash", {
-      val dir = dedupIndexRoot.resolve(keyDirName(d + "#phash")).toString
-      graft.dedup.Dedup.writeImagePhashIndex(Collocations.documents(s, d), dir)
+  private def fpIndexDir(s: SparkSession, d: String, m: Modality,
+                         evenHalf: Boolean = false): String = {
+    val key = s"$d#${m.table}" + (if (evenHalf) "-even" else "")
+    dedupIndexDirs.getOrElseUpdate(key, {
+      val dir = dedupIndexRoot.resolve(keyDirName(key)).toString
+      val docs = Collocations.documents(s, d)
+      graft.dedup.Dedup.writeFingerprintIndex(m,
+        if (evenHalf) docs.filter(pmod(col("doc_id"), lit(2L)) === 0) else docs, dir)
       dir
     })
-  private def imagePhashIndexDirHalf(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d + "#phash-even", {
-      val dir = dedupIndexRoot.resolve(keyDirName(d + "#phash-even")).toString
-      graft.dedup.Dedup.writeImagePhashIndex(
-        Collocations.documents(s, d).filter(pmod(col("doc_id"), lit(2L)) === 0), dir)
-      dir
-    })
-
-  /** Audio-fingerprint index (full corpus / even half) — same
-    * build-once lifecycle and shutdown-cleaned root. */
-  private def audioFpIndexDir(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d + "#audiofp", {
-      val dir = dedupIndexRoot.resolve(keyDirName(d + "#audiofp")).toString
-      graft.dedup.Dedup.writeAudioFpIndex(Collocations.documents(s, d), dir)
-      dir
-    })
-  private def audioFpIndexDirHalf(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d + "#audiofp-even", {
-      val dir = dedupIndexRoot.resolve(keyDirName(d + "#audiofp-even")).toString
-      graft.dedup.Dedup.writeAudioFpIndex(
-        Collocations.documents(s, d).filter(pmod(col("doc_id"), lit(2L)) === 0), dir)
-      dir
-    })
-  private def videoFpIndexDir(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d + "#videofp", {
-      val dir = dedupIndexRoot.resolve(keyDirName(d + "#videofp")).toString
-      graft.dedup.Dedup.writeVideoFpIndex(Collocations.documents(s, d), dir)
-      dir
-    })
-  private def videoFpIndexDirHalf(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d + "#videofp-even", {
-      val dir = dedupIndexRoot.resolve(keyDirName(d + "#videofp-even")).toString
-      graft.dedup.Dedup.writeVideoFpIndex(
-        Collocations.documents(s, d).filter(pmod(col("doc_id"), lit(2L)) === 0), dir)
-      dir
-    })
+  }
 
   /** Substring-anchor index (full corpus / even half) — same
     * build-once lifecycle and shutdown-cleaned root. */
@@ -274,12 +245,10 @@ object SparkEntry {
     winnowIndexDirHalf(spark, sfDir)
     substringIndexDir(spark, sfDir)
     substringIndexDirHalf(spark, sfDir)
-    imagePhashIndexDir(spark, sfDir)
-    imagePhashIndexDirHalf(spark, sfDir)
-    audioFpIndexDir(spark, sfDir)
-    audioFpIndexDirHalf(spark, sfDir)
-    videoFpIndexDir(spark, sfDir)
-    videoFpIndexDirHalf(spark, sfDir)
+    Modality.all.foreach { m =>
+      fpIndexDir(spark, sfDir, m)
+      fpIndexDir(spark, sfDir, m, evenHalf = true)
+    }
     benchAnchorIndexDir(spark, sfDir)
     bpeModelDir(spark, sfDir)
     unigramModelDir(spark, sfDir)
@@ -490,9 +459,80 @@ object SparkEntry {
   private def diffSnapCur(docs: DataFrame): DataFrame =
     docs.filter(pmod(col("doc_id"), lit(11)) =!= 5)
 
+  /** The perceptual near-duplicate family, generated per [[Modality]] in
+    * [[Modality.all]] order:
+    *
+    *  - the direct pairs query: decode → fingerprint (partition-parallel
+    *    byte parse, zero shuffle), then the guarded 4x15-bit pigeonhole
+    *    band join of the simhash pairs. Image is a dHash over the
+    *    resampled P6 luminance plane; audio and video are sign-of-delta
+    *    bits over 61 frame energies under the fixed 37·k mod 61
+    *    comparison schedule (adjacent deltas tie structurally on short
+    *    payloads and collapse unrelated fingerprints, measured 105,739 vs
+    *    403 audio pairs at sf0.1);
+    *  - `_indexed`: build-once/serve-many, pairs served from the persisted
+    *    (doc_id, fp) table alone — the serve plan never re-decodes the
+    *    corpus (pinned in DedupSpec);
+    *  - `_incremental`: the persisted index covers the even-doc_id half;
+    *    odd-half fingerprints union on top WITHOUT re-decoding the old
+    *    corpus (the fingerprint is a pure per-doc function of the payload
+    *    bytes);
+    *  - `_stream_gate` (after all three modalities): the batch half of
+    *    [[graft.streaming.MultimodalDedupStream]] (stream-equals-batch
+    *    pinned in StreamingSpec) — odd-half "arriving" docs fingerprint
+    *    and band-join the even-half PRE-BANDED index, each flagged arrival
+    *    reporting its lexicographic-min (hamming, match_id) index match.
+    *
+    * A modality's three pair queries share one full-corpus oracle, which
+    * proves serve- and ingest-equals-rebuild. The direct query's name and
+    * the oracle builders are the family's irregular spellings. */
+  private def multimodalEntries: Seq[(String, Q, Option[String])] = {
+    val family = Seq(
+      (Modality.Image, "dedup_image_phash",
+        OracleSqlExt.imagePhashPairsSql(3), OracleSqlExt.imagePhashGateSql(3)),
+      (Modality.Audio, "dedup_audio_fingerprint",
+        OracleSqlExt.audioFingerprintPairsSql(3), OracleSqlExt.audioFpGateSql(3)),
+      (Modality.Video, "dedup_video_fingerprint",
+        OracleSqlExt.videoFpPairsSql(3), OracleSqlExt.videoFpGateSql(3)))
+    def odd(s: SparkSession, d: String): DataFrame =
+      Collocations.documents(s, d).filter(pmod(col("doc_id"), lit(2L)) === 1)
+    val pairs = family.flatMap { case (m, direct, pairsSql, _) =>
+      Seq[(String, Q, Option[String])](
+        (direct, (s, d) =>
+          graft.dedup.Dedup.fingerprintPairs(m, Collocations.documents(s, d), maxHamming = 3),
+          Some(pairsSql)),
+        (s"dedup_${m.name}_indexed", (s, d) =>
+          graft.dedup.Dedup.fingerprintPairsFrom(m,
+            s.read.parquet(s"${fpIndexDir(s, d, m)}/${m.table}"), maxHamming = 3),
+          Some(pairsSql)),
+        (s"dedup_${m.name}_incremental", (s, d) => {
+          val idx = s.read.parquet(s"${fpIndexDir(s, d, m, evenHalf = true)}/${m.table}")
+          graft.dedup.Dedup.fingerprintPairsFrom(m,
+            idx.unionByName(m.fingerprints(odd(s, d))), maxHamming = 3)
+        }, Some(pairsSql)))
+    }
+    val gates = family.map { case (m, _, _, gateSql) =>
+      (s"dedup_${m.name}_stream_gate", ((s, d) =>
+        graft.streaming.MultimodalDedupStream.gateBatchIndexed(m, odd(s, d),
+          s.read.parquet(s"${fpIndexDir(s, d, m, evenHalf = true)}/${m.bandedTable}"),
+          maxHamming = 3)): Q,
+        Some(gateSql))
+    }
+    pairs ++ gates
+  }
+
   /** (name, spark query, Some(oracle sql)) triples — kept adjacent so the
-    * two implementations stay visibly in lockstep. */
-  private lazy val registry: Seq[(String, Q, Option[String])] = Seq(
+    * two implementations stay visibly in lockstep. Names are unique: the
+    * registry is read through maps, where a repeated name would silently
+    * drop an entry. */
+  private lazy val registry: Seq[(String, Q, Option[String])] = {
+    val r = registryEntries
+    val dups = r.groupBy(_._1).collect { case (n, es) if es.size > 1 => n }
+    require(dups.isEmpty, s"duplicate registry names: ${dups.toSeq.sorted.mkString(", ")}")
+    r
+  }
+
+  private def registryEntries: Seq[(String, Q, Option[String])] = Seq(
 
     // ---------------------------------------------------------------- S1/P1
     ("scan_project",
@@ -2527,131 +2567,9 @@ object SparkEntry {
         graft.dedup.Dedup.simhashPairs(Collocations.documents(s, d), maxHamming = 3),
       Some(OracleSqlExt.simhashPairsSql(3))),
 
-    // perceptual IMAGE dedup — the modality the text family doesn't
-    // cover: dHash over the decoded, nearest-neighbor-resampled P6
-    // luminance plane (partition-parallel byte parse, zero shuffle),
-    // then the same 4x15-bit pigeonhole band join as the simhash pairs
-    ("dedup_image_phash",
-      (s: SparkSession, d: String) =>
-        graft.dedup.Dedup.imagePhashPairs(Collocations.documents(s, d), maxHamming = 3),
-      Some(OracleSqlExt.imagePhashPairsSql(3))),
-
-    // build-once/serve-many for the image modality: pairs served from
-    // the persisted (doc_id, phash) table alone — the serve plan never
-    // re-decodes the corpus (pinned in DedupSpec); same oracle as the
-    // direct path
-    ("dedup_image_indexed",
-      (s: SparkSession, d: String) =>
-        graft.dedup.Dedup.imagePhashPairsFrom(
-          s.read.parquet(s"${imagePhashIndexDir(s, d)}/image_phash"), maxHamming = 3),
-      Some(OracleSqlExt.imagePhashPairsSql(3))),
-
-    // incremental ingest: the persisted index covers the even-doc_id
-    // half; odd-half hashes union on top WITHOUT re-decoding the old
-    // corpus (the dHash is a pure per-doc function of the payload
-    // bytes), and the SAME full-corpus oracle proves ingest-equals-rebuild
-    ("dedup_image_incremental",
-      (s: SparkSession, d: String) => {
-        val idx = s.read.parquet(s"${imagePhashIndexDirHalf(s, d)}/image_phash")
-        val fresh = graft.multimodal.Multimodal.imagePhash(
-            Collocations.documents(s, d).filter(pmod(col("doc_id"), lit(2L)) === 1)).toDF()
-          .filter(col("valid")).select(col("doc_id"), col("phash"))
-        graft.dedup.Dedup.imagePhashPairsFrom(idx.unionByName(fresh), maxHamming = 3)
-      },
-      Some(OracleSqlExt.imagePhashPairsSql(3))),
-
-    // perceptual AUDIO dedup — the second non-text modality, closing the
-    // family: frame-energy fingerprint over the decoded RIFF/WAVE PCM
-    // bytes (61 nearest-neighbor frames, sign-of-delta bits under the
-    // fixed 37·k mod 61 comparison schedule — adjacent deltas tie
-    // structurally on short payloads and collapse unrelated fingerprints,
-    // measured 105,739 vs 403 pairs at sf0.1), then the same 4x15-bit
-    // pigeonhole band join as the simhash/phash pairs
-    ("dedup_audio_fingerprint",
-      (s: SparkSession, d: String) =>
-        graft.dedup.Dedup.audioFingerprintPairs(Collocations.documents(s, d), maxHamming = 3),
-      Some(OracleSqlExt.audioFingerprintPairsSql(3))),
-
-    // build-once/serve-many + incremental ingest for the audio modality —
-    // the same lifecycle pair every other dedup family ships, same
-    // full-corpus oracle proving serve/ingest-equals-rebuild
-    ("dedup_audio_indexed",
-      (s: SparkSession, d: String) =>
-        graft.dedup.Dedup.audioFingerprintPairsFrom(
-          s.read.parquet(s"${audioFpIndexDir(s, d)}/audio_fp"), maxHamming = 3),
-      Some(OracleSqlExt.audioFingerprintPairsSql(3))),
-
-    ("dedup_audio_incremental",
-      (s: SparkSession, d: String) => {
-        val idx = s.read.parquet(s"${audioFpIndexDirHalf(s, d)}/audio_fp")
-        val fresh = graft.multimodal.Multimodal.audioFingerprint(
-            Collocations.documents(s, d).filter(pmod(col("doc_id"), lit(2L)) === 1)).toDF()
-          .filter(col("valid")).select(col("doc_id"), col("afp"))
-        graft.dedup.Dedup.audioFingerprintPairsFrom(idx.unionByName(fresh), maxHamming = 3)
-      },
-      Some(OracleSqlExt.audioFingerprintPairsSql(3))),
-
-    // TEMPORAL video dedup — the frame-sequence modality closing the
-    // perceptual family: parse the multi-frame VID0 container, per-frame
-    // luminance energies, sign-of-delta bits under the same 37k mod 61
-    // permuted schedule the audio fingerprint proved (each frame feeds
-    // exactly two comparisons, so one re-encoded/replaced frame flips
-    // <= 2 bits), then the guarded pigeonhole band join
-    ("dedup_video_fingerprint",
-      (s: SparkSession, d: String) =>
-        graft.dedup.Dedup.videoFingerprintPairs(Collocations.documents(s, d), maxHamming = 3),
-      Some(OracleSqlExt.videoFpPairsSql(3))),
-
-    // its build-once/serve-many twin: pairs served from the persisted
-    // (doc_id, vfp) table alone — the serve plan never re-parses the
-    // corpus; same oracle as the direct path
-    ("dedup_video_indexed",
-      (s: SparkSession, d: String) =>
-        graft.dedup.Dedup.videoFingerprintPairsFrom(
-          s.read.parquet(s"${videoFpIndexDir(s, d)}/video_fp"), maxHamming = 3),
-      Some(OracleSqlExt.videoFpPairsSql(3))),
-
-    // incremental ingest: the persisted index covers the even-doc_id
-    // half; odd-half fingerprints union on top WITHOUT re-parsing the
-    // old corpus (the fingerprint is a pure per-doc function of the
-    // payload bytes), and the SAME full-corpus oracle proves
-    // ingest-equals-rebuild — completing the image/audio/video symmetry
-    ("dedup_video_incremental",
-      (s: SparkSession, d: String) => {
-        val idx = s.read.parquet(s"${videoFpIndexDirHalf(s, d)}/video_fp")
-        val fresh = graft.multimodal.Multimodal.videoFingerprint(
-            Collocations.documents(s, d).filter(pmod(col("doc_id"), lit(2L)) === 1)).toDF()
-          .filter(col("valid")).select(col("doc_id"), col("vfp"))
-        graft.dedup.Dedup.videoFingerprintPairsFrom(idx.unionByName(fresh), maxHamming = 3)
-      },
-      Some(OracleSqlExt.videoFpPairsSql(3))),
-
-    // continuous-crawl ingest GATES for the perceptual modalities — the
-    // batch half of graft.streaming.MultimodalDedupStream (stream-equals-
-    // batch pinned in StreamingSpec): odd-half "arriving" docs fingerprint
-    // (narrow map, nothing already indexed is re-decoded) and band-join
-    // against the even-half persisted index, each flagged arrival
-    // reporting its lexicographic-min (hamming, match_id) index match
-    ("dedup_image_stream_gate",
-      (s: SparkSession, d: String) =>
-        graft.streaming.MultimodalDedupStream.gateImageBatchIndexed(
-          Collocations.documents(s, d).filter(pmod(col("doc_id"), lit(2L)) === 1),
-          s.read.parquet(s"${imagePhashIndexDirHalf(s, d)}/image_phash_banded"), maxHamming = 3),
-      Some(OracleSqlExt.imagePhashGateSql(3))),
-
-    ("dedup_audio_stream_gate",
-      (s: SparkSession, d: String) =>
-        graft.streaming.MultimodalDedupStream.gateAudioBatchIndexed(
-          Collocations.documents(s, d).filter(pmod(col("doc_id"), lit(2L)) === 1),
-          s.read.parquet(s"${audioFpIndexDirHalf(s, d)}/audio_fp_banded"), maxHamming = 3),
-      Some(OracleSqlExt.audioFpGateSql(3))),
-
-    ("dedup_video_stream_gate",
-      (s: SparkSession, d: String) =>
-        graft.streaming.MultimodalDedupStream.gateVideoBatchIndexed(
-          Collocations.documents(s, d).filter(pmod(col("doc_id"), lit(2L)) === 1),
-          s.read.parquet(s"${videoFpIndexDirHalf(s, d)}/video_fp_banded"), maxHamming = 3),
-      Some(OracleSqlExt.videoFpGateSql(3))),
+    // the perceptual IMAGE / AUDIO / VIDEO dedup family, generated per
+    // modality from multimodalEntries below
+  ) ++ multimodalEntries ++ Seq(
 
     // NOTE: the all-pairs `closestEmbeddingPairs` baseline is deliberately
     // NOT a registry query — its O(n²) BroadcastNestedLoop plan must never
@@ -3072,7 +2990,7 @@ object SparkEntry {
     ("pipeline_pretrain_corpus_v2",
       (s: SparkSession, d: String) => {
         val (w, thr) = pretrainGate(s, d)
-        graft.pipelines.PretrainCorpus.pipelineV2(Collocations.documents(s, d), w, thr)
+        graft.pipelines.PretrainCorpus.pipeline(Collocations.documents(s, d), Some((w, thr)))
       },
       None),
 
@@ -3081,7 +2999,7 @@ object SparkEntry {
     ("pipeline_pretrain_report_v2",
       (s: SparkSession, d: String) => {
         val (w, thr) = pretrainGate(s, d)
-        graft.pipelines.PretrainCorpus.reportV2(Collocations.documents(s, d), w, thr)
+        graft.pipelines.PretrainCorpus.report(Collocations.documents(s, d), Some((w, thr)))
       },
       None),
 
@@ -3095,7 +3013,8 @@ object SparkEntry {
     ("pipeline_pretrain_corpus_v3",
       (s: SparkSession, d: String) => {
         val (w, thr) = pretrainGate(s, d)
-        graft.pipelines.PretrainCorpus.pipelineV3(Collocations.documents(s, d), w, thr)
+        graft.pipelines.PretrainCorpus.pipeline(Collocations.documents(s, d), Some((w, thr)),
+          Seq(Modality.Image))
       },
       None),
 
@@ -3104,7 +3023,8 @@ object SparkEntry {
     ("pipeline_pretrain_report_v3",
       (s: SparkSession, d: String) => {
         val (w, thr) = pretrainGate(s, d)
-        graft.pipelines.PretrainCorpus.reportV3(Collocations.documents(s, d), w, thr)
+        graft.pipelines.PretrainCorpus.report(Collocations.documents(s, d), Some((w, thr)),
+          Seq(Modality.Image))
       },
       None),
 
@@ -3118,7 +3038,8 @@ object SparkEntry {
     ("pipeline_pretrain_corpus_v4",
       (s: SparkSession, d: String) => {
         val (w, thr) = pretrainGate(s, d)
-        graft.pipelines.PretrainCorpus.pipelineV4(Collocations.documents(s, d), w, thr)
+        graft.pipelines.PretrainCorpus.pipeline(Collocations.documents(s, d), Some((w, thr)),
+          Modality.all)
       },
       None),
 
@@ -3127,7 +3048,8 @@ object SparkEntry {
     ("pipeline_pretrain_report_v4",
       (s: SparkSession, d: String) => {
         val (w, thr) = pretrainGate(s, d)
-        graft.pipelines.PretrainCorpus.reportV4(Collocations.documents(s, d), w, thr)
+        graft.pipelines.PretrainCorpus.report(Collocations.documents(s, d), Some((w, thr)),
+          Modality.all)
       },
       None),
 
@@ -3184,9 +3106,7 @@ object SparkEntry {
           s.read.parquet(s"$dir/anchors"), s.read.parquet(s"$dir/bench"),
           s.read.parquet(s"$dir/dedup/minhash_buckets"),
           s.read.parquet(s"$dir/dedup/shingle_sets"),
-          s.read.parquet(s"${imagePhashIndexDirHalf(s, d)}/image_phash_banded"),
-          s.read.parquet(s"${audioFpIndexDirHalf(s, d)}/audio_fp_banded"),
-          s.read.parquet(s"${videoFpIndexDirHalf(s, d)}/video_fp_banded"),
+          m => s.read.parquet(s"${fpIndexDir(s, d, m, evenHalf = true)}/${m.bandedTable}"),
           arrEmb, s.read.parquet(s"$semDir/bench"), semCents,
           s.read.parquet(s"$semGateDir/kept"), semDupCents)
       },

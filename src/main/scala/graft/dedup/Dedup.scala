@@ -918,172 +918,92 @@ object Dedup {
     val withRep = fp.select(col("doc_id"), col(fpCol))
       .withColumn("rep", min(col("doc_id")).over(wFp))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // NOT eagerly counted (r21): the cache populates inside capped's
-    // materialization below (reps ⊂ withRep), which saves one full pass
-    // per call; nothing downstream consumes the fpCol partitioning (stars
-    // and reps are narrow filters), so the capped cache's (band, bits)
-    // partitioning — the one the self-join rides — is unaffected
-    // (PlanSpec pins the pair plan's single-exchange contract).
-    val stars = withRep.filter(col("doc_id") =!= col("rep"))
-      .select(col("rep").as("a"), col("doc_id").as("b"), lit(0L).as("hamming"))
-    val reps = withRep.filter(col("doc_id") === col("rep"))
-      .select(col("doc_id"), col(fpCol))
-    val banded = reps.select(col("doc_id"), col(fpCol),
-        explode(array((0 until 4).map(b =>
-          struct(lit(b).as("band"), (shiftright(col(fpCol), 15 * b) % 32768L).as("bits"))): _*)).as("bb"))
-      .select(col("doc_id"), col(fpCol), col("bb.band").as("band"), col("bb.bits").as("bits"))
-    // the hot-bucket count rides a window over the same (band, bits) key
-    // the self-join shuffles on, and the cache preserves that partitioning
-    // — both join sides read pre-partitioned, zero further exchanges
-    val capped = (if (maxBucketSize <= 0) banded
-                  else banded
-                    .withColumn("bucket_n", count(lit(1)).over(
-                      org.apache.spark.sql.expressions.Window.partitionBy("band", "bits")))
-                    .filter(col("bucket_n") <= maxBucketSize)
-                    .drop("bucket_n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize so the self-join below plans against the FINALIZED
-    // (band, bits) hash partitioning and rides it exchange-free
-    capped.count()
-    val l = capped.select(col("band"), col("bits"), col("doc_id").as("a"), col(fpCol).as("fp_a"))
-    val r = capped.select(col("band"), col("bits"), col("doc_id").as("b"), col(fpCol).as("fp_b"))
-    val repPairs = l.join(r, Seq("band", "bits")).filter(col("a") < col("b"))
-      .select(col("a"), col("b"), bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-    // disjoint by construction: a star's b is never a representative,
-    // while repPairs only relates representatives — plain union
-    val out = repPairs.unionByName(stars)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    capped.unpersist()
-    withRep.unpersist()
-    out
+    // both intermediate caches release in `finally`: a fingerprint that
+    // fails at runtime must not strand them for the rest of the session
+    try {
+      // NOT eagerly counted (r21): the cache populates inside capped's
+      // materialization below (reps ⊂ withRep), which saves one full pass
+      // per call; nothing downstream consumes the fpCol partitioning (stars
+      // and reps are narrow filters), so the capped cache's (band, bits)
+      // partitioning — the one the self-join rides — is unaffected
+      // (PlanSpec pins the pair plan's single-exchange contract).
+      val stars = withRep.filter(col("doc_id") =!= col("rep"))
+        .select(col("rep").as("a"), col("doc_id").as("b"), lit(0L).as("hamming"))
+      val reps = withRep.filter(col("doc_id") === col("rep"))
+        .select(col("doc_id"), col(fpCol))
+      val banded = reps.select(col("doc_id"), col(fpCol),
+          explode(array((0 until 4).map(b =>
+            struct(lit(b).as("band"), (shiftright(col(fpCol), 15 * b) % 32768L).as("bits"))): _*)).as("bb"))
+        .select(col("doc_id"), col(fpCol), col("bb.band").as("band"), col("bb.bits").as("bits"))
+      // the hot-bucket count rides a window over the same (band, bits) key
+      // the self-join shuffles on, and the cache preserves that partitioning
+      // — both join sides read pre-partitioned, zero further exchanges
+      val capped = (if (maxBucketSize <= 0) banded
+                    else banded
+                      .withColumn("bucket_n", count(lit(1)).over(
+                        org.apache.spark.sql.expressions.Window.partitionBy("band", "bits")))
+                      .filter(col("bucket_n") <= maxBucketSize)
+                      .drop("bucket_n"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // materialize so the self-join below plans against the FINALIZED
+        // (band, bits) hash partitioning and rides it exchange-free
+        capped.count()
+        val l = capped.select(col("band"), col("bits"), col("doc_id").as("a"), col(fpCol).as("fp_a"))
+        val r = capped.select(col("band"), col("bits"), col("doc_id").as("b"), col(fpCol).as("fp_b"))
+        val repPairs = l.join(r, Seq("band", "bits")).filter(col("a") < col("b"))
+          .select(col("a"), col("b"), bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).cast("long").as("hamming"))
+          .filter(col("hamming") <= maxHamming)
+          .distinct()
+        // disjoint by construction: a star's b is never a representative,
+        // while repPairs only relates representatives — plain union
+        val out = repPairs.unionByName(stars)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try { out.count(); out }
+        catch { case t: Throwable => out.unpersist(); throw t }
+      } finally capped.unpersist()
+    } finally withRep.unpersist()
   }
 
-  /** Perceptual near-duplicate IMAGE pairs (a < b) within `maxHamming`
-    * dHash bit flips — the modality the text dedup family doesn't cover:
-    * two re-encodes of the same image differ in bytes (so `dedup_exact`
-    * on the payload misses them) but not in resampled luminance
-    * STRUCTURE. Pure composition of shipped parts: the partition-parallel
-    * decode → resample → dHash of
-    * [[graft.multimodal.Multimodal.imagePhash]] (narrow map, zero
-    * shuffle) feeds the same 4×15-bit pigeonhole band join the simhash
-    * pairing proved — never an all-pairs compare. Invalid payloads drop
-    * before pairing (a malformed image is nobody's duplicate). */
-  def imagePhashPairs(docs: DataFrame, maxHamming: Int = 3,
-                      maxBucketSize: Int = MaxLshBucketSize): DataFrame =
-    imagePhashPairsFrom(
-      graft.multimodal.Multimodal.imagePhash(docs).toDF()
-        .filter(col("valid")).select(col("doc_id"), col("phash")),
-      maxHamming, maxBucketSize)
+  /** Perceptual near-duplicate pairs (a < b) of one modality within
+    * `maxHamming` fingerprint bit flips — the modalities the text dedup
+    * family doesn't cover: two re-encodes of the same image, clip or cut
+    * differ in bytes (so `dedup_exact` on the payload misses them) but
+    * not in resampled luminance or frame-energy STRUCTURE. Pure
+    * composition of shipped parts: the modality's partition-parallel
+    * decode → fingerprint ([[graft.multimodal.Multimodal.imagePhash]],
+    * [[graft.multimodal.Multimodal.audioFingerprint]],
+    * [[graft.multimodal.Multimodal.videoFingerprint]] — narrow maps, zero
+    * shuffle) feeds the GUARDED 4×15-bit pigeonhole band join the simhash
+    * pairing proved ([[bandedHammingPairs]]) — never an all-pairs
+    * compare. Invalid payloads drop before pairing. */
+  def fingerprintPairs(m: graft.multimodal.Modality, docs: DataFrame, maxHamming: Int = 3,
+                       maxBucketSize: Int = MaxLshBucketSize): DataFrame =
+    fingerprintPairsFrom(m, m.fingerprints(docs), maxHamming, maxBucketSize)
 
-  /** [[imagePhashPairs]] served from a persisted (doc_id, phash) table —
+  /** [[fingerprintPairs]] served from a persisted (doc_id, fpCol) table —
     * the serve plan never decodes the corpus. */
-  def imagePhashPairsFrom(fp: DataFrame, maxHamming: Int = 3,
-                          maxBucketSize: Int = MaxLshBucketSize): DataFrame =
-    bandedHammingPairs(fp, "phash", maxHamming, maxBucketSize)
+  def fingerprintPairsFrom(m: graft.multimodal.Modality, fp: DataFrame, maxHamming: Int = 3,
+                           maxBucketSize: Int = MaxLshBucketSize): DataFrame =
+    bandedHammingPairs(fp, m.fpCol, maxHamming, maxBucketSize)
 
-  /** Build-once perceptual-image index: the (doc_id, phash) table
-    * persisted as parquet. The dHash is a pure per-document function of
-    * the payload bytes (decode → resample → sign bits, no cross-document
-    * term), so fresh shards UNION onto the index without re-decoding the
-    * existing corpus — the same incremental-ingest contract as the
-    * minhash/winnow/substring indexes. Staged publish via
+  /** Build-once perceptual index of one modality: the (doc_id, fpCol)
+    * table persisted as parquet under `dir/<m.table>`. The fingerprint is
+    * a pure per-document function of the payload bytes (no
+    * cross-document term), so fresh shards UNION onto the index without
+    * re-decoding the existing corpus — the same incremental-ingest
+    * contract as the minhash/winnow/substring indexes. Staged publish via
     * [[graft.sources.Sinks.publishSwap]]. */
-  def writeImagePhashIndex(docs: DataFrame, dir: String): Unit = {
-    graft.sources.Sinks.publishSwap(s"$dir/image_phash") { staging =>
-      graft.multimodal.Multimodal.imagePhash(docs).toDF()
-        .filter(col("valid")).select(col("doc_id"), col("phash"))
-        .write.mode("overwrite").parquet(staging)
+  def writeFingerprintIndex(m: graft.multimodal.Modality, docs: DataFrame, dir: String): Unit = {
+    graft.sources.Sinks.publishSwap(s"$dir/${m.table}") { staging =>
+      m.fingerprints(docs).write.mode("overwrite").parquet(staging)
     }
     // serve-side band/cap table precomputed at build (from the just-
     // published raw table — no second corpus decode): the gate's
     // per-batch index-side rep groupBy + hot-bucket window move here,
     // leaving the serve path a pure band join (guide §1.2/§2.4)
-    graft.sources.Sinks.publishSwap(s"$dir/image_phash_banded") { staging =>
-      bandedFpIndex(docs.sparkSession.read.parquet(s"$dir/image_phash"), "phash")
-        .write.mode("overwrite").parquet(staging)
-    }
-  }
-
-  /** Perceptual near-duplicate AUDIO pairs (a < b) within `maxHamming`
-    * fingerprint bit flips — the second non-text modality, closing the
-    * family: two re-encodes of the same clip differ in bytes but not in
-    * frame-energy STRUCTURE. Pure composition of shipped parts: the
-    * partition-parallel decode → frame-energy → permuted sign-delta of
-    * [[graft.multimodal.Multimodal.audioFingerprint]] (narrow map, zero
-    * shuffle) feeds the same 4×15-bit pigeonhole band join as the
-    * simhash/phash pairings — never an all-pairs compare. Invalid
-    * payloads drop before pairing. */
-  def audioFingerprintPairs(docs: DataFrame, maxHamming: Int = 3,
-                            maxBucketSize: Int = MaxLshBucketSize): DataFrame =
-    audioFingerprintPairsFrom(
-      graft.multimodal.Multimodal.audioFingerprint(docs).toDF()
-        .filter(col("valid")).select(col("doc_id"), col("afp")),
-      maxHamming, maxBucketSize)
-
-  /** [[audioFingerprintPairs]] served from a persisted (doc_id, afp)
-    * table — the serve plan never decodes the corpus. */
-  def audioFingerprintPairsFrom(fp: DataFrame, maxHamming: Int = 3,
-                                maxBucketSize: Int = MaxLshBucketSize): DataFrame =
-    bandedHammingPairs(fp, "afp", maxHamming, maxBucketSize)
-
-  /** Build-once audio-fingerprint index — the [[writeImagePhashIndex]]
-    * lifecycle for the audio modality: the fingerprint is a pure
-    * per-document function of the payload bytes, so fresh shards UNION
-    * onto the index without re-decoding the existing corpus. Staged
-    * publish via [[graft.sources.Sinks.publishSwap]]. */
-  def writeAudioFpIndex(docs: DataFrame, dir: String): Unit = {
-    graft.sources.Sinks.publishSwap(s"$dir/audio_fp") { staging =>
-      graft.multimodal.Multimodal.audioFingerprint(docs).toDF()
-        .filter(col("valid")).select(col("doc_id"), col("afp"))
-        .write.mode("overwrite").parquet(staging)
-    }
-    // see writeImagePhashIndex: the serve-side band/cap table builds once
-    graft.sources.Sinks.publishSwap(s"$dir/audio_fp_banded") { staging =>
-      bandedFpIndex(docs.sparkSession.read.parquet(s"$dir/audio_fp"), "afp")
-        .write.mode("overwrite").parquet(staging)
-    }
-  }
-
-  /** TEMPORAL near-duplicate VIDEO pairs (a < b) within `maxHamming`
-    * fingerprint bit flips — the frame-sequence modality, closing the
-    * perceptual family: two cuts of the same clip differ in bytes (and in
-    * any single re-encoded frame) but not in frame-energy STRUCTURE
-    * across the sequence. Pure composition of shipped parts: the
-    * partition-parallel container parse → per-frame energy → permuted
-    * sign-delta of [[graft.multimodal.Multimodal.videoFingerprint]]
-    * (narrow map, zero shuffle) feeds the same GUARDED 4×15-bit
-    * pigeonhole band join as the simhash/image/audio pairings — never an
-    * all-pairs compare. Invalid payloads drop before pairing. */
-  def videoFingerprintPairs(docs: DataFrame, maxHamming: Int = 3,
-                            maxBucketSize: Int = MaxLshBucketSize): DataFrame =
-    videoFingerprintPairsFrom(
-      graft.multimodal.Multimodal.videoFingerprint(docs).toDF()
-        .filter(col("valid")).select(col("doc_id"), col("vfp")),
-      maxHamming, maxBucketSize)
-
-  /** [[videoFingerprintPairs]] served from a persisted (doc_id, vfp)
-    * table — the serve plan never re-parses the corpus. */
-  def videoFingerprintPairsFrom(fp: DataFrame, maxHamming: Int = 3,
-                                maxBucketSize: Int = MaxLshBucketSize): DataFrame =
-    bandedHammingPairs(fp, "vfp", maxHamming, maxBucketSize)
-
-  /** Build-once video-fingerprint index — the [[writeImagePhashIndex]]
-    * lifecycle for the frame-sequence modality: the fingerprint is a pure
-    * per-document function of the payload bytes, so fresh shards UNION
-    * onto the index without re-parsing the existing corpus. Staged
-    * publish via [[graft.sources.Sinks.publishSwap]]. */
-  def writeVideoFpIndex(docs: DataFrame, dir: String): Unit = {
-    graft.sources.Sinks.publishSwap(s"$dir/video_fp") { staging =>
-      graft.multimodal.Multimodal.videoFingerprint(docs).toDF()
-        .filter(col("valid")).select(col("doc_id"), col("vfp"))
-        .write.mode("overwrite").parquet(staging)
-    }
-    // see writeImagePhashIndex: the serve-side band/cap table builds once
-    graft.sources.Sinks.publishSwap(s"$dir/video_fp_banded") { staging =>
-      bandedFpIndex(docs.sparkSession.read.parquet(s"$dir/video_fp"), "vfp")
+    graft.sources.Sinks.publishSwap(s"$dir/${m.bandedTable}") { staging =>
+      bandedFpIndex(docs.sparkSession.read.parquet(s"$dir/${m.table}"), m.fpCol)
         .write.mode("overwrite").parquet(staging)
     }
   }
@@ -1126,8 +1046,8 @@ object Dedup {
     * into the 4x15-bit pigeonhole bands, residual hot (band, bits)
     * buckets beyond `maxBucketSize` dropped (the [[bandedHammingPairs]]
     * recall contract). Output: (band, bits, match_id, fp_i) — the table
-    * [[writeImagePhashIndex]] and its audio/video twins persist next to
-    * the raw fingerprints as `<table>_banded`. */
+    * [[writeFingerprintIndex]] persists next to the raw fingerprints as
+    * `<table>_banded`. */
   def bandedFpIndex(index: DataFrame, fpCol: String,
                     maxBucketSize: Int = MaxLshBucketSize): DataFrame = {
     val reps = index.groupBy(col(fpCol)).agg(min(col("doc_id")).as("match_id"))

@@ -1,9 +1,11 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.dedup.Dedup
+import graft.multimodal.Modality
 import graft.text.{TextAnalysis, TextNormalize}
 
 /** The composed pretraining-corpus flagship — ONE lazy DAG running the
@@ -51,8 +53,24 @@ import graft.text.{TextAnalysis, TextNormalize}
 object PretrainCorpus {
 
   /** The verbatim benchmark sentence planted on both sides of the
-    * decontamination boundary (68 chars ≥ the minLen=30 contract). */
+    * decontamination boundary (68 chars ≥ the [[MinLen]] contract). */
   val LeakSentence = "this exact benchmark passage leaked verbatim into the training corpus"
+
+  // The ladder's fixed settings — the literal arguments of the oracle's
+  // `pretrainCorpusSql`/`pretrainReportSql` mirror; the ingest gate
+  // (graft.streaming.PretrainStream) cleans with the same values.
+  /** Benchmark documents: the decontamination reference set. */
+  val BenchPred: Column = col("source") === "src0"
+  /** C4 keeps a line only with at least this many words. */
+  val MinLineWords = 3
+  /** A trimmed line is boilerplate when this many documents carry it... */
+  val BpMinDf = 3L
+  /** ...and it is at least this many characters long. */
+  val BpMinLineChars = 10
+  /** Shortest verbatim benchmark span decontamination cuts. */
+  val MinLen = 30
+  /** Packing window, in characters. */
+  val WindowSize = 2048L
 
   /** Last (weights, threshold) the v2 gate ran with, stashed for the
     * dynamic oracle (the [[graft.text.QualityClassifier.lastWeights]]
@@ -126,12 +144,6 @@ object PretrainCorpus {
   /** The staged chain plus its per-stage observations. */
   private case class Staged(packed: DataFrame, obs: Seq[(String, Observation)])
 
-  /** Dev-only stage timing (SPARK_GRAFT_STAGE_TIMES=1): each stage
-    * boundary is an eager localCheckpoint, so wall time between cuts IS
-    * the stage cost (guide §1.5 — label the jobs, measure first). The
-    * job description labels the stage in the UI/event log either way. */
-  private val stageTimes = sys.env.contains("SPARK_GRAFT_STAGE_TIMES")
-
   /** One ladder run's stage-checkpoint ledger. Each stage cut is an
     * eager localCheckpoint whose cached blocks `clearCache()` can NOT
     * release (raw RDD persist, not a cacheManager entry), so every cut
@@ -151,20 +163,38 @@ object PretrainCorpus {
       prev = next
     }
   }
-  private def cut(df: DataFrame, stage: String, led: CkLedger): DataFrame = {
+
+  /** Runs one stage's eager work under the job description
+    * `pretrain: <stage>` (the label the UI and event log show), restoring
+    * the thread's previous description on every exit path. */
+  private def labelled[T](df: DataFrame, stage: String)(body: => T): T = {
     val sc = df.sparkSession.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(s"pretrain: $stage")
-    val t0 = System.nanoTime()
-    val out = df.localCheckpoint()
-    led.supersede(out.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      case _ => null
-    })
-    if (stageTimes)
-      println(f"PP_STAGE $stage%-10s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-    sc.setJobDescription(null)
-    out
+    try body finally sc.setJobDescription(prev)
   }
+
+  private def cut(df: DataFrame, stage: String, led: CkLedger): DataFrame =
+    labelled(df, stage) {
+      // a checkpoint whose job fails is already registered as persisted
+      // but never returned, so it is found (and released) by the unique
+      // call site its RDD is created under
+      val sc = df.sparkSession.sparkContext
+      val site = s"pretrain checkpoint $stage ${java.util.UUID.randomUUID()}"
+      val prevSite = sc.getLocalProperty("callSite.short")
+      sc.setCallSite(site)
+      val out = try df.localCheckpoint()
+        catch { case t: Throwable =>
+          sc.getPersistentRDDs.values.filter(_.toString.endsWith(s" at $site"))
+            .foreach(_.unpersist(blocking = false))
+          throw t
+        } finally sc.setLocalProperty("callSite.short", prevSite)
+      led.supersede(out.queryExecution.logical match {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+        case _ => null
+      })
+      out
+    }
 
   /** The FINAL stage cut: the returned frame outlives build() (the
     * caller runs the packing action), so a raw checkpoint RDD here would
@@ -173,42 +203,30 @@ object PretrainCorpus {
     * InMemoryRelation, not the staged chain) while the per-query
     * `clearCache()` that Verify/Bench already run releases it. The count
     * also releases the last pending stage checkpoint: this cut's
-    * materialization was its final consumer. */
-  private def cutFinal(df: DataFrame, stage: String, led: CkLedger): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    sc.setJobDescription(s"pretrain: $stage")
-    val t0 = System.nanoTime()
-    val out = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    led.supersede(null)
-    if (stageTimes)
-      println(f"PP_STAGE $stage%-10s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-    sc.setJobDescription(null)
-    out
-  }
-
-  /** Dev-only timing of the EAGER builder calls (pair graphs, closure
-    * labels) that materialize at call time, before any stage cut. */
-  private def timed[T](stage: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val out = f
-    if (stageTimes)
-      println(f"PP_EAGER $stage%-10s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-    out
-  }
+    * materialization was its final consumer. A failed count releases the
+    * persist before rethrowing. */
+  private def cutFinal(df: DataFrame, stage: String, led: CkLedger): DataFrame =
+    labelled(df, stage) {
+      val out = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try out.count()
+      catch { case t: Throwable => out.unpersist(); throw t }
+      led.supersede(null)
+      out
+    }
 
   private def obsOn(df: DataFrame, name: String, metrics: Column*): (DataFrame, Observation) =
     graft.ops.Metrics.observed(df, name, metrics: _*)
 
-  private def build(docs: DataFrame, benchPred: Column, minLineWords: Int,
-                    bpMinDf: Long, bpMinLineChars: Int, minLen: Int,
-                    budgetTokens: Long, windowSize: Long,
-                    gate: Option[(Seq[Double], Double)] = None,
-                    imageDedup: Boolean = false,
-                    avDedup: Boolean = false): Staged = {
+  private def build(docs: DataFrame, gate: Option[(Seq[Double], Double)],
+                    modalities: Seq[Modality], budgetTokens: Long): Staged = {
     val led = new CkLedger
-    require(!avDedup || imageDedup,
-      "audio/video keep-canonical composes on top of the image stage (v4 ⊃ v3)")
+    // a failing stage releases the last stage checkpoint still pending
+    try buildWith(led, docs, gate, modalities, budgetTokens)
+    catch { case t: Throwable => led.supersede(null); throw t }
+  }
+
+  private def buildWith(led: CkLedger, docs: DataFrame, gate: Option[(Seq[Double], Double)],
+                        modalities: Seq[Modality], budgetTokens: Long): Staged = {
     val (page, oPage) = obsOn(
       docs.select(col("doc_id"), col("source"),
         (if (gate.isDefined) dirtyPageV2 else dirtyPage).as("text")),
@@ -219,7 +237,7 @@ object PretrainCorpus {
       "graft_pp_nfc", sum(length(col("text"))).as("chars"))
     val (c4, oC4) = obsOn(
       normed.select(col("doc_id"), col("source"),
-        array_join(TextAnalysis.c4KeptLines(split(col("text"), "\n"), minLineWords), "\n")
+        array_join(TextAnalysis.c4KeptLines(split(col("text"), "\n"), MinLineWords), "\n")
           .as("text")),
       "graft_pp_c4", sum(length(col("text"))).as("chars"))
     // STAGE BOUNDARIES CUT LINEAGE (localCheckpoint = the local analog
@@ -235,18 +253,18 @@ object PretrainCorpus {
     val c4p = cut(c4, "c4", led)
     val (bp, oBp) = obsOn(
       TextAnalysis.scrubBoilerplateLines(c4p.select("doc_id", "text"),
-          minDf = bpMinDf, minLineChars = bpMinLineChars)
+          minDf = BpMinDf, minLineChars = BpMinLineChars)
         .select(col("doc_id"), col("clean_text").as("text"))
         .join(c4p.select("doc_id", "source"), Seq("doc_id")),
       "graft_pp_bp", sum(length(col("text"))).as("chars"))
     val bpp = cut(bp, "bp", led)
-    // OPTIONAL v2 stages between the scrubs and dedup: PII scrub (emails
-    // + long digit runs — row-local regex), then the TRAINED quality
-    // classifier gate under literal weights (shuffle-free scoring, the
-    // 100 TB apply path). Benchmark docs bypass the gate: they are the
-    // decontamination REFERENCE set, not corpus members — quality-
-    // filtering them away would silently disable the decon stage.
-    val (preDedup, extraObs) = gate match {
+    // OPTIONAL gate stages between the scrubs and dedup: PII scrub
+    // (emails + long digit runs — row-local regex), then the TRAINED
+    // quality classifier gate under literal weights (shuffle-free
+    // scoring, the 100 TB apply path). Benchmark docs bypass the gate:
+    // they are the decontamination REFERENCE set, not corpus members —
+    // quality-filtering them away would silently disable the decon stage.
+    val (gated, gateObs) = gate match {
       case None => (bpp, Seq.empty[(String, Observation)])
       case Some((w, thr)) =>
         val (pii, oPii) = obsOn(
@@ -256,86 +274,49 @@ object PretrainCorpus {
         val piip = cut(pii, "pii", led)
         val (qg, oQg) = obsOn(
           graft.text.QualityClassifier.scoreTextWith(piip, w)
-            .filter(benchPred || col("score") >= lit(thr))
+            .filter(BenchPred || col("score") >= lit(thr))
             .drop("score"),
           "graft_pp_quality", count(lit(1)).as("n"), sum(length(col("text"))).as("chars"))
         (cut(qg, "quality", led), Seq("pii" -> oPii, "quality" -> oQg))
     }
-    // OPTIONAL v3 stage between the quality gate and TEXT dedup:
-    // perceptual IMAGE keep-canonical — each document's image payload
-    // fingerprints (narrow partition-parallel decode, zero shuffle),
-    // near-duplicate images pair through the guarded pigeonhole band
-    // join, and every connected group keeps its min-id member. A real
-    // multimodal corpus dedups the re-encoded/re-hosted images BEFORE
-    // paying text dedup's shuffles on pages that only differ by wrapper.
-    // Closure over the guarded star+representative pairs labels exactly
-    // the uncapped clique graph (the bandedHammingPairs invariant), and
-    // the oracle mirrors pairs + closure verbatim.
-    val (preDedup2, imgObs) =
-      if (!imageDedup) (preDedup, Seq.empty[(String, Observation)])
-      else {
-        val fps = graft.multimodal.Multimodal.imagePhash(preDedup).toDF()
-          .filter(col("valid")).select(col("doc_id"), col("phash"))
-        val pairs = timed("img_pairs")(Dedup.imagePhashPairsFrom(fps))
-        val comps = timed("img_comps")(Dedup.hammingComponents(pairs))
-        val (img, oImg) = obsOn(
-          preDedup.join(
-            comps.filter(col("component") =!= col("doc_id")).select("doc_id"),
-            Seq("doc_id"), "left_anti"),
-          "graft_pp_image", count(lit(1)).as("n"), sum(length(col("text"))).as("chars"))
-        // the eager checkpoint materializes the survivors, so the pair
-        // graph's and label table's builder-owned caches release here
-        val imgp = cut(img, "image", led)
-        pairs.unpersist()
-        comps.unpersist()
-        (imgp, Seq("image" -> oImg))
-      }
-    // OPTIONAL v4 stages: perceptual AUDIO then temporal VIDEO
-    // keep-canonical, CASCADED after the image stage (each stage
-    // fingerprints only the previous stage's survivors — the point of
-    // staging is to never pay a later modality's decode on a document an
-    // earlier one already collapsed). Same shape as the image stage:
-    // narrow partition-parallel fingerprint, guarded pigeonhole band
-    // join, closure, min-id survivor — the ingest GATE audits exactly
-    // these three modalities (PretrainStream.gateBatch), so the ladder
-    // that BUILDS a corpus and the gate that POLICES it now apply the
-    // same dedup standard (the r17 verdict's asymmetry, closed).
-    val (preDedup3, avObs) =
-      if (!avDedup) (preDedup2, Seq.empty[(String, Observation)])
-      else {
-        val afps = graft.multimodal.Multimodal.audioFingerprint(preDedup2).toDF()
-          .filter(col("valid")).select(col("doc_id"), col("afp"))
-        val apairs = timed("aud_pairs")(Dedup.audioFingerprintPairsFrom(afps))
-        val acomps = timed("aud_comps")(Dedup.hammingComponents(apairs))
-        val (aud, oAud) = obsOn(
-          preDedup2.join(
-            acomps.filter(col("component") =!= col("doc_id")).select("doc_id"),
-            Seq("doc_id"), "left_anti"),
-          "graft_pp_audio", count(lit(1)).as("n"), sum(length(col("text"))).as("chars"))
-        val audp = cut(aud, "audio", led)
-        apairs.unpersist()
-        acomps.unpersist()
-        val vfps = graft.multimodal.Multimodal.videoFingerprint(audp).toDF()
-          .filter(col("valid")).select(col("doc_id"), col("vfp"))
-        val vpairs = timed("vid_pairs")(Dedup.videoFingerprintPairsFrom(vfps))
-        val vcomps = timed("vid_comps")(Dedup.hammingComponents(vpairs))
-        val (vid, oVid) = obsOn(
-          audp.join(
-            vcomps.filter(col("component") =!= col("doc_id")).select("doc_id"),
-            Seq("doc_id"), "left_anti"),
-          "graft_pp_video", count(lit(1)).as("n"), sum(length(col("text"))).as("chars"))
-        val vidp = cut(vid, "video", led)
-        vpairs.unpersist()
-        vcomps.unpersist()
-        (vidp, Seq("audio" -> oAud, "video" -> oVid))
-      }
+    // OPTIONAL perceptual keep-canonical stages between the quality gate
+    // and TEXT dedup, one per modality, CASCADED: each stage fingerprints
+    // only the previous stage's survivors (narrow partition-parallel
+    // decode, zero shuffle — never paying a later modality's decode on a
+    // document an earlier one already collapsed), near-duplicate payloads
+    // pair through the guarded pigeonhole band join, and every connected
+    // group keeps its min-id member. A real multimodal corpus dedups the
+    // re-encoded/re-hosted payloads BEFORE paying text dedup's shuffles
+    // on pages that only differ by wrapper. Closure over the guarded
+    // star+representative pairs labels exactly the uncapped clique graph
+    // (the bandedHammingPairs invariant), and the oracle mirrors pairs +
+    // closure verbatim. With every modality the ladder dedups exactly the
+    // set the ingest gate audits (PretrainStream.gateBatch), so the
+    // ladder that BUILDS a corpus and the gate that POLICES it apply one
+    // dedup standard.
+    val (preDedup, mmObs) = modalities.foldLeft((gated, Seq.empty[(String, Observation)])) {
+      case ((in, obs), m) =>
+        val pairs = Dedup.fingerprintPairsFrom(m, m.fingerprints(in))
+        try {
+          val comps = Dedup.hammingComponents(pairs)
+          try {
+            val (kept, o) = obsOn(
+              in.join(comps.filter(col("component") =!= col("doc_id")).select("doc_id"),
+                Seq("doc_id"), "left_anti"),
+              s"graft_pp_${m.name}", count(lit(1)).as("n"), sum(length(col("text"))).as("chars"))
+            // the eager checkpoint materializes the survivors, so the pair
+            // graph's and label table's builder-owned caches release here
+            (cut(kept, m.name, led), obs :+ (m.name -> o))
+          } finally comps.unpersist()
+        } finally pairs.unpersist()
+    }
     val (deduped, oDed) = obsOn(
-      preDedup3.join(timed("keepCanon")(Dedup.keepCanonical(preDedup3.select("doc_id", "text"))).select("doc_id"),
+      preDedup.join(Dedup.keepCanonical(preDedup.select("doc_id", "text")).select("doc_id"),
         Seq("doc_id")),
       "graft_pp_dedup", count(lit(1)).as("n"), sum(length(col("text"))).as("chars"))
     val dedp = cut(deduped, "dedup", led)
     val (decon, oDec) = obsOn(
-      Dedup.scrubContaminated(dedp, benchPred, minLen)
+      Dedup.scrubContaminated(dedp, BenchPred, MinLen)
         .select(col("doc_id"), col("clean_text").as("text"))
         .join(dedp.select("doc_id", "source"), Seq("doc_id")),
       "graft_pp_decon", count(lit(1)).as("n"), sum(length(col("text"))).as("chars"))
@@ -347,35 +328,53 @@ object PretrainCorpus {
       .select(col("doc_id"), col("source"), length(col("text")).cast("long").as("n_chars"))
     val keptCut = cutFinal(kept, "sample", led)
     val (packed, oPk) = obsOn(
-      Packing.packSequences(keptCut.select("doc_id", "n_chars"), windowSize)
+      Packing.packSequences(keptCut.select("doc_id", "n_chars"), WindowSize)
         .join(keptCut.select("doc_id", "source"), Seq("doc_id"))
         .select(col("doc_id"), col("source"), col("n_chars"), col("bin")),
       "graft_pp_packed", max(col("bin")).as("max_bin"))
     Staged(packed, Seq("input" -> oPage, "nfc" -> oNfc, "c4" -> oC4,
-      "bp" -> oBp) ++ extraObs ++ imgObs ++ avObs ++ Seq("dedup" -> oDed,
+      "bp" -> oBp) ++ gateObs ++ mmObs ++ Seq("dedup" -> oDed,
       "decon" -> oDec, "sample" -> oSmp, "packed" -> oPk))
   }
 
   /** The end-to-end corpus: (doc_id, source, n_chars, bin) — the packed
     * training sequences of the fully cleaned, decontaminated, sampled
-    * corpus. */
-  def pipeline(docs: DataFrame, benchPred: Column = col("source") === "src0",
-               minLineWords: Int = 3, bpMinDf: Long = 3, bpMinLineChars: Int = 10,
-               minLen: Int = 30, budgetTokens: Long = 20000L,
-               windowSize: Long = 2048L): DataFrame =
-    build(docs, benchPred, minLineWords, bpMinDf, bpMinLineChars, minLen,
-      budgetTokens, windowSize).packed
+    * corpus. The ladder's rungs:
+    *
+    *  - `gate = None`: NFC → C4 → boilerplate → dedup → decon → sample →
+    *    pack over [[dirtyPage]];
+    *  - `gate = Some((weights, threshold))`: over [[dirtyPageV2]], with
+    *    the PII scrub and the TRAINED quality-classifier gate (literal
+    *    weights, threshold on the round-6 score) composed between the
+    *    boilerplate scrub and dedup — the order a production cleanup runs
+    *    them: scrub PII before anything persists downstream artifacts,
+    *    gate quality before paying for dedup's shuffles on documents
+    *    that won't ship;
+    *  - `modalities`: one perceptual keep-canonical stage per
+    *    [[Modality]], cascaded in the given order between the gate and
+    *    text dedup ([[Modality.all]] dedups every modality the ingest
+    *    gate audits).
+    *
+    * Same output shape on every rung. */
+  def pipeline(docs: DataFrame, gate: Option[(Seq[Double], Double)] = None,
+               modalities: Seq[Modality] = Nil,
+               budgetTokens: Long = 20000L): DataFrame =
+    build(docs, gate, modalities, budgetTokens).packed
 
-  /** Run the pipeline once and return the per-stage telemetry as ONE
-    * report row — document and character survival per stage plus the two
-    * headline cuts, every count an `observe` riding the single packing
-    * action. The composed twin of `pipeline_counters`. */
-  def report(docs: DataFrame, benchPred: Column = col("source") === "src0",
-             minLineWords: Int = 3, bpMinDf: Long = 3, bpMinLineChars: Int = 10,
-             minLen: Int = 30, budgetTokens: Long = 20000L,
-             windowSize: Long = 2048L): DataFrame = {
-    val st = build(docs, benchPred, minLineWords, bpMinDf, bpMinLineChars,
-      minLen, budgetTokens, windowSize)
+  /** Run [[pipeline]] once and return the per-stage telemetry as ONE
+    * report row — every count an `observe` riding the single packing
+    * action (the composed twin of `pipeline_counters`). Columns follow
+    * the stages the ladder ran: document and character survival per
+    * stage (`n_docs`, `chars_raw`, `chars_nfc`, `chars_c4`, `chars_bp`,
+    * then with a gate `chars_pii`, `docs_quality`, `chars_quality`, then
+    * `docs_<m>`/`chars_<m>` per modality, then dedup, decon, sample and
+    * `n_bins`), then the headline cuts: `scrub_char_cut` and one
+    * `<stage>_doc_cut` per document-cutting stage, each read against the
+    * previous such stage's survivors — its actual input. */
+  def report(docs: DataFrame, gate: Option[(Seq[Double], Double)] = None,
+             modalities: Seq[Modality] = Nil,
+             budgetTokens: Long = 20000L): DataFrame = {
+    val st = build(docs, gate, modalities, budgetTokens)
     st.packed.count()
     val m = st.obs.toMap
     def g(stage: String, key: String): Long = {
@@ -389,235 +388,31 @@ object PretrainCorpus {
       val v = m("packed").get("max_bin")
       if (v == null) 0L else v.asInstanceOf[Number].longValue + 1
     }
-    val spark = docs.sparkSession
-    import spark.implicits._
-    Seq((g("input", "n"), g("input", "chars"), g("nfc", "chars"),
-        g("c4", "chars"), g("bp", "chars"),
-        g("dedup", "n"), g("dedup", "chars"),
-        g("decon", "n"), g("decon", "chars"),
-        g("sample", "n"), g("sample", "tokens"),
-        nBins))
-      .toDF("n_docs", "chars_raw", "chars_nfc", "chars_c4", "chars_bp",
-        "docs_dedup", "chars_dedup", "docs_decon", "chars_decon",
-        "docs_sampled", "tokens_sampled", "n_bins")
-      // ratio denominators guard the degenerate empty-input case
-      // explicitly (NULL, mirrored by the oracle's CASE) rather than
-      // relying on either engine's divide-by-zero convention
-      .select(col("*"),
-        when(col("chars_raw") > 0,
-          round(lit(1.0) - col("chars_bp").cast("double") / col("chars_raw"), 6))
-          .otherwise(lit(null).cast("double")).as("scrub_char_cut"),
-        when(col("n_docs") > 0,
-          round(lit(1.0) - col("docs_dedup").cast("double") / col("n_docs"), 6))
-          .otherwise(lit(null).cast("double")).as("dedup_doc_cut"))
-  }
-
-  /** The v2 ladder — [[pipeline]] with the PII scrub and the TRAINED
-    * quality-classifier gate (literal `gateWeights`, threshold on the
-    * round-6 score) composed between the boilerplate scrub and dedup,
-    * the order a production cleanup actually runs them: scrub PII before
-    * anything persists downstream artifacts, gate quality before paying
-    * for dedup's shuffles on documents that won't ship. Same output
-    * shape. */
-  def pipelineV2(docs: DataFrame, gateWeights: Seq[Double],
-                 gateThreshold: Double = 0.2,
-                 benchPred: Column = col("source") === "src0",
-                 minLineWords: Int = 3, bpMinDf: Long = 3, bpMinLineChars: Int = 10,
-                 minLen: Int = 30, budgetTokens: Long = 20000L,
-                 windowSize: Long = 2048L): DataFrame =
-    build(docs, benchPred, minLineWords, bpMinDf, bpMinLineChars, minLen,
-      budgetTokens, windowSize, Some((gateWeights, gateThreshold))).packed
-
-  /** [[report]] for the v2 ladder: two more survival columns (post-PII
-    * chars, post-gate docs/chars) and the quality cut headline; the
-    * dedup cut reads against the gate's output — its actual input. */
-  def reportV2(docs: DataFrame, gateWeights: Seq[Double],
-               gateThreshold: Double = 0.2,
-               benchPred: Column = col("source") === "src0",
-               minLineWords: Int = 3, bpMinDf: Long = 3, bpMinLineChars: Int = 10,
-               minLen: Int = 30, budgetTokens: Long = 20000L,
-               windowSize: Long = 2048L): DataFrame = {
-    val st = build(docs, benchPred, minLineWords, bpMinDf, bpMinLineChars,
-      minLen, budgetTokens, windowSize, Some((gateWeights, gateThreshold)))
-    st.packed.count()
-    val m = st.obs.toMap
-    def g(stage: String, key: String): Long = {
-      val v = m(stage).get(key)
-      if (v == null) 0L else v.asInstanceOf[Number].longValue
-    }
-    val nBins = {
-      val v = m("packed").get("max_bin")
-      if (v == null) 0L else v.asInstanceOf[Number].longValue + 1
-    }
-    val spark = docs.sparkSession
-    import spark.implicits._
-    Seq((g("input", "n"), g("input", "chars"), g("nfc", "chars"),
-        g("c4", "chars"), g("bp", "chars"), g("pii", "chars"),
-        g("quality", "n"), g("quality", "chars"),
-        g("dedup", "n"), g("dedup", "chars"),
-        g("decon", "n"), g("decon", "chars"),
-        g("sample", "n"), g("sample", "tokens"),
-        nBins))
-      .toDF("n_docs", "chars_raw", "chars_nfc", "chars_c4", "chars_bp",
-        "chars_pii", "docs_quality", "chars_quality",
-        "docs_dedup", "chars_dedup", "docs_decon", "chars_decon",
-        "docs_sampled", "tokens_sampled", "n_bins")
-      .select(col("*"),
-        when(col("chars_raw") > 0,
-          round(lit(1.0) - col("chars_bp").cast("double") / col("chars_raw"), 6))
-          .otherwise(lit(null).cast("double")).as("scrub_char_cut"),
-        when(col("n_docs") > 0,
-          round(lit(1.0) - col("docs_quality").cast("double") / col("n_docs"), 6))
-          .otherwise(lit(null).cast("double")).as("quality_doc_cut"),
-        when(col("docs_quality") > 0,
-          round(lit(1.0) - col("docs_dedup").cast("double") / col("docs_quality"), 6))
-          .otherwise(lit(null).cast("double")).as("dedup_doc_cut"))
-  }
-
-  /** The v3 (MULTIMODAL) ladder — [[pipelineV2]] with perceptual IMAGE
-    * keep-canonical composed between the quality gate and text dedup:
-    * near-duplicate image payloads (re-encodes, re-hosts) collapse to
-    * their min-id page before text dedup pays its shuffles. Same output
-    * shape. */
-  def pipelineV3(docs: DataFrame, gateWeights: Seq[Double],
-                 gateThreshold: Double = 0.2,
-                 benchPred: Column = col("source") === "src0",
-                 minLineWords: Int = 3, bpMinDf: Long = 3, bpMinLineChars: Int = 10,
-                 minLen: Int = 30, budgetTokens: Long = 20000L,
-                 windowSize: Long = 2048L): DataFrame =
-    build(docs, benchPred, minLineWords, bpMinDf, bpMinLineChars, minLen,
-      budgetTokens, windowSize, Some((gateWeights, gateThreshold)),
-      imageDedup = true).packed
-
-  /** [[reportV2]] for the v3 ladder: two more survival columns
-    * (post-image-dedup docs/chars) and the image-cut headline; the text
-    * dedup cut reads against the image stage's output — its actual
-    * input. */
-  def reportV3(docs: DataFrame, gateWeights: Seq[Double],
-               gateThreshold: Double = 0.2,
-               benchPred: Column = col("source") === "src0",
-               minLineWords: Int = 3, bpMinDf: Long = 3, bpMinLineChars: Int = 10,
-               minLen: Int = 30, budgetTokens: Long = 20000L,
-               windowSize: Long = 2048L): DataFrame = {
-    val st = build(docs, benchPred, minLineWords, bpMinDf, bpMinLineChars,
-      minLen, budgetTokens, windowSize, Some((gateWeights, gateThreshold)),
-      imageDedup = true)
-    st.packed.count()
-    val m = st.obs.toMap
-    def g(stage: String, key: String): Long = {
-      val v = m(stage).get(key)
-      if (v == null) 0L else v.asInstanceOf[Number].longValue
-    }
-    val nBins = {
-      val v = m("packed").get("max_bin")
-      if (v == null) 0L else v.asInstanceOf[Number].longValue + 1
-    }
-    val spark = docs.sparkSession
-    import spark.implicits._
-    Seq((g("input", "n"), g("input", "chars"), g("nfc", "chars"),
-        g("c4", "chars"), g("bp", "chars"), g("pii", "chars"),
-        g("quality", "n"), g("quality", "chars"),
-        g("image", "n"), g("image", "chars"),
-        g("dedup", "n"), g("dedup", "chars"),
-        g("decon", "n"), g("decon", "chars"),
-        g("sample", "n"), g("sample", "tokens"),
-        nBins))
-      .toDF("n_docs", "chars_raw", "chars_nfc", "chars_c4", "chars_bp",
-        "chars_pii", "docs_quality", "chars_quality",
-        "docs_image", "chars_image",
-        "docs_dedup", "chars_dedup", "docs_decon", "chars_decon",
-        "docs_sampled", "tokens_sampled", "n_bins")
-      .select(col("*"),
-        when(col("chars_raw") > 0,
-          round(lit(1.0) - col("chars_bp").cast("double") / col("chars_raw"), 6))
-          .otherwise(lit(null).cast("double")).as("scrub_char_cut"),
-        when(col("n_docs") > 0,
-          round(lit(1.0) - col("docs_quality").cast("double") / col("n_docs"), 6))
-          .otherwise(lit(null).cast("double")).as("quality_doc_cut"),
-        when(col("docs_quality") > 0,
-          round(lit(1.0) - col("docs_image").cast("double") / col("docs_quality"), 6))
-          .otherwise(lit(null).cast("double")).as("image_doc_cut"),
-        when(col("docs_image") > 0,
-          round(lit(1.0) - col("docs_dedup").cast("double") / col("docs_image"), 6))
-          .otherwise(lit(null).cast("double")).as("dedup_doc_cut"))
-  }
-
-  /** The v4 (FULL-MULTIMODAL) ladder — [[pipelineV3]] with AUDIO and
-    * VIDEO keep-canonical cascaded after the image stage, so the ladder
-    * dedups every perceptual modality the ingest gate audits
-    * ([[graft.streaming.PretrainStream]]'s image/audio/video near-dup
-    * flags): a corpus built by this ladder and then policed by the gate
-    * applies ONE dedup standard. Same output shape. */
-  def pipelineV4(docs: DataFrame, gateWeights: Seq[Double],
-                 gateThreshold: Double = 0.2,
-                 benchPred: Column = col("source") === "src0",
-                 minLineWords: Int = 3, bpMinDf: Long = 3, bpMinLineChars: Int = 10,
-                 minLen: Int = 30, budgetTokens: Long = 20000L,
-                 windowSize: Long = 2048L): DataFrame =
-    build(docs, benchPred, minLineWords, bpMinDf, bpMinLineChars, minLen,
-      budgetTokens, windowSize, Some((gateWeights, gateThreshold)),
-      imageDedup = true, avDedup = true).packed
-
-  /** [[reportV3]] for the v4 ladder: four more survival columns
-    * (post-audio and post-video docs/chars) and the per-modality cut
-    * headlines; the text dedup cut reads against the video stage's
-    * output — its actual input. */
-  def reportV4(docs: DataFrame, gateWeights: Seq[Double],
-               gateThreshold: Double = 0.2,
-               benchPred: Column = col("source") === "src0",
-               minLineWords: Int = 3, bpMinDf: Long = 3, bpMinLineChars: Int = 10,
-               minLen: Int = 30, budgetTokens: Long = 20000L,
-               windowSize: Long = 2048L): DataFrame = {
-    val st = build(docs, benchPred, minLineWords, bpMinDf, bpMinLineChars,
-      minLen, budgetTokens, windowSize, Some((gateWeights, gateThreshold)),
-      imageDedup = true, avDedup = true)
-    st.packed.count()
-    val m = st.obs.toMap
-    def g(stage: String, key: String): Long = {
-      val v = m(stage).get(key)
-      if (v == null) 0L else v.asInstanceOf[Number].longValue
-    }
-    val nBins = {
-      val v = m("packed").get("max_bin")
-      if (v == null) 0L else v.asInstanceOf[Number].longValue + 1
-    }
-    val spark = docs.sparkSession
-    import spark.implicits._
-    Seq((g("input", "n"), g("input", "chars"), g("nfc", "chars"),
-        g("c4", "chars"), g("bp", "chars"), g("pii", "chars"),
-        g("quality", "n"), g("quality", "chars"),
-        g("image", "n"), g("image", "chars"),
-        g("audio", "n"), g("audio", "chars"),
-        g("video", "n"), g("video", "chars"),
-        g("dedup", "n"), g("dedup", "chars"),
-        g("decon", "n"), g("decon", "chars"),
-        g("sample", "n"), g("sample", "tokens"),
-        nBins))
-      .toDF("n_docs", "chars_raw", "chars_nfc", "chars_c4", "chars_bp",
-        "chars_pii", "docs_quality", "chars_quality",
-        "docs_image", "chars_image",
-        "docs_audio", "chars_audio",
-        "docs_video", "chars_video",
-        "docs_dedup", "chars_dedup", "docs_decon", "chars_decon",
-        "docs_sampled", "tokens_sampled", "n_bins")
-      .select(col("*"),
-        when(col("chars_raw") > 0,
-          round(lit(1.0) - col("chars_bp").cast("double") / col("chars_raw"), 6))
-          .otherwise(lit(null).cast("double")).as("scrub_char_cut"),
-        when(col("n_docs") > 0,
-          round(lit(1.0) - col("docs_quality").cast("double") / col("n_docs"), 6))
-          .otherwise(lit(null).cast("double")).as("quality_doc_cut"),
-        when(col("docs_quality") > 0,
-          round(lit(1.0) - col("docs_image").cast("double") / col("docs_quality"), 6))
-          .otherwise(lit(null).cast("double")).as("image_doc_cut"),
-        when(col("docs_image") > 0,
-          round(lit(1.0) - col("docs_audio").cast("double") / col("docs_image"), 6))
-          .otherwise(lit(null).cast("double")).as("audio_doc_cut"),
-        when(col("docs_audio") > 0,
-          round(lit(1.0) - col("docs_video").cast("double") / col("docs_audio"), 6))
-          .otherwise(lit(null).cast("double")).as("video_doc_cut"),
-        when(col("docs_video") > 0,
-          round(lit(1.0) - col("docs_dedup").cast("double") / col("docs_video"), 6))
-          .otherwise(lit(null).cast("double")).as("dedup_doc_cut"))
+    // the document-cutting stages before text dedup, in ladder order
+    val docStages = (if (gate.isDefined) Seq("quality") else Nil) ++ modalities.map(_.name)
+    val counts: Seq[(String, Long)] =
+      Seq("n_docs" -> g("input", "n"), "chars_raw" -> g("input", "chars"),
+        "chars_nfc" -> g("nfc", "chars"), "chars_c4" -> g("c4", "chars"),
+        "chars_bp" -> g("bp", "chars")) ++
+      (if (gate.isDefined) Seq("chars_pii" -> g("pii", "chars")) else Nil) ++
+      docStages.flatMap(s => Seq(s"docs_$s" -> g(s, "n"), s"chars_$s" -> g(s, "chars"))) ++
+      Seq("docs_dedup" -> g("dedup", "n"), "chars_dedup" -> g("dedup", "chars"),
+        "docs_decon" -> g("decon", "n"), "chars_decon" -> g("decon", "chars"),
+        "docs_sampled" -> g("sample", "n"), "tokens_sampled" -> g("sample", "tokens"),
+        "n_bins" -> nBins)
+    // ratio denominators guard the degenerate empty-input case
+    // explicitly (NULL, mirrored by the oracle's CASE) rather than
+    // relying on either engine's divide-by-zero convention
+    def cutOf(name: String, survivors: String, input: String): Column =
+      when(col(input) > 0,
+        round(lit(1.0) - col(survivors).cast("double") / col(input), 6))
+        .otherwise(lit(null).cast("double")).as(name)
+    val cutStages = docStages :+ "dedup"
+    val cutInputs = "n_docs" +: docStages.map(s => s"docs_$s")
+    val row = docs.sparkSession.createDataFrame(
+      java.util.List.of(Row.fromSeq(counts.map(_._2))),
+      StructType(counts.map { case (n, _) => StructField(n, LongType, nullable = false) }))
+    row.select(col("*") +: cutOf("scrub_char_cut", "chars_bp", "chars_raw") +:
+      cutStages.zip(cutInputs).map { case (s, in) => cutOf(s"${s}_doc_cut", s"docs_$s", in) }: _*)
   }
 }

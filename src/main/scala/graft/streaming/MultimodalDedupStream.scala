@@ -4,21 +4,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.dedup.Dedup
-import graft.multimodal.Multimodal
+import graft.multimodal.Modality
 
-/** The perceptual image/audio dedup indexes
-  * ([[graft.dedup.Dedup.writeImagePhashIndex]] /
-  * [[graft.dedup.Dedup.writeAudioFpIndex]]) deployed as CONTINUOUS
+/** The perceptual image/audio/video dedup indexes
+  * ([[graft.dedup.Dedup.writeFingerprintIndex]]) deployed as CONTINUOUS
   * ingest — the production shape of a multimodal crawl, which lands
   * shards around the clock rather than in one batch rebuild. Two jobs
-  * per modality, composing the same shipped parts the batch queries
+  * per [[Modality]], composing the same shipped parts the batch queries
   * prove:
   *
-  *  - '''gate''': every arriving shard fingerprints (the narrow
-  *    partition-parallel decode of [[Multimodal.imagePhash]] /
-  *    [[Multimodal.audioFingerprint]] — zero shuffle, never re-decoding
-  *    anything already ingested) and band-joins against the STATIC
-  *    persisted fingerprint index via
+  *  - '''gate''': every arriving shard fingerprints (the modality's
+  *    narrow partition-parallel decode, [[Modality.fingerprints]] — zero
+  *    shuffle, never re-decoding anything already ingested) and
+  *    band-joins against the STATIC persisted fingerprint index via
   *    [[Dedup.hammingMatchesAgainst]], flagging near-duplicate arrivals
   *    with their best index match before they enter the corpus. The
   *    index side is a plain DIRECTORY re-read per micro-batch (the
@@ -37,68 +35,34 @@ import graft.multimodal.Multimodal
   * per-entity-atomic with zero streaming state — no watermark, no store. */
 object MultimodalDedupStream {
 
-  /** One micro-batch of the image gate — THE SAME algebra as the batch
-    * registry query (`dedup_image_stream_gate`), so stream and batch
-    * cannot drift. */
-  def gateImageBatch(batch: DataFrame, index: DataFrame,
-                     maxHamming: Int = 3): DataFrame =
-    Dedup.hammingMatchesAgainst(
-      Multimodal.imagePhash(batch).toDF()
-        .filter(col("valid")).select(col("doc_id"), col("phash")),
-      index, "phash", maxHamming)
+  /** One micro-batch of the modality's gate against the raw
+    * (doc_id, fpCol) index — THE SAME algebra as the batch registry
+    * queries (`dedup_<modality>_stream_gate`), so stream and batch cannot
+    * drift. */
+  def gateBatch(m: Modality, batch: DataFrame, index: DataFrame,
+                maxHamming: Int = 3): DataFrame =
+    Dedup.hammingMatchesAgainst(m.fingerprints(batch), index, m.fpCol, maxHamming)
 
-  /** One micro-batch of the audio gate (mirror of [[gateImageBatch]]). */
-  def gateAudioBatch(batch: DataFrame, index: DataFrame,
-                     maxHamming: Int = 3): DataFrame =
-    Dedup.hammingMatchesAgainst(
-      Multimodal.audioFingerprint(batch).toDF()
-        .filter(col("valid")).select(col("doc_id"), col("afp")),
-      index, "afp", maxHamming)
-
-  /** One micro-batch of the video gate (mirror of [[gateImageBatch]] for
-    * the frame-sequence modality). */
-  def gateVideoBatch(batch: DataFrame, index: DataFrame,
-                     maxHamming: Int = 3): DataFrame =
-    Dedup.hammingMatchesAgainst(
-      Multimodal.videoFingerprint(batch).toDF()
-        .filter(col("valid")).select(col("doc_id"), col("vfp")),
-      index, "vfp", maxHamming)
-
-  /** [[gateImageBatch]] served from the PRE-BANDED index table
-    * ([[Dedup.writeImagePhashIndex]]'s `.../image_phash_banded`,
+  /** [[gateBatch]] served from the PRE-BANDED index table
+    * ([[Dedup.writeFingerprintIndex]]'s `.../<table>_banded`,
     * [[Dedup.bandedFpIndex]]'s shape): the index-side rep groupBy and
     * hot-bucket cap were paid once at index build, so the per-batch plan
     * is the arrivals' narrow fingerprint map + band explode + one
     * equi-join. Same match output as the raw-index path (DedupSpec pins
-    * equality; the registry oracle re-proves it per query). */
-  def gateImageBatchIndexed(batch: DataFrame, bandedIdx: DataFrame,
-                            maxHamming: Int = 3): DataFrame =
-    Dedup.hammingMatchesAgainstBanded(
-      Multimodal.imagePhash(batch).toDF()
-        .filter(col("valid")).select(col("doc_id"), col("phash")),
-      bandedIdx, "phash", maxHamming)
+    * equality for every modality; the registry oracle re-proves it per
+    * query). */
+  def gateBatchIndexed(m: Modality, batch: DataFrame, bandedIdx: DataFrame,
+                       maxHamming: Int = 3): DataFrame =
+    Dedup.hammingMatchesAgainstBanded(m.fingerprints(batch), bandedIdx, m.fpCol, maxHamming)
 
-  /** [[gateAudioBatch]] over the pre-banded `.../audio_fp_banded` table
-    * (mirror of [[gateImageBatchIndexed]]). */
-  def gateAudioBatchIndexed(batch: DataFrame, bandedIdx: DataFrame,
-                            maxHamming: Int = 3): DataFrame =
-    Dedup.hammingMatchesAgainstBanded(
-      Multimodal.audioFingerprint(batch).toDF()
-        .filter(col("valid")).select(col("doc_id"), col("afp")),
-      bandedIdx, "afp", maxHamming)
-
-  /** [[gateVideoBatch]] over the pre-banded `.../video_fp_banded` table
-    * (mirror of [[gateImageBatchIndexed]]). */
-  def gateVideoBatchIndexed(batch: DataFrame, bandedIdx: DataFrame,
-                            maxHamming: Int = 3): DataFrame =
-    Dedup.hammingMatchesAgainstBanded(
-      Multimodal.videoFingerprint(batch).toDF()
-        .filter(col("valid")).select(col("doc_id"), col("vfp")),
-      bandedIdx, "vfp", maxHamming)
-
-  private def gate(stream: DataFrame, indexDir: String, outDir: String,
-                   checkpoint: String, maxHamming: Int,
-                   batchFn: (DataFrame, DataFrame, Int) => DataFrame): StreamingQuery =
+  /** Start the modality's ingest gate: arriving shards are flagged
+    * against the static fingerprint index at `indexDir` (the
+    * [[Dedup.writeFingerprintIndex]] `.../<table>` table), per-doc match
+    * reports appending idempotently under `outDir`. Clean documents
+    * produce no row — the downstream corpus writer anti-joins this
+    * table. */
+  def gate(m: Modality, stream: DataFrame, indexDir: String, outDir: String,
+           checkpoint: String, maxHamming: Int = 3): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -106,7 +70,7 @@ object MultimodalDedupStream {
         // index refresh can bite between the directory listing and the
         // scan (the DeconStream rationale)
         graft.sources.Sinks.readRetry(attempts = 2) {
-          batchFn(batch, batch.sparkSession.read.parquet(indexDir), maxHamming)
+          gateBatch(m, batch, batch.sparkSession.read.parquet(indexDir), maxHamming)
             .withColumn("ingest_batch", lit(batchId))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -116,70 +80,28 @@ object MultimodalDedupStream {
       }
       .start()
 
-  /** Start the image ingest gate: arriving shards are flagged against
-    * the static phash index at `indexDir` (the
-    * [[Dedup.writeImagePhashIndex]] `.../image_phash` table), per-doc
-    * match reports appending idempotently under `outDir`. Clean
-    * documents produce no row — the downstream corpus writer anti-joins
-    * this table. */
-  def gateImage(stream: DataFrame, indexDir: String, outDir: String,
-                checkpoint: String, maxHamming: Int = 3): StreamingQuery =
-    gate(stream, indexDir, outDir, checkpoint, maxHamming, gateImageBatch)
-
-  /** Start the audio ingest gate (mirror of [[gateImage]] over the
-    * [[Dedup.writeAudioFpIndex]] `.../audio_fp` table). */
-  def gateAudio(stream: DataFrame, indexDir: String, outDir: String,
-                checkpoint: String, maxHamming: Int = 3): StreamingQuery =
-    gate(stream, indexDir, outDir, checkpoint, maxHamming, gateAudioBatch)
-
-  /** Start the video ingest gate (mirror of [[gateImage]] over the
-    * [[Dedup.writeVideoFpIndex]] `.../video_fp` table). */
-  def gateVideo(stream: DataFrame, indexDir: String, outDir: String,
-                checkpoint: String, maxHamming: Int = 3): StreamingQuery =
-    gate(stream, indexDir, outDir, checkpoint, maxHamming, gateVideoBatch)
-
-  private def ingest(stream: DataFrame, dir: String, checkpoint: String,
-                     fps: DataFrame => DataFrame): StreamingQuery =
+  /** Start continuous index maintenance for the modality: each
+    * micro-batch appends ONLY the new shard's (doc_id, fpCol) rows under
+    * `indexDir/<table>` — the existing corpus is never re-decoded (the
+    * fingerprint is a pure per-document function of the payload bytes). */
+  def ingest(m: Modality, stream: DataFrame, indexDir: String,
+             checkpoint: String): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        fps(batch)
+        m.fingerprints(batch)
           .withColumn("ingest_batch", lit(batchId))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("ingest_batch")
-          .parquet(dir)
+          .parquet(s"$indexDir/${m.table}")
       }
       .start()
 
-  /** Start continuous image-index maintenance: each micro-batch appends
-    * ONLY the new shard's (doc_id, phash) rows — the existing corpus is
-    * never re-decoded (the fingerprint is a pure per-document function
-    * of the payload bytes). */
-  def ingestImage(stream: DataFrame, indexDir: String,
-                  checkpoint: String): StreamingQuery =
-    ingest(stream, s"$indexDir/image_phash", checkpoint,
-      b => Multimodal.imagePhash(b).toDF()
-        .filter(col("valid")).select(col("doc_id"), col("phash")))
-
-  /** Start continuous audio-index maintenance (mirror of [[ingestImage]]). */
-  def ingestAudio(stream: DataFrame, indexDir: String,
-                  checkpoint: String): StreamingQuery =
-    ingest(stream, s"$indexDir/audio_fp", checkpoint,
-      b => Multimodal.audioFingerprint(b).toDF()
-        .filter(col("valid")).select(col("doc_id"), col("afp")))
-
-  /** Start continuous video-index maintenance (mirror of [[ingestImage]]). */
-  def ingestVideo(stream: DataFrame, indexDir: String,
-                  checkpoint: String): StreamingQuery =
-    ingest(stream, s"$indexDir/video_fp", checkpoint,
-      b => Multimodal.videoFingerprint(b).toDF()
-        .filter(col("valid")).select(col("doc_id"), col("vfp")))
-
   /** The live streamed index table (ingest partition column dropped —
     * serve plans see the exact batch-index schema and can feed
-    * [[Dedup.imagePhashPairsFrom]] / [[Dedup.audioFingerprintPairsFrom]]
-    * / [[Dedup.hammingMatchesAgainst]] unchanged). */
+    * [[Dedup.fingerprintPairsFrom]] / [[Dedup.hammingMatchesAgainst]]
+    * unchanged). */
   def fps(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(dir).drop("ingest_batch")
 

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.dedup.Dedup
+import graft.multimodal.Modality
+import graft.pipelines.PretrainCorpus.{BpMinDf, BpMinLineChars, MinLen, MinLineWords}
 import graft.text.{QualityClassifier, TextAnalysis, TextNormalize}
 
 /** The pretrain ladder's GATE HALF deployed as a continuous ingest job —
@@ -21,9 +23,9 @@ import graft.text.{QualityClassifier, TextAnalysis, TextNormalize}
   *   4. the near-duplicate flag against the persisted minhash index
   *      ([[Dedup.jaccardMatchesAgainst]] — arrivals fingerprint once,
   *      nothing indexed is re-shingled);
-  *   5. the three MULTIMODAL near-duplicate flags — the arrival's
-  *      image/audio/video payloads fingerprint once (narrow maps) and
-  *      band-join their persisted fingerprint indexes
+  *   5. one MULTIMODAL near-duplicate flag per [[Modality]] — the
+  *      arrival's image/audio/video payloads fingerprint once (narrow
+  *      maps) and band-join their persisted fingerprint indexes
   *      ([[MultimodalDedupStream]]'s gate algebra), so one audit row
   *      carries every modality's verdict;
   *   6. the SEMANTIC decontamination flag against the persisted
@@ -70,12 +72,11 @@ object PretrainStream {
     * names extra input columns to carry through (the gate rides the
     * arrival's declared `lang` through the chain this way — a column
     * dropped here would need a doc_id join-back later). */
-  def nfcC4(docs: DataFrame, minLineWords: Int = 3,
-            keep: Seq[String] = Nil): DataFrame =
+  def nfcC4(docs: DataFrame, keep: Seq[String] = Nil): DataFrame =
     docs.select(col("doc_id") +: col("source") +: keep.map(col) :+
       array_join(
         TextAnalysis.c4KeptLines(
-          split(TextNormalize.normalizeText(col("text")), "\n"), minLineWords),
+          split(TextNormalize.normalizeText(col("text")), "\n"), MinLineWords),
         "\n").as("text"): _*)
 
   /** Boilerplate-line filter over a post-C4 relation — the ladder's
@@ -101,13 +102,6 @@ object PretrainStream {
   def piiClean(df: DataFrame, keep: Seq[String] = Nil): DataFrame =
     df.select(col("doc_id") +: col("source") +: keep.map(col) :+
       TextAnalysis.scrub(col("text")).as("text"): _*)
-
-  /** The full row-local cleaning chain of the pretrain ladder — NFC →
-    * C4 → persisted-boilerplate filter → PII, the ladder's stage order
-    * with the one corpus-global stage index-served. */
-  def cleanChain(docs: DataFrame, blLines: DataFrame,
-                 minLineWords: Int = 3, keep: Seq[String] = Nil): DataFrame =
-    piiClean(applyBoilerplate(nfcC4(docs, minLineWords, keep), blLines, keep), keep)
 
   /** One micro-batch's gate decisions — one row PER ARRIVAL:
     * (doc_id, source, score, quality_pass, decon_flag, dup_flag,
@@ -148,37 +142,22 @@ object PretrainStream {
     * text — the representation the ladder's own gate and dedup stages
     * read. THE SAME algebra as the batch registry query
     * (`pipeline_ingest_gate`), so stream and batch cannot drift.
+    * `fpIdx` gives each [[Modality]]'s PRE-BANDED persisted index (the
+    * [[graft.dedup.Dedup.writeFingerprintIndex]] `<table>_banded`
+    * artifact); the audit row carries one `<modality>_dup_flag` /
+    * `_match_id` / `_hamming` triple per [[Modality.all]] entry, the same
+    * list the full-multimodal ladder dedups, so the corpus BUILDER and the
+    * corpus POLICE cannot drift apart.
+    *
     * Returns a persisted (shard-sized) frame; caller unpersists. */
-  /** The perceptual modalities the ingest gate audits (one
-    * `<modality>_dup_flag` / `_match_id` / `_hamming` triple each in the
-    * [[gateBatch]] audit row). The v4 batch ladder
-    * ([[graft.pipelines.PretrainCorpus.pipelineV4]]) dedups exactly this
-    * set — StreamingSpec pins the gate's audit schema to this constant
-    * and PipelineOpsSpec pins the v4 report's stage columns to it, so the
-    * corpus BUILDER and the corpus POLICE can't drift apart again (the
-    * r17 verdict's modality asymmetry). */
-  val PerceptualModalities: Seq[String] = Seq("image", "audio", "video")
-
-  /** Dev-only gate component timing (SPARK_GRAFT_STAGE_TIMES=1): forces
-    * a count per gate frame to attribute the one-action execution —
-    * measurement only, never on in a bench/driver run. */
-  private val stageTimes = sys.env.contains("SPARK_GRAFT_STAGE_TIMES")
-  private def timedCount(name: String, df: DataFrame): Unit =
-    if (stageTimes) {
-      val t0 = System.nanoTime()
-      val n = df.count()
-      println(f"GATE_STAGE $name%-10s ${(System.nanoTime() - t0) / 1e9}%7.2f s  rows=$n")
-    }
-
   def gateBatch(batch: DataFrame, payloads: DataFrame, w: Seq[Double], thr: Double,
                 langModel: graft.text.LangIdClassifier.LangIdModel,
                 blLines: DataFrame, benchAnchors: DataFrame, benchDocs: DataFrame,
                 indexBuckets: DataFrame, indexSets: DataFrame,
-                imagePhashIdx: DataFrame, audioFpIdx: DataFrame, videoFpIdx: DataFrame,
+                fpIdx: Modality => DataFrame,
                 arrEmb: DataFrame, semBench: DataFrame,
                 semCents: Seq[(Int, Array[Double])],
                 semKept: DataFrame, semDupCents: Seq[(Int, Array[Double])],
-                minLineWords: Int = 3, minLen: Int = 30,
                 anchorK: Int = 24, anchorW: Int = 7,
                 k: Int = 3, numHashes: Int = 16,
                 bands: Int = 4, rowsPerBand: Int = 4,
@@ -186,13 +165,11 @@ object PretrainStream {
                 semMinCos: Double = 0.4, semDupMinCos: Double = 0.4): DataFrame = {
     // the arrival's declared `lang` rides the clean chain (keep param) so
     // the language gate never join-backs a column the chain held
-    val preScrub = applyBoilerplate(nfcC4(batch, minLineWords, keep = Seq("lang")),
+    val preScrub = applyBoilerplate(nfcC4(batch, keep = Seq("lang")),
         blLines, keep = Seq("lang"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cleaned = piiClean(preScrub, keep = Seq("lang"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    timedCount("preScrub", preScrub)
-    timedCount("cleaned", cleaned)
     // Intermediates release in a finally so a failed (and later retried)
     // micro-batch never strands MEMORY_AND_DISK caches in a long-running
     // stream — each retry starts from a clean executor cache.
@@ -213,30 +190,21 @@ object PretrainStream {
           // propagate null into keep
           coalesce((col("lang_pred") === col("lang")).cast("int"), lit(0))
             .as("lang_ok"))
-      timedCount("scored", scored)
-      timedCount("langRep", langRep)
       deconRep = Dedup.decontaminateSubstringAgainst(
-        preScrub.select("doc_id", "text"), benchAnchors, benchDocs, minLen, anchorK, anchorW)
-      timedCount("deconRep", deconRep)
+        preScrub.select("doc_id", "text"), benchAnchors, benchDocs, MinLen, anchorK, anchorW)
       dupRep = Dedup.jaccardMatchesAgainstBanded(
         cleaned.select("doc_id", "text"), indexBuckets, indexSets,
         k, numHashes, bands, rowsPerBand, dupThreshold)
-      timedCount("dupRep", dupRep)
       // modality gates: fingerprint the arrivals' payload side once each
       // (narrow maps), band-join the PRE-BANDED persisted indexes (the
       // `<table>_banded` artifacts — the index-side rep groupBy + hot-
       // bucket window were paid once at index build, not per batch) —
       // report-sized match frames, lazily composed, AQE broadcasts them
       // against the shard-sized audit
-      def mm(rep: DataFrame, p: String): DataFrame =
-        rep.select(col("doc_id"), lit(1).as(s"${p}_dup_flag"),
-          col("match_id").as(s"${p}_match_id"), col("hamming").as(s"${p}_hamming"))
-      val imgRep = mm(MultimodalDedupStream.gateImageBatchIndexed(payloads, imagePhashIdx, maxHamming), "image")
-      val audRep = mm(MultimodalDedupStream.gateAudioBatchIndexed(payloads, audioFpIdx, maxHamming), "audio")
-      val vidRep = mm(MultimodalDedupStream.gateVideoBatchIndexed(payloads, videoFpIdx, maxHamming), "video")
-      timedCount("imgRep", imgRep)
-      timedCount("audRep", audRep)
-      timedCount("vidRep", vidRep)
+      val mmReps = Modality.all.map(m =>
+        MultimodalDedupStream.gateBatchIndexed(m, payloads, fpIdx(m), maxHamming)
+          .select(col("doc_id"), lit(1).as(s"${m.name}_dup_flag"),
+            col("match_id").as(s"${m.name}_match_id"), col("hamming").as(s"${m.name}_hamming")))
       // SEMANTIC decontamination gate ([[SemanticDeconStream]]'s algebra
       // composed into the audit row): the arrival's embedding — `arrEmb`
       // is the record's (vec_id = doc_id, embedding) side, ridden the
@@ -259,42 +227,34 @@ object PretrainStream {
         .semanticMatchesAgainst(arrEmb, semKept, semDupCents, semDupMinCos)
         .select(col("vec_id").as("doc_id"), lit(1).as("sem_dup_flag"),
           col("match_id").as("sem_dup_match_id"), col("cos").as("sem_dup_cos"))
-      timedCount("semRep", semRep)
-      timedCount("semDupRep", semDupRep)
-      val out = scored
+      val textFlags = scored
         .join(deconRep.select(col("doc_id")).distinct()
           .withColumn("decon_flag", lit(1)), Seq("doc_id"), "left")
         .join(dupRep.select(col("doc_id"), col("match_id").as("dup_match_id"),
             col("jaccard").as("dup_jaccard"))
           .withColumn("dup_flag", lit(1)), Seq("doc_id"), "left")
-        .join(imgRep, Seq("doc_id"), "left")
-        .join(audRep, Seq("doc_id"), "left")
-        .join(vidRep, Seq("doc_id"), "left")
+      val out = mmReps.foldLeft(textFlags)(_.join(_, Seq("doc_id"), "left"))
         .join(semRep, Seq("doc_id"), "left")
         .join(semDupRep, Seq("doc_id"), "left")
         .join(langRep, Seq("doc_id"))
-        .select(col("doc_id"), col("source"), col("score"),
+        .select(Seq(col("doc_id"), col("source"), col("score"),
           when(col("score") >= thr, 1).otherwise(0).as("quality_pass"),
           coalesce(col("decon_flag"), lit(0)).as("decon_flag"),
           coalesce(col("dup_flag"), lit(0)).as("dup_flag"),
-          col("dup_match_id"), col("dup_jaccard"),
-          coalesce(col("image_dup_flag"), lit(0)).as("image_dup_flag"),
-          col("image_match_id"), col("image_hamming"),
-          coalesce(col("audio_dup_flag"), lit(0)).as("audio_dup_flag"),
-          col("audio_match_id"), col("audio_hamming"),
-          coalesce(col("video_dup_flag"), lit(0)).as("video_dup_flag"),
-          col("video_match_id"), col("video_hamming"),
-          coalesce(col("sem_decon_flag"), lit(0)).as("sem_decon_flag"),
-          col("sem_match_id"), col("sem_cos"),
-          coalesce(col("sem_dup_flag"), lit(0)).as("sem_dup_flag"),
-          col("sem_dup_match_id"), col("sem_dup_cos"),
-          col("lang_pred"), col("lang_ok"))
+          col("dup_match_id"), col("dup_jaccard")) ++
+          Modality.all.flatMap(m => Seq(
+            coalesce(col(s"${m.name}_dup_flag"), lit(0)).as(s"${m.name}_dup_flag"),
+            col(s"${m.name}_match_id"), col(s"${m.name}_hamming"))) ++
+          Seq(coalesce(col("sem_decon_flag"), lit(0)).as("sem_decon_flag"),
+            col("sem_match_id"), col("sem_cos"),
+            coalesce(col("sem_dup_flag"), lit(0)).as("sem_dup_flag"),
+            col("sem_dup_match_id"), col("sem_dup_cos"),
+            col("lang_pred"), col("lang_ok")): _*)
         .withColumn("keep",
-          (col("quality_pass") === 1 && col("decon_flag") === 0 &&
-            col("dup_flag") === 0 && col("image_dup_flag") === 0 &&
-            col("audio_dup_flag") === 0 && col("video_dup_flag") === 0 &&
-            col("sem_decon_flag") === 0 && col("sem_dup_flag") === 0 &&
-            col("lang_ok") === 1).cast("int"))
+          (Seq(col("quality_pass") === 1, col("decon_flag") === 0, col("dup_flag") === 0) ++
+            Modality.all.map(m => col(s"${m.name}_dup_flag") === 0) ++
+            Seq(col("sem_decon_flag") === 0, col("sem_dup_flag") === 0, col("lang_ok") === 1))
+            .reduce(_ && _).cast("int"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try { out.count(); out }
       catch { case t: Throwable => out.unpersist(); throw t }
@@ -306,8 +266,8 @@ object PretrainStream {
   }
 
   /** Build the full gate index under `dir` from the raw page table:
-    * `/boilerplate` — trimmed post-C4 lines (≥ `bpMinLineChars` chars)
-    * with per-doc-distinct df ≥ `bpMinDf` over the admitted corpus +
+    * `/boilerplate` — trimmed post-C4 lines (≥ `BpMinLineChars` chars)
+    * with per-doc-distinct df ≥ `BpMinDf` over the admitted corpus +
     * benchmark (the batch side owns the corpus-frequency computation;
     * the gate only applies the list); `/dedup` — minhash signatures,
     * the PRE-BANDED pre-capped bucket table (`minhash_buckets`, the
@@ -320,20 +280,18 @@ object PretrainStream {
   def writeGateIndex(pages: DataFrame, dir: String,
                      benchPred: org.apache.spark.sql.Column,
                      corpusPred: org.apache.spark.sql.Column,
-                     minLineWords: Int = 3, bpMinDf: Long = 3,
-                     bpMinLineChars: Int = 10,
                      anchorK: Int = 24, anchorW: Int = 7,
                      k: Int = 3, numHashes: Int = 16): Unit = {
-    val base = nfcC4(pages, minLineWords)
+    val base = nfcC4(pages)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     graft.sources.Sinks.publishSwap(s"$dir/boilerplate") { staging =>
       base.filter(corpusPred || benchPred)
         .select(col("doc_id"), explode(split(col("text"), "\n")).as("raw"))
         .select(col("doc_id"), trim(col("raw")).as("line"))
-        .filter(length(col("line")) >= bpMinLineChars)
+        .filter(length(col("line")) >= BpMinLineChars)
         .distinct()
         .groupBy("line").agg(count(lit(1)).as("df"))
-        .filter(col("df") >= bpMinDf)
+        .filter(col("df") >= BpMinDf)
         .select("line")
         .coalesce(1).write.mode("overwrite").parquet(staging)
     }
@@ -379,11 +337,11 @@ object PretrainStream {
     * [[graft.dedup.Dedup.writeDedupIndex]]-shaped corpus index under
     * `/dedup` plus the `/boilerplate` line table and the benchmark
     * `/anchors` + `/bench` tables; `modelDir` holds the classifier's
-    * one-row weight table; the three modality dirs are the persisted
-    * PRE-BANDED fingerprint tables
-    * ([[graft.dedup.Dedup.writeImagePhashIndex]]'s
-    * `.../image_phash_banded` and its audio/video twins — the serve
-    * shape whose index-side prep was paid at build); `semIdxDir` is the
+    * one-row weight table; `fpIdxDir` gives each [[Modality]]'s
+    * persisted PRE-BANDED fingerprint table
+    * ([[graft.dedup.Dedup.writeFingerprintIndex]]'s `.../<table>_banded`
+    * — the serve shape whose index-side prep was paid at build);
+    * `semIdxDir` is the
     * [[graft.dedup.Dedup.writeSemanticDeconIndex]] benchmark index
     * (`.../centroids` + `.../bench` — the same publishSwap artifact the
     * batch `decontaminate_semantic_indexed` serves); `semGateIdxDir`
@@ -393,10 +351,9 @@ object PretrainStream {
     * happen per micro-batch so a publishSwap refresh never kills the
     * query. */
   def gate(stream: DataFrame, modelDir: String, langModelDir: String, thr: Double,
-           gateIndexDir: String, imageIdxDir: String, audioIdxDir: String,
-           videoIdxDir: String, semIdxDir: String, semGateIdxDir: String,
+           gateIndexDir: String, fpIdxDir: Modality => String,
+           semIdxDir: String, semGateIdxDir: String,
            outDir: String, checkpoint: String,
-           minLineWords: Int = 3, minLen: Int = 30,
            dupThreshold: Double = 0.5, maxHamming: Int = 3,
            semMinCos: Double = 0.4, semDupMinCos: Double = 0.4): StreamingQuery =
     stream.writeStream
@@ -425,13 +382,11 @@ object PretrainStream {
             s.read.parquet(s"$gateIndexDir/bench"),
             s.read.parquet(s"$gateIndexDir/dedup/minhash_buckets"),
             s.read.parquet(s"$gateIndexDir/dedup/shingle_sets"),
-            s.read.parquet(imageIdxDir),
-            s.read.parquet(audioIdxDir),
-            s.read.parquet(videoIdxDir),
+            m => s.read.parquet(fpIdxDir(m)),
             batch.select(col("doc_id").as("vec_id"), col("embedding")),
             s.read.parquet(s"$semIdxDir/bench"), semCents,
             s.read.parquet(s"$semGateIdxDir/kept"), semDupCents,
-            minLineWords, minLen, dupThreshold = dupThreshold,
+            dupThreshold = dupThreshold,
             maxHamming = maxHamming, semMinCos = semMinCos,
             semDupMinCos = semDupMinCos)
           // finally-release: a failed write attempt must not strand the

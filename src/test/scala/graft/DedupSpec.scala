@@ -173,7 +173,7 @@ class DedupSpec extends SparkSpec {
     // (any pair within hamming 3 shares at least one of the 4 bands)
     val expected = guardedPairsTruth(fp, 3)
     assert(expected.get((1L, 16L)).contains(0L), "identical planes attach as a star edge")
-    val got = Dedup.imagePhashPairs(imgs, maxHamming = 3).collect()
+    val got = Dedup.fingerprintPairs(graft.multimodal.Modality.Image, imgs, maxHamming = 3).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(got == expected, s"banded pairs must equal guarded truth: got=$got expected=$expected")
     // malformed payloads route to valid=false (never pair, never throw)
@@ -199,26 +199,26 @@ class DedupSpec extends SparkSpec {
       (2L, "some other even-id filler document content here")
     ).map { case (i, t) => (i, t, "en") }.toDF("doc_id", "text", "lang")
     def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1), r.getLong(2))
-    val direct = Dedup.imagePhashPairs(imgs, maxHamming = 3).collect().map(key).toSet
+    val direct = Dedup.fingerprintPairs(graft.multimodal.Modality.Image, imgs, maxHamming = 3).collect().map(key).toSet
     assert(direct.nonEmpty)
     val dir = java.nio.file.Files.createTempDirectory("graft-phash-spec").toString
-    Dedup.writeImagePhashIndex(imgs, dir)
+    Dedup.writeFingerprintIndex(graft.multimodal.Modality.Image, imgs, dir)
     val idx = spark.read.parquet(s"$dir/image_phash")
-    val served = Dedup.imagePhashPairsFrom(idx, maxHamming = 3).collect().map(key).toSet
+    val served = Dedup.fingerprintPairsFrom(graft.multimodal.Modality.Image, idx, maxHamming = 3).collect().map(key).toSet
     assert(served == direct, "index serve must equal the direct path")
     // serve plan reads ONLY the index parquet — never re-decodes payloads
-    val p = Dedup.imagePhashPairsFrom(idx, maxHamming = 3).queryExecution.executedPlan.toString
+    val p = Dedup.fingerprintPairsFrom(graft.multimodal.Modality.Image, idx, maxHamming = 3).queryExecution.executedPlan.toString
     assert(p.contains("graft-phash-spec"), s"serve plan must scan the index:\n$p")
     assert(!p.toLowerCase.contains("mappartitions") && !p.contains("SerializeFromObject"),
       s"serve plan must not re-run the payload decode:\n$p")
     // incremental: even-half index + fresh odd-half hashes = full rebuild
     val evenDir = java.nio.file.Files.createTempDirectory("graft-phash-even").toString
-    Dedup.writeImagePhashIndex(imgs.filter(pmod(col("doc_id"), lit(2L)) === 0), evenDir)
+    Dedup.writeFingerprintIndex(graft.multimodal.Modality.Image, imgs.filter(pmod(col("doc_id"), lit(2L)) === 0), evenDir)
     val merged = spark.read.parquet(s"$evenDir/image_phash").unionByName(
       graft.multimodal.Multimodal.imagePhash(
           imgs.filter(pmod(col("doc_id"), lit(2L)) === 1)).toDF()
         .filter(col("valid")).select(col("doc_id"), col("phash")))
-    val incr = Dedup.imagePhashPairsFrom(merged, maxHamming = 3).collect().map(key).toSet
+    val incr = Dedup.fingerprintPairsFrom(graft.multimodal.Modality.Image, merged, maxHamming = 3).collect().map(key).toSet
     assert(incr == direct, "incremental ingest must equal the from-scratch rebuild")
   }
 
@@ -236,12 +236,12 @@ class DedupSpec extends SparkSpec {
     val fresh = Seq((31L, base.updated(5, 'Z'), "en"), (7L, "nothing alike at all ###", "en"))
       .toDF("doc_id", "text", "lang")
     val dir = java.nio.file.Files.createTempDirectory("graft-banded-spec").toString
-    Dedup.writeImagePhashIndex(imgs, dir)
+    Dedup.writeFingerprintIndex(graft.multimodal.Modality.Image, imgs, dir)
     def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1), r.getLong(2))
-    val raw = graft.streaming.MultimodalDedupStream.gateImageBatch(
+    val raw = graft.streaming.MultimodalDedupStream.gateBatch(graft.multimodal.Modality.Image,
       fresh, spark.read.parquet(s"$dir/image_phash"), maxHamming = 3)
       .collect().map(key).toSet
-    val banded = graft.streaming.MultimodalDedupStream.gateImageBatchIndexed(
+    val banded = graft.streaming.MultimodalDedupStream.gateBatchIndexed(graft.multimodal.Modality.Image,
       fresh, spark.read.parquet(s"$dir/image_phash_banded"), maxHamming = 3)
       .collect().map(key).toSet
     assert(raw == banded && banded.nonEmpty,
@@ -267,6 +267,52 @@ class DedupSpec extends SparkSpec {
     assert(rawCap == preCap, s"cap parity: raw=$rawCap pre=$preCap")
   }
 
+  test("every modality: served and incremental pairs equal direct pairs; raw-index gate equals pre-banded gate") {
+    import graft.multimodal.Modality
+    import graft.streaming.MultimodalDedupStream
+    val docs = graft.collocations.Collocations.documents(spark, "/root/testdata/sf0.001")
+    val even = docs.filter(pmod(col("doc_id"), lit(2L)) === 0)
+    val odd = docs.filter(pmod(col("doc_id"), lit(2L)) === 1)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
+      try df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      finally df.unpersist()
+    for (m <- Modality.all) {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-${m.name}-fp-all")
+      val evenDir = java.nio.file.Files.createTempDirectory(s"graft-${m.name}-fp-even")
+      Dedup.writeFingerprintIndex(m, docs, dir.toString)
+      Dedup.writeFingerprintIndex(m, even, evenDir.toString)
+      val direct = rows(Dedup.fingerprintPairs(m, docs, maxHamming = 3))
+      assert(direct.nonEmpty, s"$m: the sf0.001 corpus has near-dup payloads; empty = broken join")
+      val served = rows(Dedup.fingerprintPairsFrom(m,
+        spark.read.parquet(s"$dir/${m.table}"), maxHamming = 3))
+      assert(served == direct, s"$m: index serve must equal the direct path")
+      val incr = rows(Dedup.fingerprintPairsFrom(m,
+        spark.read.parquet(s"$evenDir/${m.table}").unionByName(m.fingerprints(odd)), maxHamming = 3))
+      assert(incr == direct, s"$m: even-half index + odd-half fingerprints must equal the rebuild")
+      val raw = rows(MultimodalDedupStream.gateBatch(m, odd,
+        spark.read.parquet(s"$evenDir/${m.table}"), maxHamming = 3))
+      val banded = rows(MultimodalDedupStream.gateBatchIndexed(m, odd,
+        spark.read.parquet(s"$evenDir/${m.bandedTable}"), maxHamming = 3))
+      assert(raw == banded && banded.nonEmpty,
+        s"$m: pre-banded gate must equal the raw-index gate: raw=$raw banded=$banded")
+      Seq(dir, evenDir).foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(d.toFile))
+    }
+  }
+
+  test("hamming band join releases its caches when the fingerprint fails at runtime") {
+    spark.sharedState.cacheManager.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // a range, not a local Seq: a projection over a LocalRelation would be
+    // folded (and raise) at optimization time, before anything persists
+    val fps = spark.range(1, 41).select(col("id").as("doc_id"),
+      when(col("id") === 3, raise_error(lit("boom")))
+        .otherwise(col("id") * 0x10001L).as("simhash"))
+    intercept[Exception](Dedup.bandedHammingPairs(fps, "simhash", maxHamming = 3))
+    assert(spark.sharedState.cacheManager.isEmpty, "a failed pair build left a cached table")
+    val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(left.isEmpty, s"leaked caches: ${left.values.map(_.name)}")
+  }
+
   test("audio fingerprint: banded pairs equal all-pairs truth; re-encode robustness; invalid payloads drop") {
     import spark.implicits._
     // doc_ids 37/78 are congruent mod 41 -> identical 82-byte PCM planes
@@ -290,7 +336,7 @@ class DedupSpec extends SparkSpec {
     // pigeonhole: the banded join surfaces EXACTLY the guarded star+rep truth
     val expected = guardedPairsTruth(fp, 3)
     assert(expected.contains((37L, 78L)))
-    val got = Dedup.audioFingerprintPairs(wavs, maxHamming = 3).collect()
+    val got = Dedup.fingerprintPairs(graft.multimodal.Modality.Audio, wavs, maxHamming = 3).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(got == expected, s"banded pairs must equal guarded truth: got=$got expected=$expected")
     // malformed payloads route to valid=false (never pair, never throw):
@@ -302,22 +348,22 @@ class DedupSpec extends SparkSpec {
     // never re-decodes the corpus; even-half index + fresh odd-half
     // fingerprints equal the full rebuild
     val dir = java.nio.file.Files.createTempDirectory("graft-audiofp-spec").toString
-    Dedup.writeAudioFpIndex(wavs, dir)
+    Dedup.writeFingerprintIndex(graft.multimodal.Modality.Audio, wavs, dir)
     val idx = spark.read.parquet(s"$dir/audio_fp")
-    val served = Dedup.audioFingerprintPairsFrom(idx, maxHamming = 3).collect()
+    val served = Dedup.fingerprintPairsFrom(graft.multimodal.Modality.Audio, idx, maxHamming = 3).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(served == expected, "index serve must equal the direct path")
-    val p = Dedup.audioFingerprintPairsFrom(idx, maxHamming = 3)
+    val p = Dedup.fingerprintPairsFrom(graft.multimodal.Modality.Audio, idx, maxHamming = 3)
       .queryExecution.executedPlan.toString
     assert(p.contains("graft-audiofp-spec") && !p.toLowerCase.contains("mappartitions"),
       s"serve plan must scan the index, not re-decode:\n$p")
     val evenDir = java.nio.file.Files.createTempDirectory("graft-audiofp-even").toString
-    Dedup.writeAudioFpIndex(wavs.filter(pmod(col("doc_id"), lit(2L)) === 0), evenDir)
+    Dedup.writeFingerprintIndex(graft.multimodal.Modality.Audio, wavs.filter(pmod(col("doc_id"), lit(2L)) === 0), evenDir)
     val merged = spark.read.parquet(s"$evenDir/audio_fp").unionByName(
       graft.multimodal.Multimodal.audioFingerprint(
           wavs.filter(pmod(col("doc_id"), lit(2L)) === 1)).toDF()
         .filter(col("valid")).select(col("doc_id"), col("afp")))
-    val incr = Dedup.audioFingerprintPairsFrom(merged, maxHamming = 3).collect()
+    val incr = Dedup.fingerprintPairsFrom(graft.multimodal.Modality.Audio, merged, maxHamming = 3).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(incr == expected, "incremental ingest must equal the from-scratch rebuild")
   }
@@ -344,7 +390,7 @@ class DedupSpec extends SparkSpec {
     // the banded join surfaces EXACTLY the guarded star+rep truth
     val expected = guardedPairsTruth(fp, 3)
     assert(expected.contains((1L, 16L)))
-    val got = Dedup.videoFingerprintPairs(vids, maxHamming = 3).collect()
+    val got = Dedup.fingerprintPairs(graft.multimodal.Modality.Video, vids, maxHamming = 3).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(got == expected, s"banded pairs must equal guarded truth: got=$got expected=$expected")
     // SHIFTED-TAIL sequence: appending a frame to the container (a
@@ -381,7 +427,7 @@ class DedupSpec extends SparkSpec {
     // silently drop the whole group.
     assert(100 > Dedup.MaxLshBucketSize)
     val grp = (1L to 100L).map(i => (i, 0x0123456789ABCL)).toDF("doc_id", "afp")
-    val starred = Dedup.audioFingerprintPairsFrom(grp, maxHamming = 3).collect()
+    val starred = Dedup.fingerprintPairsFrom(graft.multimodal.Modality.Audio, grp, maxHamming = 3).collect()
     assert(starred.length == 99, s"star expansion must be O(k): ${starred.length} pairs")
     assert(starred.forall(r => r.getLong(0) == 1L && r.getLong(2) == 0L),
       "every star edge attaches a member to the min-id representative at hamming 0")
@@ -390,7 +436,7 @@ class DedupSpec extends SparkSpec {
     val x = 0x0F0F0F0F0F0FL
     val two = Seq((10L, x), (11L, x), (12L, x), (20L, x ^ 1L), (21L, x ^ 1L))
       .toDF("doc_id", "phash")
-    val got = Dedup.imagePhashPairsFrom(two, maxHamming = 3).collect()
+    val got = Dedup.fingerprintPairsFrom(graft.multimodal.Modality.Image, two, maxHamming = 3).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(got == Map((10L, 11L) -> 0L, (10L, 12L) -> 0L, (20L, 21L) -> 0L, (10L, 20L) -> 1L))
   }

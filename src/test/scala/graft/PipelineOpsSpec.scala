@@ -73,7 +73,7 @@ class PipelineOpsSpec extends SparkSpec {
     val feats = QualityClassifier.features(docs)
     val w = QualityClassifier.train(feats.filter(pmod(col("doc_id"), lit(4)) === 0))
     val thr = 0.28
-    val rep = PretrainCorpus.reportV2(docs, w, thr).collect().head
+    val rep = PretrainCorpus.report(docs, Some((w, thr))).collect().head
     val r = rep.getValuesMap[Any](rep.schema.fieldNames)
     def L(k: String) = r(k).asInstanceOf[Long]
     // the two inserted stages are LIVE: the PII scrub cut characters and
@@ -87,7 +87,7 @@ class PipelineOpsSpec extends SparkSpec {
     // plants survive the new stages: pair max ids dedup away (the min may
     // still be cut later by the token-budget sampler — v1 contract),
     // benchmark docs bypass the gate and never ship
-    val out = PretrainCorpus.pipelineV2(docs, w, thr).collect()
+    val out = PretrainCorpus.pipeline(docs, Some((w, thr))).collect()
       .map(x => x.getLong(0) -> (x.getString(1), x.getLong(2), x.getLong(3))).toMap
     assert(!out.values.exists(_._1 == "src0"))
     assert(!out.contains(8L) && !out.contains(58L), "pair max ids must dedup away")
@@ -113,7 +113,7 @@ class PipelineOpsSpec extends SparkSpec {
     val feats = QualityClassifier.features(docs)
     val w = QualityClassifier.train(feats.filter(pmod(col("doc_id"), lit(4)) === 0))
     val thr = 0.28
-    val rep = PretrainCorpus.reportV3(docs, w, thr).collect().head
+    val rep = PretrainCorpus.report(docs, Some((w, thr)), Seq(graft.multimodal.Modality.Image)).collect().head
     val r = rep.getValuesMap[Any](rep.schema.fieldNames)
     def L(k: String) = r(k).asInstanceOf[Long]
 
@@ -134,7 +134,7 @@ class PipelineOpsSpec extends SparkSpec {
     assert(L("docs_quality") == qg.count())
     val fps = graft.multimodal.Multimodal.imagePhash(qg).toDF()
       .filter(col("valid")).select(col("doc_id"), col("phash"))
-    val pairs = Dedup.imagePhashPairsFrom(fps)
+    val pairs = Dedup.fingerprintPairsFrom(graft.multimodal.Modality.Image, fps)
     val comps = Dedup.connectedComponents(pairs)
     val img = qg.join(comps.filter(col("component") =!= col("doc_id")).select("doc_id"),
       Seq("doc_id"), "left_anti")
@@ -149,7 +149,7 @@ class PipelineOpsSpec extends SparkSpec {
     assert(L("n_bins") > 0 && L("docs_sampled") > 0)
     // plants still fire downstream: benchmark docs never ship, pair max
     // ids never survive (image or text dedup removes them)
-    val out = PretrainCorpus.pipelineV3(docs, w, thr).collect()
+    val out = PretrainCorpus.pipeline(docs, Some((w, thr)), Seq(graft.multimodal.Modality.Image)).collect()
       .map(x => x.getLong(0) -> (x.getString(1), x.getLong(2), x.getLong(3))).toMap
     assert(!out.values.exists(_._1 == "src0"))
     assert(!out.contains(8L) && !out.contains(58L), "pair max ids must dedup away")
@@ -163,7 +163,7 @@ class PipelineOpsSpec extends SparkSpec {
     val feats = QualityClassifier.features(docs)
     val w = QualityClassifier.train(feats.filter(pmod(col("doc_id"), lit(4)) === 0))
     val thr = 0.28
-    val rep = PretrainCorpus.reportV4(docs, w, thr).collect().head
+    val rep = PretrainCorpus.report(docs, Some((w, thr)), graft.multimodal.Modality.all).collect().head
     val r = rep.getValuesMap[Any](rep.schema.fieldNames)
     def L(k: String) = r(k).asInstanceOf[Long]
 
@@ -174,13 +174,13 @@ class PipelineOpsSpec extends SparkSpec {
     val ladderMods = rep.schema.fieldNames.filter(_.startsWith("docs_"))
       .map(_.stripPrefix("docs_")).toSet --
       Set("quality", "dedup", "decon", "sampled")
-    assert(ladderMods == graft.streaming.PretrainStream.PerceptualModalities.toSet,
+    assert(ladderMods == graft.multimodal.Modality.all.map(_.name).toSet,
       s"v4 ladder stages $ladderMods must equal the gate's audited modalities")
 
     // rebuild the audio stage standalone from the v3 report's image
     // survivors: fingerprint ONLY image survivors (the cascade), pair
     // through the same guarded machinery, keep min-id per component
-    val v3 = PretrainCorpus.reportV3(docs, w, thr).collect().head
+    val v3 = PretrainCorpus.report(docs, Some((w, thr)), Seq(graft.multimodal.Modality.Image)).collect().head
     assert(L("docs_image") == v3.getAs[Long]("docs_image") &&
       L("chars_image") == v3.getAs[Long]("chars_image"),
       "v4's image stage must be exactly v3's (audio/video compose AFTER it)")
@@ -223,16 +223,16 @@ class PipelineOpsSpec extends SparkSpec {
       pairs.unpersist(); comps.unpersist()
       out
     }
-    val img = keepCanon(qg, in => Dedup.imagePhashPairsFrom(
+    val img = keepCanon(qg, in => Dedup.fingerprintPairsFrom(graft.multimodal.Modality.Image,
       graft.multimodal.Multimodal.imagePhash(in).toDF()
         .filter(col("valid")).select(col("doc_id"), col("phash"))))
-    val aud = keepCanon(img, in => Dedup.audioFingerprintPairsFrom(
+    val aud = keepCanon(img, in => Dedup.fingerprintPairsFrom(graft.multimodal.Modality.Audio,
       graft.multimodal.Multimodal.audioFingerprint(in).toDF()
         .filter(col("valid")).select(col("doc_id"), col("afp"))))
     assert(L("docs_audio") == aud.count(),
       "composed audio-stage count must equal the standalone pairs+components machinery")
     assert(L("chars_audio") == aud.agg(sum(length(col("text")))).head.getLong(0))
-    val vid = keepCanon(aud, in => Dedup.videoFingerprintPairsFrom(
+    val vid = keepCanon(aud, in => Dedup.fingerprintPairsFrom(graft.multimodal.Modality.Video,
       graft.multimodal.Multimodal.videoFingerprint(in).toDF()
         .filter(col("valid")).select(col("doc_id"), col("vfp"))))
     assert(L("docs_video") == vid.count(),
@@ -244,7 +244,7 @@ class PipelineOpsSpec extends SparkSpec {
     assert(L("docs_dedup") <= L("docs_video") && L("docs_dedup") > 0)
     assert(L("n_bins") > 0 && L("docs_sampled") > 0)
     // plants still fire downstream: benchmark docs never ship
-    val out = PretrainCorpus.pipelineV4(docs, w, thr).collect()
+    val out = PretrainCorpus.pipeline(docs, Some((w, thr)), graft.multimodal.Modality.all).collect()
     assert(out.nonEmpty && !out.exists(_.getString(1) == "src0"))
     stageCks.foreach(_.unpersist(blocking = false))
   }
@@ -265,6 +265,53 @@ class PipelineOpsSpec extends SparkSpec {
     assert(r("scrub_char_cut") != null && r("dedup_doc_cut") != null)
     // and the pipeline output itself is empty, consistent with the report
     assert(PretrainCorpus.pipeline(docs, budgetTokens = 1L).count() == 0L)
+  }
+
+  test("pretrain report columns: every rung keeps its column order") {
+    import graft.pipelines.PretrainCorpus
+    import graft.multimodal.Modality
+    // the column order is data-independent: a small slice and a fixed
+    // zero-weight gate keep the four ladders cheap
+    val docs = graft.collocations.Collocations.documents(spark, "/root/testdata/sf0.001")
+      .filter(col("doc_id") < 120)
+    val gate = Some((Seq(0.0, 0.0, 0.0, 0.0, 0.0), 0.0))
+    def cols(df: org.apache.spark.sql.DataFrame): Seq[String] = df.schema.fieldNames.toSeq
+    assert(cols(PretrainCorpus.report(docs)) == Seq("n_docs", "chars_raw", "chars_nfc",
+      "chars_c4", "chars_bp", "docs_dedup", "chars_dedup", "docs_decon", "chars_decon",
+      "docs_sampled", "tokens_sampled", "n_bins", "scrub_char_cut", "dedup_doc_cut"))
+    assert(cols(PretrainCorpus.report(docs, gate)) == Seq("n_docs", "chars_raw", "chars_nfc",
+      "chars_c4", "chars_bp", "chars_pii", "docs_quality", "chars_quality",
+      "docs_dedup", "chars_dedup", "docs_decon", "chars_decon",
+      "docs_sampled", "tokens_sampled", "n_bins", "scrub_char_cut", "quality_doc_cut",
+      "dedup_doc_cut"))
+    assert(cols(PretrainCorpus.report(docs, gate, Seq(Modality.Image))) == Seq("n_docs",
+      "chars_raw", "chars_nfc", "chars_c4", "chars_bp", "chars_pii", "docs_quality",
+      "chars_quality", "docs_image", "chars_image",
+      "docs_dedup", "chars_dedup", "docs_decon", "chars_decon",
+      "docs_sampled", "tokens_sampled", "n_bins", "scrub_char_cut", "quality_doc_cut",
+      "image_doc_cut", "dedup_doc_cut"))
+    assert(cols(PretrainCorpus.report(docs, gate, Modality.all)) == Seq("n_docs",
+      "chars_raw", "chars_nfc", "chars_c4", "chars_bp", "chars_pii", "docs_quality",
+      "chars_quality", "docs_image", "chars_image", "docs_audio", "chars_audio",
+      "docs_video", "chars_video", "docs_dedup", "chars_dedup", "docs_decon", "chars_decon",
+      "docs_sampled", "tokens_sampled", "n_bins", "scrub_char_cut", "quality_doc_cut",
+      "image_doc_cut", "audio_doc_cut", "video_doc_cut", "dedup_doc_cut"))
+    spark.sharedState.cacheManager.clearCache()
+  }
+
+  test("pretrain ladder: a failing stage restores the job description and leaves no cache") {
+    import graft.pipelines.PretrainCorpus
+    spark.sharedState.cacheManager.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val docs = graft.collocations.Collocations.documents(spark, "/root/testdata/sf0.001")
+      .withColumn("text",
+        when(col("doc_id") === 3, raise_error(lit("boom"))).otherwise(col("text")))
+    intercept[Exception](PretrainCorpus.report(docs))
+    assert(spark.sparkContext.getLocalProperty("spark.job.description") == null,
+      "the ladder's stage label must not outlive the failed run")
+    assert(spark.sharedState.cacheManager.isEmpty, "a failed ladder left a cached table")
+    val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(left.isEmpty, s"leaked caches: ${left.values.map(_.name)}")
   }
 
   test("url canonicalization: each rule on a hand-picked case") {

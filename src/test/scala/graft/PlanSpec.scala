@@ -13,6 +13,20 @@ class PlanSpec extends SparkSpec {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  test("registry: 237 distinct names, the multimodal family and every ladder rung present") {
+    assert(SparkEntry.queries.size == 237, s"registry size ${SparkEntry.queries.size}")
+    val multimodal = Seq("dedup_image_phash", "dedup_image_indexed", "dedup_image_incremental",
+      "dedup_audio_fingerprint", "dedup_audio_indexed", "dedup_audio_incremental",
+      "dedup_video_fingerprint", "dedup_video_indexed", "dedup_video_incremental",
+      "dedup_image_stream_gate", "dedup_audio_stream_gate", "dedup_video_stream_gate")
+    val ladder = Seq("", "_v2", "_v3", "_v4").flatMap(v =>
+      Seq(s"pipeline_pretrain_corpus$v", s"pipeline_pretrain_report$v"))
+    val missing = (multimodal ++ ladder).filterNot(SparkEntry.queries.contains)
+    assert(missing.isEmpty, s"missing registry entries: $missing")
+    assert(SparkEntry.oracleSql.keySet.intersect(multimodal.toSet) == multimodal.toSet,
+      "every multimodal entry carries its static oracle")
+  }
+
   test("top-k window rewrites to partial+final WindowGroupLimit") {
     val p = plan(SparkEntry.queries("topk_window")(spark, sf))
     assert(p.contains("WindowGroupLimit"), s"expected WindowGroupLimit rewrite:\n$p")

@@ -992,15 +992,10 @@ class StreamingSpec extends SparkSpec {
       Seq(idx, watch, out, ckpt).foreach(d =>
         org.apache.commons.io.FileUtils.deleteDirectory(d.toFile))
     }
-    run("image", Dedup.writeImagePhashIndex, "image_phash",
-      (s, i, o, c) => MultimodalDedupStream.gateImage(s, i, o, c),
-      (b, i) => MultimodalDedupStream.gateImageBatch(b, i))
-    run("audio", Dedup.writeAudioFpIndex, "audio_fp",
-      (s, i, o, c) => MultimodalDedupStream.gateAudio(s, i, o, c),
-      (b, i) => MultimodalDedupStream.gateAudioBatch(b, i))
-    run("video", Dedup.writeVideoFpIndex, "video_fp",
-      (s, i, o, c) => MultimodalDedupStream.gateVideo(s, i, o, c),
-      (b, i) => MultimodalDedupStream.gateVideoBatch(b, i))
+    graft.multimodal.Modality.all.foreach(m =>
+      run(m.name, (docs, dir) => Dedup.writeFingerprintIndex(m, docs, dir), m.table,
+        (s, i, o, c) => MultimodalDedupStream.gate(m, s, i, o, c),
+        (b, i) => MultimodalDedupStream.gateBatch(m, b, i)))
   }
 
   test("streaming semantic ingest gate flags arrivals exactly as the batch gate") {
@@ -1170,9 +1165,9 @@ class StreamingSpec extends SparkSpec {
     // modality fingerprint indexes over the even half's RAW records —
     // payloads ride the raw record, untouched by the page-text dirtying
     val evenRaw = docs.filter(pmod(col("doc_id"), lit(2L)) === 0)
-    graft.dedup.Dedup.writeImagePhashIndex(evenRaw, s"$mmIdx/img")
-    graft.dedup.Dedup.writeAudioFpIndex(evenRaw, s"$mmIdx/aud")
-    graft.dedup.Dedup.writeVideoFpIndex(evenRaw, s"$mmIdx/vid")
+    graft.multimodal.Modality.all.foreach(m =>
+      graft.dedup.Dedup.writeFingerprintIndex(m, evenRaw, s"$mmIdx/${m.name}"))
+    def fpIdxDir(m: graft.multimodal.Modality): String = s"$mmIdx/${m.name}/${m.bandedTable}"
     // semantic-decon benchmark index over the embedding table's
     // benchmark tenth (the decontaminate_semantic_indexed artifact)
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -1212,8 +1207,7 @@ class StreamingSpec extends SparkSpec {
     drop("b.parquet", shardCols.filter(pmod(col("doc_id"), lit(4L)) === 3))
     val q = PretrainStream.gate(PretrainStream.readGateStream(spark, watch.toString),
       model.toString, langModelDir.toString, thr = 0.28, gateIndexDir = idx.toString,
-      imageIdxDir = s"$mmIdx/img/image_phash_banded", audioIdxDir = s"$mmIdx/aud/audio_fp_banded",
-      videoIdxDir = s"$mmIdx/vid/video_fp_banded", semIdxDir = semIdx.toString,
+      fpIdxDir = fpIdxDir, semIdxDir = semIdx.toString,
       semGateIdxDir = semGateIdx.toString,
       outDir = out.toString, checkpoint = ckpt.toString)
     q.processAllAvailable(); q.stop()
@@ -1236,9 +1230,7 @@ class StreamingSpec extends SparkSpec {
       spark.read.parquet(s"$idx/anchors"), spark.read.parquet(s"$idx/bench"),
       spark.read.parquet(s"$idx/dedup/minhash_buckets"),
       spark.read.parquet(s"$idx/dedup/shingle_sets"),
-      spark.read.parquet(s"$mmIdx/img/image_phash_banded"),
-      spark.read.parquet(s"$mmIdx/aud/audio_fp_banded"),
-      spark.read.parquet(s"$mmIdx/vid/video_fp_banded"),
+      m => spark.read.parquet(fpIdxDir(m)),
       emb.join(arrivals.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"),
       spark.read.parquet(s"$semIdx/bench"), semCents,
       spark.read.parquet(s"$semGateIdx/kept"), semDupCents)
@@ -1250,8 +1242,8 @@ class StreamingSpec extends SparkSpec {
     // modality — the v4 ladder's fingerprint stages are the trio)
     val gateMods = batch.schema.fieldNames.filter(_.endsWith("_dup_flag"))
       .map(_.stripSuffix("_dup_flag")).toSet - "sem"
-    assert(gateMods == PretrainStream.PerceptualModalities.toSet,
-      s"gate audit modalities $gateMods must equal PerceptualModalities")
+    assert(gateMods == graft.multimodal.Modality.all.map(_.name).toSet,
+      s"gate audit modalities $gateMods must equal Modality.all")
     val rows = batch.collect()
     // every gate is LIVE on the planted page fixture: the 7/8 pair docs
     // straddle the parity split (dup), doc 11 carries the leak line
@@ -1333,7 +1325,7 @@ class StreamingSpec extends SparkSpec {
       .filter(col("valid")).select("doc_id", "afp")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     drop("a.parquet", 0L); drop("b.parquet", 1L); drop("c.parquet", 2L)
-    val q = MultimodalDedupStream.ingestAudio(
+    val q = MultimodalDedupStream.ingest(graft.multimodal.Modality.Audio,
       DedupStream.readStream(spark, watch.toString), idx.toString, ckpt.toString)
     q.processAllAvailable(); q.stop()
     val streamed = MultimodalDedupStream.fps(spark, s"$idx/audio_fp")
@@ -1341,16 +1333,16 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == fullRebuild,
       "streamed fingerprint index must equal the from-scratch rebuild — no doc re-decoded twice")
     // the streamed index feeds the batch serve path unchanged
-    val pairs = graft.dedup.Dedup.audioFingerprintPairsFrom(
+    val pairs = graft.dedup.Dedup.fingerprintPairsFrom(graft.multimodal.Modality.Audio,
       MultimodalDedupStream.fps(spark, s"$idx/audio_fp"))
     assert(pairs.count() ==
-      graft.dedup.Dedup.audioFingerprintPairs(all).count(),
+      graft.dedup.Dedup.fingerprintPairs(graft.multimodal.Modality.Audio, all).count(),
       "pairs served from the streamed index must equal the direct path")
     // replay idempotence: a fresh checkpoint re-processes every shard
     // (the restart-after-checkpoint-loss case) — dynamic partition
     // overwrite must replace the ingest_batch partitions, not duplicate
     val ckpt2 = java.nio.file.Files.createTempDirectory("graft-mmidx-ckpt2")
-    val q2 = MultimodalDedupStream.ingestAudio(
+    val q2 = MultimodalDedupStream.ingest(graft.multimodal.Modality.Audio,
       DedupStream.readStream(spark, watch.toString), idx.toString, ckpt2.toString)
     q2.processAllAvailable(); q2.stop()
     val replayed = MultimodalDedupStream.fps(spark, s"$idx/audio_fp")
