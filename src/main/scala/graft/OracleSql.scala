@@ -18,12 +18,13 @@ object OracleSql {
       s"CASE WHEN instr(trim($x), '_') > 1 THEN substr(trim($x), 1, CAST(instr(trim($x), '_') AS INTEGER) - 1) ELSE trim($x) END, " +
       s"'^[^\\p{L}\\p{N}]+', ''), '[^\\p{L}\\p{N}]+$$', '')))"
 
-  /** Per-language stopword routing, mirroring `Stopwords.anti` exactly:
-    * `he` rows check the Hebrew set, every other language — including a
-    * NULL lang, which Spark's otherwise-branch sends to English — the
-    * English one. The CASE keeps three-valued logic out: the old
-    * conjunction form evaluated to NULL (row dropped) for NULL lang
-    * whenever the word sat in either list, diverging from Spark. */
+  /** Per-language stopword routing, the same in-row set test as
+    * `Stopwords.anti`: `he` rows check the Hebrew set, every other
+    * language — including a NULL lang, which Spark's otherwise-branch
+    * sends to English — the English one. The CASE keeps three-valued
+    * logic out: the old conjunction form evaluated to NULL (row dropped)
+    * for NULL lang whenever the word sat in either list, diverging from
+    * Spark. */
   def notStop(w: String, lang: String = "lang"): String =
     s"(CASE WHEN COALESCE($lang, '') = 'he' THEN $w NOT IN (${Stopwords.heSqlList}) " +
       s"ELSE $w NOT IN (${Stopwords.sqlList}) END)"

@@ -16,6 +16,9 @@ import graft.ops.{Llr, Normalize, Stopwords, TopK}
   *     the bigram fact table);
   *   - map-side combiner (`Job1.java:197-209`) → automatic partial/final
   *     HashAggregate;
+  *   - distributed-cache stopword sets (`Stopwords.java:20-48`) → an
+  *     in-row `InSet` predicate over the literal sets (no join, nothing to
+  *     ship — [[graft.ops.Stopwords]]);
   *   - distributed-cache N map (`Job2.java:168-190`) → explicit
   *     `broadcast()` join (the N table is one row per (lang) — never let
   *     it shuffle the fact side);
@@ -71,18 +74,20 @@ object Collocations {
 
   /** J1 + J2 + J3 — the reference's Job1→Job2 join chain, written once for
     * every path (text, counter run, n-gram): attaches c1 on w1 and c2 on w2
-    * from ONE unigram-count table `u` (`keys`, w, `c`), then broadcast-joins
-    * N = Σ`c` per group. Output: keys, w2, w1, c12, c1, c2, n. One lazy
-    * plan: the three reads of `u` canonicalize equal, so the executed plan
-    * computes the unigram shuffle once — the c2 broadcast is a
-    * `ReusedExchange` of the c1 broadcast and N's aggregation reads the
-    * unigram shuffle as a `ReusedExchange` (pinned in PlanSpec). */
-  private[collocations] def withCounts(bigrams: DataFrame, u: DataFrame, keys: Seq[String],
-                                       c: String): DataFrame = {
-    def counts(w: String, cw: String) = u.select(keys.map(col) :+ col("w").as(w) :+ col(c).as(cw): _*)
+    * from ONE unigram-count table `u` (`keys`, w, c), then broadcast-joins
+    * N = Σc per group. Output: keys, w2, w1, c12, c1, c2, n. One lazy
+    * plan: both sides project `u` the same way (`w AS wX, c AS cX`), so
+    * the three reads canonicalize equal and the executed plan builds the
+    * unigram table once — one count side's broadcast is a `ReusedExchange`
+    * of the other's and N's aggregation reads the unigram shuffle as a
+    * `ReusedExchange` (pinned in PlanSpec for both paths). A count column
+    * named after one side (`c1`) would project as a bare column there and
+    * an alias on the other, and the table would be broadcast twice. */
+  private[collocations] def withCounts(bigrams: DataFrame, u: DataFrame, keys: Seq[String]): DataFrame = {
+    def counts(w: String, cw: String) = u.select(keys.map(col) :+ col("w").as(w) :+ col("c").as(cw): _*)
     bigrams.join(counts("w1", "c1"), keys :+ "w1")
       .join(counts("w2", "c2"), keys :+ "w2")
-      .join(broadcast(u.groupBy(keys.map(col): _*).agg(sum(c).as("n"))), keys)
+      .join(broadcast(u.groupBy(keys.map(col): _*).agg(sum("c").as("n"))), keys)
   }
 
   /** F3 + P8 + A5/A6/O2 — the reference's Job3, written once for every path:
@@ -111,7 +116,7 @@ object Collocations {
     * single-DAG equivalent of the reference writing Job2's joined output to
     * a table. */
   def withN(docs: DataFrame): DataFrame =
-    withCounts(bigramCounts(docs), unigramCounts(docs), Seq("lang"), "c")
+    withCounts(bigramCounts(docs), unigramCounts(docs), Seq("lang"))
 
   /** F3 + P8: LLR column, NaN rows dropped (see [[Llr.scored]]), rounded
     * to 6 decimals for cross-engine (DuckDB oracle) hash parity. */
@@ -176,7 +181,7 @@ object Collocations {
     val (bcObs, postAgg) = Metrics.observed(bc, "graft_post_agg",
       count(lit(1)).as("records"))
     val (joined, preTopk) = Metrics.observed(
-      withCounts(bcObs, unigramCounts(docs), Seq("lang"), "c"), "graft_pre_topk",
+      withCounts(bcObs, unigramCounts(docs), Seq("lang")), "graft_pre_topk",
       count_if(Llr.valid(col("c1"), col("c2"), col("c12"), col("n"))).as("records"))
     val outRows = topByLlr(joined, Seq("lang"), k).count()
     PipelineCounterValues(

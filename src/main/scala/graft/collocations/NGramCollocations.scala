@@ -17,10 +17,14 @@ object NGramCollocations {
   val K = 100
 
   /** c1 per (lang, decade, w): weighted sum of occurrences — A2. */
-  def unigramCounts(uni: DataFrame): DataFrame =
+  def unigramCounts(uni: DataFrame): DataFrame = counts(uni).withColumnRenamed("c", "c1")
+
+  /** [[unigramCounts]] with the count named `c`, the column
+    * [[Collocations.withCounts]] reads. */
+  private def counts(uni: DataFrame): DataFrame =
     Stopwords.anti(uni, "w")
       .groupBy(col("lang"), Normalize.toDecade(col("year")).as("decade"), col("w"))
-      .agg(sum("occurrences").as("c1"))
+      .agg(sum("occurrences").as("c"))
 
   /** c12 per (lang, decade, w1, w2) — A3 with real summation. */
   def bigramCounts(bg: DataFrame): DataFrame =
@@ -37,13 +41,13 @@ object NGramCollocations {
     * (lang, decade) grain, one lazy plan. c1, c2 and N all read the same
     * unigram aggregate, and each corpus is scanned once: Spark 4.1
     * canonicalizes the three subtrees equal, so the executed plan computes
-    * the unigram shuffle once and reuses it (the c2 side and N's
-    * aggregation read it as a `ReusedExchange`). Persisting the count table
-    * instead ran more jobs and was slower in an interleaved A/B. */
+    * the unigram shuffle once and builds one unigram broadcast (one count
+    * side reads the other's broadcast, and N's aggregation the unigram
+    * shuffle, as a `ReusedExchange`). Persisting the count table instead ran more jobs
+    * and was slower in an interleaved A/B. */
   def topCollocations(uni: DataFrame, bg: DataFrame, k: Int = K): DataFrame = {
     val keys = Seq("lang", "decade")
-    Collocations.topByLlr(
-      Collocations.withCounts(bigramCounts(bg), unigramCounts(uni), keys, "c1"), keys, k)
+    Collocations.topByLlr(Collocations.withCounts(bigramCounts(bg), counts(uni), keys), keys, k)
   }
 
   /** Convenience: end-to-end from raw TSV paths (unigram + bigram roots). */

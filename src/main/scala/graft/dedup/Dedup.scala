@@ -1151,72 +1151,75 @@ object Dedup {
     def cutLabels(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[_], java.math.BigDecimal) = {
       ckN += 1
       val obs = new org.apache.spark.sql.Observation(s"cc_label_sum_$ckN")
-      val ck = df.observe(obs, sum(col("component").cast("decimal(38,0)")).as("s"))
-        .localCheckpoint()
+      val (ck, internal) = graft.ops.Checkpoint.local(
+        df.observe(obs, sum(col("component").cast("decimal(38,0)")).as("s")), s"cc round $ckN")
       val labelSum = Option(obs.get("s"))
         .map(_.asInstanceOf[java.math.BigDecimal].stripTrailingZeros)
         .getOrElse(java.math.BigDecimal.ZERO)
-      val internal = ck.queryExecution.logical match {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-        case _ => null
-      }
       (ck.sparkSession.createDataFrame(ck.rdd, ck.schema), internal, labelSum)
     }
     def releaseCk(rdd: org.apache.spark.rdd.RDD[_]): Unit =
       if (rdd != null) { rdd.unpersist(blocking = false); () }
-    // seeding the sum from the initial labels keeps the already-a-fixpoint
-    // case at one iteration
-    var (labels, labelsCk, sum0) = cutLabels(seeds.getOrElse(
-      edges.select(col("src").as("doc_id")).distinct()
-        .withColumn("component", col("doc_id"))))
-    var converged = false
-    var it = 0
-    var prevSum: Option[java.math.BigDecimal] = Some(sum0)
-    val ccLog = sys.env.contains("SPARK_GRAFT_CC_LOG")
-    while (!converged && it < maxIters) {
-      val t0 = if (ccLog) System.nanoTime() else 0L
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("doc_id", "dst").withColumnRenamed("component", "n_comp"), Seq("dst"))
-        .groupBy(col("src").as("doc_id")).agg(min(col("n_comp")).as("n_comp"))
-      val spread = labels.join(neighborMin, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("component"), coalesce(col("n_comp"), col("component"))).as("component"))
-      // pointer jump: a label is always the id of a same-component vertex,
-      // so the label's label is too — taking the least keeps the invariant
-      // while halving chain depth every round. The self-join's two
-      // branches share spread's subtree, so exchange reuse computes the
-      // edge join once; the eager checkpoint in cutLabels materializes
-      // the round in ONE execution.
-      val jumped = spread.as("s")
-        .join(spread.select(col("doc_id").as("p_id"), col("component").as("p_comp")),
-          col("s.component") === col("p_id"), "left")
-        .select(col("s.doc_id").as("doc_id"),
-          least(col("s.component"), coalesce(col("p_comp"), col("s.component"))).as("component"))
-      val (updated, updatedCk, newSum) = cutLabels(jumped)
+    // every exit path releases the edge list and the live round's
+    // checkpoint; a failed round's own checkpoint is released inside
+    // Checkpoint.local
+    var labelsCk: org.apache.spark.rdd.RDD[_] = null
+    try {
+      // seeding the sum from the initial labels keeps the already-a-fixpoint
+      // case at one iteration
+      val (seeded, seededCk, sum0) = cutLabels(seeds.getOrElse(
+        edges.select(col("src").as("doc_id")).distinct()
+          .withColumn("component", col("doc_id"))))
+      var labels = seeded
+      labelsCk = seededCk
+      var converged = false
+      var it = 0
+      var prevSum = sum0
+      while (!converged && it < maxIters) {
+        val neighborMin = edges
+          .join(labels.withColumnRenamed("doc_id", "dst").withColumnRenamed("component", "n_comp"), Seq("dst"))
+          .groupBy(col("src").as("doc_id")).agg(min(col("n_comp")).as("n_comp"))
+        val spread = labels.join(neighborMin, Seq("doc_id"), "left")
+          .select(col("doc_id"),
+            least(col("component"), coalesce(col("n_comp"), col("component"))).as("component"))
+        // pointer jump: a label is always the id of a same-component vertex,
+        // so the label's label is too — taking the least keeps the invariant
+        // while halving chain depth every round. The self-join's two
+        // branches share spread's subtree, so exchange reuse computes the
+        // edge join once; the eager checkpoint in cutLabels materializes
+        // the round in ONE execution.
+        val jumped = spread.as("s")
+          .join(spread.select(col("doc_id").as("p_id"), col("component").as("p_comp")),
+            col("s.component") === col("p_id"), "left")
+          .select(col("s.doc_id").as("doc_id"),
+            least(col("s.component"), coalesce(col("p_comp"), col("s.component"))).as("component"))
+        val (updated, updatedCk, newSum) = cutLabels(jumped)
+        releaseCk(labelsCk)
+        labels = updated
+        labelsCk = updatedCk
+        converged = prevSum.compareTo(newSum) == 0
+        prevSum = newSum
+        it += 1
+      }
+      // a non-fixpoint label table would silently under-merge clusters (and
+      // diverge from the oracle's exact transitive closure) — fail loudly;
+      // maxIters is a runaway guard, not an accuracy knob
+      if (!converged)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIters iterations")
+      // Hand the caller a NORMALLY-persisted label table (their
+      // `.unpersist()` must work — the caller-owns-only-the-result cache
+      // contract), materialized from the final checkpoint cache, which the
+      // finally then releases with the edge list. One extra narrow pass
+      // over the (duplicates-sized) label table.
+      val out = labels.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try out.count()
+      catch { case t: Throwable => out.unpersist(); throw t }
+      out
+    } finally {
       releaseCk(labelsCk)
-      labels = updated
-      labelsCk = updatedCk
-      converged = prevSum.exists(_.compareTo(newSum) == 0)
-      prevSum = Some(newSum)
-      it += 1
-      if (ccLog) println(f"CC iter=$it sum=$newSum ${(System.nanoTime() - t0) / 1e9}%6.2f s")
+      edges.unpersist()
     }
-    // a non-fixpoint label table would silently under-merge clusters (and
-    // diverge from the oracle's exact transitive closure) — fail loudly;
-    // maxIters is a runaway guard, not an accuracy knob
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters iterations")
-    // Hand the caller a NORMALLY-persisted label table (their
-    // `.unpersist()` must work — the caller-owns-only-the-result cache
-    // contract), materialize it from the final checkpoint cache, then
-    // release that checkpoint and the edge list. One extra narrow pass
-    // over the (duplicates-sized) label table.
-    val out = labels.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    releaseCk(labelsCk)
-    edges.unpersist()
-    out
   }
 
   /** [[connectedComponents]] specialized to a [[bandedHammingPairs]]

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Per-language stopword filtering (reference: `Stopwords.java:20-48`,
@@ -10,10 +10,11 @@ import org.apache.spark.sql.functions._
   * (`Stopwords.java:26-30`); language itself follows the `NGramUtils`
   * rule — Hebrew corpora are tagged `he`, everything else `en`.
   *
-  * The Spark-native form is a broadcast `left_anti` join keyed on
-  * (routed-language, word): the combined list is tiny, so the anti-join is
-  * a BroadcastHashJoin with zero shuffle of the corpus side — the only
-  * strategy that survives at 100 TB.
+  * The Spark-native form is an in-row predicate: the sets are literals,
+  * so each row tests its word against its routed language's set, which
+  * Catalyst compiles to an `InSet` hash probe inside the scan's codegen
+  * stage. No join, no broadcast and no shuffle of the corpus side — the
+  * same `w NOT IN (...)` the DuckDB oracle runs ([[graft.OracleSql.notStop]]).
   */
 object Stopwords {
 
@@ -42,32 +43,29 @@ object Stopwords {
     * language the English one (`NGramUtils.java:51-79`). */
   def route(lang: Column): Column = when(lang === "he", lit("he")).otherwise(lit("en"))
 
-  /** (slang, sw) rows for both sets — the broadcast side. */
-  def df(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    (en.map(("en", _)) ++ he.map(("he", _))).toDF("slang", "sw")
-  }
-
   /** Drop rows whose `wordCol` is a stopword of the row's (routed)
-    * language: broadcast anti-join on (routed lang, word). `in` must carry
-    * a `lang` column. */
+    * language. `in` must carry a `lang` column. */
   def anti(in: DataFrame, wordCol: String): DataFrame =
     antiWith(in, wordCol, Map("en" -> en, "he" -> he))
 
   /** [[anti]] with caller-supplied per-language sets — the runtime-file
     * deployment path: `antiWith(df, "w", Map("en" -> fromFile(...), "he"
-    * -> fromFile(...)))`. Languages absent from the map keep all words. */
+    * -> fromFile(...)))`. The semantics of an anti-join on (routed lang,
+    * word): a NULL word is kept, a NULL lang routes to `en`, and a
+    * language absent from the map keeps all words. */
   def antiWith(in: DataFrame, wordCol: String, sets: Map[String, Seq[String]]): DataFrame = {
-    import in.sparkSession.implicits._
-    val sw = broadcast(
-      sets.toSeq.flatMap { case (l, ws) => ws.map((l, _)) }.toDF("slang", "sw"))
-    in.join(sw, in(wordCol) === sw("sw") && route(in("lang")) === sw("slang"), "left_anti")
+    val lang = route(in("lang"))
+    val stop = sets.foldLeft(lit(false)) { case (rest, (l, ws)) =>
+      when(lang === l, in(wordCol).isin(ws: _*)).otherwise(rest)
+    }
+    in.filter(!coalesce(stop, lit(false)))
   }
 
   /** Load one stopword set from a file with the reference's semantics
     * (`Stopwords.java:23-43`): strip a UTF-8 BOM, drop `#` comment lines
     * and blanks, trim + lowercase each word. Driver-side read of a tiny
-    * file, then broadcast — the distributed-cache pattern. */
+    * file whose words become literals of the plan — the distributed-cache
+    * pattern. */
   def fromFile(path: String): Seq[String] = {
     val src = scala.io.Source.fromFile(path, "UTF-8")
     try src.getLines()

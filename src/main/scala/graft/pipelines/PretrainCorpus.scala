@@ -155,7 +155,8 @@ object PretrainCorpus {
     * checkpoint RDDs in executor storage until GC-driven ContextCleaner
     * cleanup — unbounded across a long-lived session (guide §5), and the
     * DedupSpec no-leaked-caches contract caught it in r20. Same release
-    * discipline as Dedup.connectedComponents' cutLabels/releaseCk. */
+    * discipline as Dedup.connectedComponents; both cut through
+    * [[graft.ops.Checkpoint.local]]. */
   private final class CkLedger {
     private var prev: org.apache.spark.rdd.RDD[_] = null
     def supersede(next: org.apache.spark.rdd.RDD[_]): Unit = {
@@ -176,23 +177,8 @@ object PretrainCorpus {
 
   private def cut(df: DataFrame, stage: String, led: CkLedger): DataFrame =
     labelled(df, stage) {
-      // a checkpoint whose job fails is already registered as persisted
-      // but never returned, so it is found (and released) by the unique
-      // call site its RDD is created under
-      val sc = df.sparkSession.sparkContext
-      val site = s"pretrain checkpoint $stage ${java.util.UUID.randomUUID()}"
-      val prevSite = sc.getLocalProperty("callSite.short")
-      sc.setCallSite(site)
-      val out = try df.localCheckpoint()
-        catch { case t: Throwable =>
-          sc.getPersistentRDDs.values.filter(_.toString.endsWith(s" at $site"))
-            .foreach(_.unpersist(blocking = false))
-          throw t
-        } finally sc.setLocalProperty("callSite.short", prevSite)
-      led.supersede(out.queryExecution.logical match {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-        case _ => null
-      })
+      val (out, rdd) = graft.ops.Checkpoint.local(df, s"pretrain $stage")
+      led.supersede(rdd)
       out
     }
 

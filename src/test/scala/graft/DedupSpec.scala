@@ -789,6 +789,31 @@ class DedupSpec extends SparkSpec {
       s"leaked caches: ${spark.sparkContext.getPersistentRDDs.values.map(_.name)}")
   }
 
+  test("connectedComponents releases its caches when it does not converge") {
+    import spark.implicits._
+    spark.sharedState.cacheManager.clearCache()
+    // a 9-vertex path needs more than one round of pointer jumping
+    val pairs = (1L to 8L).map(i => (i, i + 1)).toDF("a", "b")
+    intercept[IllegalStateException](Dedup.connectedComponents(pairs, maxIters = 1))
+    assert(spark.sharedState.cacheManager.isEmpty, "a failed CC left a cached table")
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"leaked caches: ${spark.sparkContext.getPersistentRDDs.values.map(_.name)}")
+  }
+
+  test("connectedComponents releases its caches when a checkpoint job fails") {
+    spark.sharedState.cacheManager.clearCache()
+    val pairs = spark.range(1, 9).select(col("id").as("a"), (col("id") + 1).as("b"))
+    // the seeds raise inside the checkpoint's own job (no shuffle runs
+    // first), after its RDD is already registered as persisted; a range,
+    // not a local Seq, so the error is not raised at optimization time
+    val seeds = spark.range(1, 10).select(col("id").as("doc_id"),
+      when(col("id") === 5, raise_error(lit("boom"))).otherwise(col("id")).as("component"))
+    intercept[Exception](Dedup.connectedComponents(pairs, seeds = Some(seeds)))
+    assert(spark.sharedState.cacheManager.isEmpty, "a failed CC left a cached table")
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"leaked caches: ${spark.sparkContext.getPersistentRDDs.values.map(_.name)}")
+  }
+
   test("every persisting builder releases its internal caches; caller owns only the result") {
     import spark.implicits._
     spark.sharedState.cacheManager.clearCache()

@@ -35,11 +35,37 @@ class PlanSpec extends SparkSpec {
     assert("WindowGroupLimit".r.findAllIn(p).size >= 2, s"expected partial+final:\n$p")
   }
 
-  test("flagship pipeline broadcasts N and the stopword anti-joins") {
-    val p = plan(Collocations.topCollocations(Collocations.documents(spark, sf)))
+  /** Stopwords are a literal set tested inside the row: no join filters
+    * them, a filter holds the `InSet` probe, and no broadcast ships a
+    * driver-local table. */
+  private def assertStopwordsInRow(exec: org.apache.spark.sql.execution.SparkPlan): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.InSet
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.{FilterExec, LocalTableScanExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val aqe = new AdaptiveSparkPlanHelper {}
+    assert(aqe.collect(exec) { case j: BaseJoinExec if j.joinType == LeftAnti => j }.isEmpty,
+      s"no join filters stopwords:\n$exec")
+    assert(aqe.collect(exec) { case f: FilterExec if f.condition.exists(_.isInstanceOf[InSet]) => f }
+      .nonEmpty, s"expected an InSet stopword probe in a filter:\n$exec")
+    assert(aqe.collect(exec) {
+      case b: BroadcastExchangeLike if b.child.exists(_.isInstanceOf[LocalTableScanExec]) => b
+    }.isEmpty, s"no broadcast of a local table:\n$exec")
+  }
+
+  private val ngramPaths = {
+    val dir = OracleSqlExt.ngramFixtureDir
+    (Seq(s"$dir/eng-1gram.tsv", s"$dir/heb-1gram.tsv"), Seq(s"$dir/eng-2gram.tsv", s"$dir/heb-2gram.tsv"))
+  }
+
+  test("flagship pipeline broadcasts N and tests stopwords in the row") {
+    val top = Collocations.topCollocations(Collocations.documents(spark, sf))
+    val p = plan(top)
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"),
       s"expected broadcast joins:\n$p")
-    assert(p.contains("LeftAnti"), s"expected anti-join stopword filter:\n$p")
+    assertStopwordsInRow(top.queryExecution.executedPlan)
   }
 
   test("flagship text plan shares the count table through exchange reuse, not a cache") {
@@ -376,10 +402,31 @@ class PlanSpec extends SparkSpec {
   }
 
   test("ngram decade e2e keeps the reference plan shape: broadcasts + window group limit") {
-    val p = plan(SparkEntry.queries("ngram_decade_e2e")(spark, sf))
+    val df = SparkEntry.queries("ngram_decade_e2e")(spark, sf)
+    val p = plan(df)
     assert(p.contains("WindowGroupLimit"), s"expected top-k rewrite:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"expected broadcast count joins:\n$p")
-    assert(p.contains("LeftAnti"), s"expected stopword anti-joins:\n$p")
+    assertStopwordsInRow(df.queryExecution.executedPlan)
+  }
+
+  test("n-gram plan builds each small table once: the c1 and c2 sides share one broadcast") {
+    // the n-gram twin of the text test above: the c1 and c2 sides project
+    // the one unigram table the same way, so the final adaptive plan
+    // broadcasts two tables (unigram counts and N), not four. Which side
+    // is built and which reuses it depends on which stage AQE plans first.
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec}
+    import graft.collocations.NGramCollocations
+    val top = NGramCollocations.fromPaths(spark, ngramPaths._1, ngramPaths._2)
+    top.collect()
+    val exec = top.queryExecution.executedPlan
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val broadcasts = aqe.collect(exec) { case b: BroadcastExchangeLike => b }
+    assert(broadcasts.size == 2, s"expected 2 broadcasts, got ${broadcasts.size}:\n$exec")
+    val reused = aqe.collect(exec) { case r: ReusedExchangeExec => r }
+    val sides = Set(Seq("lang", "decade", "w1", "c1"), Seq("lang", "decade", "w2", "c2"))
+    assert(reused.exists(r => r.child.isInstanceOf[BroadcastExchangeLike] && sides(r.output.map(_.name))),
+      s"one count side must reuse the other's broadcast:\n$exec")
   }
 
   test("n-gram path evaluates each per-row expression once, in one lazy plan small enough to JIT") {
@@ -389,9 +436,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import graft.collocations.NGramCollocations
     import graft.sources.NGramSource
-    val dir = OracleSqlExt.ngramFixtureDir
-    val (uniPaths, bgPaths) = (Seq(s"$dir/eng-1gram.tsv", s"$dir/heb-1gram.tsv"),
-      Seq(s"$dir/eng-2gram.tsv", s"$dir/heb-2gram.tsv"))
+    val (uniPaths, bgPaths) = ngramPaths
     def in(p: LogicalPlan): Seq[Expression] = p.flatMap(_.expressions.flatMap(_.collect { case e => e }))
     def splits(p: LogicalPlan, re: String) =
       in(p).count { case StringSplit(_, Literal(r, _), _) => r.toString == re; case _ => false }

@@ -32,6 +32,32 @@ class StopwordsSpec extends SparkSpec {
     assert(kept == Set(("en", "data"), ("he", "עולם")))
   }
 
+  test("stopword filter keeps a NULL word, routes a NULL lang to English, is case-sensitive") {
+    import spark.implicits._
+    val rows = Seq[(String, String)](
+      ("en", null),   // NULL word -> kept
+      ("he", null),   // NULL word -> kept
+      (null, "the"),  // NULL lang routes to the en set -> dropped
+      (null, "של"),   // he stopword, NULL lang is not he -> kept
+      (null, "data"),
+      ("en", "The"),  // the filter compares the word as given -> kept
+      ("en", "the"),  // dropped
+      ("fr", "the"),  // non-he routes to en -> dropped
+      ("he", "של")    // dropped
+    ).toDF("lang", "w")
+    def kept(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (Option(r.getString(0)), Option(r.getString(1)))).toSet
+    // a local relation is folded at optimization time; the repartitioned
+    // copy runs the filter in generated code
+    Seq(rows, rows.repartition(2)).foreach { in =>
+      assert(kept(Stopwords.anti(in, "w")) == Set((Some("en"), None), (Some("he"), None),
+        (None, Some("של")), (None, Some("data")), (Some("en"), Some("The"))))
+      // only a he set: rows routed to en keep every word
+      assert(kept(Stopwords.antiWith(in, "w", Map("he" -> Seq("של")))) ==
+        kept(rows) - ((Some("he"), Some("של"))))
+    }
+  }
+
   test("fromFile strips BOM and comment lines, lowercases and trims") {
     val eng = Stopwords.fromFile("src/test/resources/ngrams/eng-stopwords.txt")
     assert(eng == Seq("the", "a", "an", "and", "of"),
