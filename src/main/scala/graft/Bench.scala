@@ -247,7 +247,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = LocalSession.envCpus
     // Upper bound on passes, not a fixed sweep count: passes beyond the
     // first touch only queries whose estimator still needs samples, so a
     // high cap is safe — the budget gates.
@@ -259,14 +259,7 @@ object Bench {
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "900").toDouble
     val wall0 = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - wall0) / 1e9
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
     // warm the JVM/codegen/scan paths so the first measured query doesn't
     // carry session bootstrap cost
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -298,30 +291,6 @@ object Bench {
           md.digest().map("%02x".format(_)).mkString
         }
       } catch { case _: Throwable => "nosrc" }
-
-    // debug hook: SPARK_GRAFT_FP_DUMP=<dir> writes each query's
-    // normalized plan text (the fingerprint basis) at fingerprint time —
-    // diff two runs' dirs to hunt in-session-only volatile token classes
-    val fpDumpDir = sys.env.get("SPARK_GRAFT_FP_DUMP")
-    fpDumpDir.foreach(d => new java.io.File(d).mkdirs())
-    def fingerprintOf(df: org.apache.spark.sql.DataFrame, name: String): String = {
-      fpDumpDir.foreach { d =>
-        try {
-          val raw = df.queryExecution.optimizedPlan.toString
-          // an OPAQUE plan's fingerprint is NOT its normalized text
-          // (it hashes a constant base + srcHash) — mark the dump so
-          // diffing two runs' dirs isn't misread as fingerprint-relevant
-          // for exactly the queries most likely being debugged
-          val header = if (isOpaquePlan(raw))
-            "OPAQUE: fingerprint = md5(\"opaque-plan\")+srcHash; the text below is NOT the fingerprint basis\n"
-          else ""
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"$d/$name.txt"),
-            (header + normalizePlan(raw)).getBytes("UTF-8"))
-        } catch { case _: Throwable => () }
-      }
-      planFingerprint(df, srcHash)
-    }
 
     // ---------------------------------------------------------- state I/O
     // Keyed by (sf dir, cpu count): carrying across a different dataset
@@ -760,7 +729,7 @@ object Bench {
       // would erase the query's carried history and delete its state
       // entry even though a later retry validated the fingerprint)
       if (fpNow.getOrElse(name, "").isEmpty && df != null)
-        fpNow(name) = try fingerprintOf(df, name) catch { case _: Throwable => "" }
+        fpNow(name) = try planFingerprint(df, srcHash) catch { case _: Throwable => "" }
     }
 
     // Sweep 1 always cold-samples EVERYTHING in alphabetical

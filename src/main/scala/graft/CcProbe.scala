@@ -2,7 +2,7 @@
 // REAL image/video pair graphs — label signatures must match exactly.
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 object CcProbe {
@@ -75,13 +75,7 @@ object CcProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("ccprobe").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     val docs = graft.collocations.Collocations.documents(spark, sfDir)
     val pairs = graft.dedup.Dedup.fingerprintPairs(graft.multimodal.Modality.Image, docs)
     val reps = pairs.filter(col("hamming") > 0)

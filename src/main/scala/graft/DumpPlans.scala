@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump every registry query's NORMALIZED optimized-plan text
   * (the [[Bench.normalizePlan]] form whose md5 is the carry-forward
@@ -11,15 +10,8 @@ object DumpPlans {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    only.foreach(SparkEntry.requireKnown)
+    val spark = LocalSession()
     SparkEntry.prepare(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)

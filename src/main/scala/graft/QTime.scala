@@ -1,18 +1,15 @@
-// scratch: time individual registry queries standalone
 package graft
-import org.apache.spark.sql.SparkSession
+
+/** Dev tool: time named registry queries standalone, one noop-sink write
+  * each (the Bench basis), after the same `prepare` warmup Bench runs. */
 object QTime {
   def main(args: Array[String]): Unit = {
     // same dataset-selection contract as Bench/Verify — a standalone
     // timing must never silently run against a different SF than the
     // bench being debugged
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("qtime").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    SparkEntry.requireKnown(args)
+    val spark = LocalSession()
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     // same warmup contract as Bench: index builds are one-time setup, so
@@ -22,17 +19,11 @@ object QTime {
     for (name <- args) {
       spark.sharedState.cacheManager.clearCache()
       // timed action = noop-sink write (the Bench basis: count() lets
-      // Catalyst prune narrow scoring projections to a metadata count).
-      // rows= is OPT-IN (SPARK_GRAFT_ROWS=1): it is a second full untimed
-      // execution, which on heavy queries doubles the tool's wall time
+      // Catalyst prune narrow scoring projections to a metadata count)
       val t0 = System.nanoTime()
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      df.write.format("noop").mode("overwrite").save()
+      SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
       val el = (System.nanoTime() - t0) / 1e9
-      val rows = if (sys.env.contains("SPARK_GRAFT_ROWS")) s" rows=${df.count()}" else ""
-      println(f"QTIME $name$rows $el%8.2f s")
-      if (sys.env.contains("SPARK_GRAFT_EXPLAIN"))
-        println(df.queryExecution.executedPlan.toString.take(6000))
+      println(f"QTIME $name $el%8.2f s")
     }
     spark.stop()
   }

@@ -45,149 +45,108 @@ object SparkEntry {
   private def keyDirName(key: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  private def dedupIndexDir(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d, {
-      val dir = dedupIndexRoot.resolve(keyDirName(d)).toString
-      graft.dedup.Dedup.writeDedupIndex(Collocations.documents(s, d), dir)
-      dir
-    })
+
+  /** One build-once artifact: `build(s, d, dir)` writes it for dataset
+    * dir `d` under `dir`. Its cache key is `d + key`, hashed to the dir
+    * name under the shutdown-cleaned root; [[dir]] is the one lookup every
+    * serve path and [[prepare]] go through. */
+  private[graft] final case class Artifact(key: String, build: (SparkSession, String, String) => Unit) {
+    def dir(s: SparkSession, d: String): String =
+      dedupIndexDirs.getOrElseUpdate(d + key, {
+        val dir = dedupIndexRoot.resolve(keyDirName(d + key)).toString
+        build(s, d, dir)
+        dir
+      })
+  }
+
+  /** The even-doc_id half of the corpus: the PRE-EXISTING side that the
+    * incremental and gate queries build their half indexes on. */
+  private def evenDocs(s: SparkSession, d: String): DataFrame =
+    Collocations.documents(s, d).filter(pmod(col("doc_id"), lit(2L)) === 0)
+
+  /** Minhash signature + shingle-set index over the full corpus (its key
+    * is the dataset dir itself). */
+  private val dedupIndex = Artifact("", (s, d, dir) =>
+    graft.dedup.Dedup.writeDedupIndex(Collocations.documents(s, d), dir))
 
   /** Index over the even-doc_id half only — the PRE-EXISTING corpus of
     * the incremental-ingest query, which unions fresh odd-half
     * signatures on top without re-hashing it. */
-  private def dedupIndexDirHalf(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d + "#even", {
-      val dir = dedupIndexRoot.resolve(keyDirName(d + "#even")).toString
-      graft.dedup.Dedup.writeDedupIndex(
-        Collocations.documents(s, d).filter(pmod(col("doc_id"), lit(2L)) === 0), dir)
-      dir
-    })
+  private val dedupIndexHalf = Artifact("#even", (s, d, dir) =>
+    graft.dedup.Dedup.writeDedupIndex(evenDocs(s, d), dir))
 
   /** Winnow fingerprint index (full corpus / even half) — same
     * build-once lifecycle and shutdown-cleaned root as the minhash
     * index. */
-  private def winnowIndexDir(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d + "#winnow", {
-      val dir = dedupIndexRoot.resolve(keyDirName(d + "#winnow")).toString
-      graft.dedup.Dedup.writeWinnowIndex(Collocations.documents(s, d), dir)
-      dir
-    })
-  private def winnowIndexDirHalf(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d + "#winnow-even", {
-      val dir = dedupIndexRoot.resolve(keyDirName(d + "#winnow-even")).toString
-      graft.dedup.Dedup.writeWinnowIndex(
-        Collocations.documents(s, d).filter(pmod(col("doc_id"), lit(2L)) === 0), dir)
-      dir
-    })
+  private val winnowIndex = Artifact("#winnow", (s, d, dir) =>
+    graft.dedup.Dedup.writeWinnowIndex(Collocations.documents(s, d), dir))
+  private val winnowIndexHalf = Artifact("#winnow-even", (s, d, dir) =>
+    graft.dedup.Dedup.writeWinnowIndex(evenDocs(s, d), dir))
 
   /** Perceptual fingerprint index of one modality (full corpus, or the
     * even-doc_id half the incremental and gate queries build on) — same
     * build-once lifecycle and shutdown-cleaned root. */
-  private def fpIndexDir(s: SparkSession, d: String, m: Modality,
-                         evenHalf: Boolean = false): String = {
-    val key = s"$d#${m.table}" + (if (evenHalf) "-even" else "")
-    dedupIndexDirs.getOrElseUpdate(key, {
-      val dir = dedupIndexRoot.resolve(keyDirName(key)).toString
-      val docs = Collocations.documents(s, d)
+  private def fpArtifact(m: Modality, evenHalf: Boolean): Artifact =
+    Artifact(s"#${m.table}" + (if (evenHalf) "-even" else ""), (s, d, dir) =>
       graft.dedup.Dedup.writeFingerprintIndex(m,
-        if (evenHalf) docs.filter(pmod(col("doc_id"), lit(2L)) === 0) else docs, dir)
-      dir
-    })
-  }
+        if (evenHalf) evenDocs(s, d) else Collocations.documents(s, d), dir))
+  private val fpIndex: Map[Modality, Artifact] =
+    Modality.all.map(m => m -> fpArtifact(m, evenHalf = false)).toMap
+  private val fpIndexHalf: Map[Modality, Artifact] =
+    Modality.all.map(m => m -> fpArtifact(m, evenHalf = true)).toMap
 
   /** Substring-anchor index (full corpus / even half) — same
     * build-once lifecycle and shutdown-cleaned root. */
-  private def substringIndexDir(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d + "#substr", {
-      val dir = dedupIndexRoot.resolve(keyDirName(d + "#substr")).toString
-      graft.dedup.Dedup.writeSubstringIndex(Collocations.documents(s, d), dir)
-      dir
-    })
-  private def substringIndexDirHalf(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d + "#substr-even", {
-      val dir = dedupIndexRoot.resolve(keyDirName(d + "#substr-even")).toString
-      graft.dedup.Dedup.writeSubstringIndex(
-        Collocations.documents(s, d).filter(pmod(col("doc_id"), lit(2L)) === 0), dir)
-      dir
-    })
+  private val substringIndex = Artifact("#substr", (s, d, dir) =>
+    graft.dedup.Dedup.writeSubstringIndex(Collocations.documents(s, d), dir))
+  private val substringIndexHalf = Artifact("#substr-even", (s, d, dir) =>
+    graft.dedup.Dedup.writeSubstringIndex(evenDocs(s, d), dir))
 
   /** Benchmark-side anchor index (src0 docs only) — the static half of
     * the decontamination serve path and the [[graft.streaming.DeconStream]]
     * gate; same build-once lifecycle and shutdown-cleaned root. */
-  private def benchAnchorIndexDir(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d + "#bench-substr", {
-      val dir = dedupIndexRoot.resolve(keyDirName(d + "#bench-substr")).toString
-      graft.dedup.Dedup.writeSubstringIndex(
-        Collocations.documents(s, d).filter(col("source") === "src0"), dir)
-      dir
-    })
+  private val benchAnchorIndex = Artifact("#bench-substr", (s, d, dir) =>
+    graft.dedup.Dedup.writeSubstringIndex(
+      Collocations.documents(s, d).filter(col("source") === "src0"), dir))
 
   /** Persisted BPE merge-table model — the tokenizer's build-once/
     * serve-many lifecycle, same shutdown-cleaned root. */
-  private def bpeModelDir(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d + "#bpe", {
-      val dir = dedupIndexRoot.resolve(keyDirName(d + "#bpe")).toString
-      graft.text.TextAnalysis.writeBpeModel(Collocations.documents(s, d), dir)
-      dir
-    })
+  private val bpeModel = Artifact("#bpe", (s, d, dir) =>
+    graft.text.TextAnalysis.writeBpeModel(Collocations.documents(s, d), dir))
 
   /** Persisted unigram-LM piece model — same lifecycle as the BPE merge
     * table. */
-  private def unigramModelDir(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d + "#unigram", {
-      val dir = dedupIndexRoot.resolve(keyDirName(d + "#unigram")).toString
-      graft.text.TextAnalysis.writeUnigramModel(Collocations.documents(s, d), dir)
-      dir
-    })
+  private val unigramModel = Artifact("#unigram", (s, d, dir) =>
+    graft.text.TextAnalysis.writeUnigramModel(Collocations.documents(s, d), dir))
 
   /** Persisted Kneser-Ney LM model (the bigram-type TABLE — joined
     * distributively at serve time, never collected) — same lifecycle
     * and cleaned root. */
-  private def knModelDir(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d + "#knlm", {
-      val dir = dedupIndexRoot.resolve(keyDirName(d + "#knlm")).toString
-      graft.text.TextAnalysis.writeKnModel(Collocations.documents(s, d), dir)
-      dir
-    })
+  private val knModel = Artifact("#knlm", (s, d, dir) =>
+    graft.text.TextAnalysis.writeKnModel(Collocations.documents(s, d), dir))
 
   /** Persisted trigram KN model (the order-3 type TABLE — joined
     * distributively at serve time) — same lifecycle and cleaned root. */
-  private def kn3ModelDir(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d + "#kn3lm", {
-      val dir = dedupIndexRoot.resolve(keyDirName(d + "#kn3lm")).toString
-      graft.text.TextAnalysis.writeKn3Model(Collocations.documents(s, d), dir)
-      dir
-    })
+  private val kn3Model = Artifact("#kn3lm", (s, d, dir) =>
+    graft.text.TextAnalysis.writeKn3Model(Collocations.documents(s, d), dir))
 
   /** Persisted PCA component model — same lifecycle and cleaned root. */
-  private def pcaModelDir(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d + "#pca", {
-      val dir = dedupIndexRoot.resolve(keyDirName(d + "#pca")).toString
-      graft.similarity.Pca.writePcaModel(
-        s.read.parquet(s"$d/embeddings.parquet"), dir, k = 4, trainStride = 2)
-      dir
-    })
+  private val pcaModel = Artifact("#pca", (s, d, dir) =>
+    graft.similarity.Pca.writePcaModel(
+      s.read.parquet(s"$d/embeddings.parquet"), dir, k = 4, trainStride = 2))
 
   /** Persisted IVF centroid model — same lifecycle and cleaned root. */
-  private def ivfModelDir(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d + "#ivf", {
-      val dir = dedupIndexRoot.resolve(keyDirName(d + "#ivf")).toString
-      graft.similarity.Ann.writeIvfModel(
-        s.read.parquet(s"$d/embeddings.parquet"), dir, trainStride = 8)
-      dir
-    })
+  private val ivfModel = Artifact("#ivf", (s, d, dir) =>
+    graft.similarity.Ann.writeIvfModel(
+      s.read.parquet(s"$d/embeddings.parquet"), dir, trainStride = 8))
 
   /** Persisted SemDeDup ingest-gate index (even half): centroids trained
     * on the even vec_ids + that half's kept representatives. */
-  private def semanticGateIndexDir(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d + "#semgate", {
-      val dir = dedupIndexRoot.resolve(keyDirName(d + "#semgate")).toString
-      graft.dedup.Dedup.writeSemanticGateIndex(
-        s.read.parquet(s"$d/embeddings.parquet")
-          .filter(pmod(col("vec_id"), lit(2L)) === 0),
-        dir, nClusters = 8, iters = 2, minCos = 0.4, trainStride = 1)
-      dir
-    })
+  private val semanticGateIndex = Artifact("#semgate", (s, d, dir) =>
+    graft.dedup.Dedup.writeSemanticGateIndex(
+      s.read.parquet(s"$d/embeddings.parquet")
+        .filter(pmod(col("vec_id"), lit(2L)) === 0),
+      dir, nClusters = 8, iters = 2, minCos = 0.4, trainStride = 1))
 
   /** Persisted pretrain INGEST-GATE index — everything the continuous
     * gate ([[graft.streaming.PretrainStream]]) serves against, derived
@@ -195,73 +154,61 @@ object SparkEntry {
     * pages and the benchmark's: `/dedup` = the minhash signature +
     * shingle-set tables (writeDedupIndex shape), `/anchors` + `/bench` =
     * the benchmark substring-anchor table and its extension corpus. */
-  private def pretrainGateIndexDir(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d + "#pretraingate", {
-      val dir = dedupIndexRoot.resolve(keyDirName(d + "#pretraingate")).toString
-      graft.streaming.PretrainStream.writeGateIndex(
-        Collocations.documents(s, d).select(col("doc_id"), col("source"),
-          graft.pipelines.PretrainCorpus.dirtyPageV2.as("text")),
-        dir,
-        benchPred = col("source") === "src0",
-        corpusPred = pmod(col("doc_id"), lit(2L)) === 0 && col("source") =!= "src0")
-      dir
-    })
+  private val pretrainGateIndex = Artifact("#pretraingate", (s, d, dir) =>
+    graft.streaming.PretrainStream.writeGateIndex(
+      Collocations.documents(s, d).select(col("doc_id"), col("source"),
+        graft.pipelines.PretrainCorpus.dirtyPageV2.as("text")),
+      dir,
+      benchPred = col("source") === "src0",
+      corpusPred = pmod(col("doc_id"), lit(2L)) === 0 && col("source") =!= "src0"))
 
   /** Persisted semantic-decon BENCHMARK index: centroids trained on the
     * benchmark tenth (vec_id % 10 = 0) plus that side's cell-assigned
     * vectors — serving assigns the train side only, the benchmark is
     * never re-clustered or re-assigned on ingest. */
-  private def semanticDeconIndexDir(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d + "#semdecon", {
-      val dir = dedupIndexRoot.resolve(keyDirName(d + "#semdecon")).toString
-      graft.dedup.Dedup.writeSemanticDeconIndex(
-        s.read.parquet(s"$d/embeddings.parquet")
-          .filter(pmod(col("vec_id"), lit(10L)) === 0),
-        dir, nClusters = 8, iters = 2, trainStride = 1)
-      dir
-    })
+  private val semanticDeconIndex = Artifact("#semdecon", (s, d, dir) =>
+    graft.dedup.Dedup.writeSemanticDeconIndex(
+      s.read.parquet(s"$d/embeddings.parquet")
+        .filter(pmod(col("vec_id"), lit(10L)) === 0),
+      dir, nClusters = 8, iters = 2, trainStride = 1))
 
   /** Persisted SemDeDup centroid model — trained with EXACTLY the
     * rebuild entry's params (nClusters=8, iters=2, trainStride=1) so
     * serve-equals-rebuild holds bit-for-bit (pinned in DedupSpec). */
-  private def semanticModelDir(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d + "#sem", {
-      val dir = dedupIndexRoot.resolve(keyDirName(d + "#sem")).toString
-      graft.similarity.Ann.writeIvfModel(
-        s.read.parquet(s"$d/embeddings.parquet"), dir,
-        nCells = 8, iters = 2, trainStride = 1)
-      dir
-    })
+  private val semanticModel = Artifact("#sem", (s, d, dir) =>
+    graft.similarity.Ann.writeIvfModel(
+      s.read.parquet(s"$d/embeddings.parquet"), dir,
+      nCells = 8, iters = 2, trainStride = 1))
+
+  /** Persisted trained-langid model — build-once lifecycle, cleaned root. */
+  private val langIdModel = Artifact("#langid", (s, d, dir) =>
+    graft.text.LangIdClassifier.writeModel(langIdTrained(s, d), dir, s))
+
+  /** Every build-once artifact, in the order [[prepare]] builds them. */
+  private[graft] val artifacts: Seq[Artifact] =
+    Seq(dedupIndex, dedupIndexHalf, winnowIndex, winnowIndexHalf, substringIndex, substringIndexHalf) ++
+      Modality.all.flatMap(m => Seq(fpIndex(m), fpIndexHalf(m))) ++
+      Seq(benchAnchorIndex, bpeModel, unigramModel, knModel, kn3Model, ivfModel, semanticModel,
+        semanticGateIndex, semanticDeconIndex, pretrainGateIndex, langIdModel, pcaModel)
 
   /** One-time per-process setup a measurement harness runs during warmup
-    * (the dedup/winnow/substring index builds, the persisted BPE and IVF
-    * models, and the classifier's cached Newton train), so even a
-    * single-sweep bench sample measures the serve path, never
-    * build+serve. */
+    * (every [[artifacts]] entry — the dedup/winnow/substring index builds,
+    * the persisted BPE and IVF models — and the classifier's cached
+    * Newton train), so even a single-sweep bench sample measures the
+    * serve path, never build+serve. A second call runs no Spark job:
+    * it warms the weight cache itself, not a scored frame, whose corpus
+    * read would infer the parquet schema again. */
   def prepare(spark: SparkSession, sfDir: String): Unit = {
-    dedupIndexDir(spark, sfDir)
-    dedupIndexDirHalf(spark, sfDir)
-    winnowIndexDir(spark, sfDir)
-    winnowIndexDirHalf(spark, sfDir)
-    substringIndexDir(spark, sfDir)
-    substringIndexDirHalf(spark, sfDir)
-    Modality.all.foreach { m =>
-      fpIndexDir(spark, sfDir, m)
-      fpIndexDir(spark, sfDir, m, evenHalf = true)
-    }
-    benchAnchorIndexDir(spark, sfDir)
-    bpeModelDir(spark, sfDir)
-    unigramModelDir(spark, sfDir)
-    knModelDir(spark, sfDir)
-    kn3ModelDir(spark, sfDir)
-    ivfModelDir(spark, sfDir)
-    semanticModelDir(spark, sfDir)
-    semanticGateIndexDir(spark, sfDir)
-    semanticDeconIndexDir(spark, sfDir)
-    pretrainGateIndexDir(spark, sfDir)
-    langIdModelDir(spark, sfDir)
-    pcaModelDir(spark, sfDir)
-    qcScored(spark, sfDir) // populates the per-process weight cache
+    artifacts.foreach(_.dir(spark, sfDir))
+    qcWeights(spark, sfDir)
+  }
+
+  /** Fails fast on a query name the registry does not hold. Dev tools
+    * call it before they build a session: a misspelled name would
+    * otherwise match nothing, or fail only after `prepare`. */
+  def requireKnown(names: Iterable[String]): Unit = {
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
   }
 
   /** One dialect-neutral SQL text executed verbatim by BOTH engines
@@ -418,17 +365,9 @@ object SparkEntry {
   private val langIdModelCache =
     scala.collection.concurrent.TrieMap.empty[String, graft.text.LangIdClassifier.LangIdModel]
 
-  private def langIdModel(s: SparkSession, d: String): graft.text.LangIdClassifier.LangIdModel =
+  private def langIdTrained(s: SparkSession, d: String): graft.text.LangIdClassifier.LangIdModel =
     langIdModelCache.getOrElseUpdate(d,
       graft.text.LangIdClassifier.train(Collocations.documents(s, d)))
-
-  /** Persisted trained-langid model — build-once lifecycle, cleaned root. */
-  private def langIdModelDir(s: SparkSession, d: String): String =
-    dedupIndexDirs.getOrElseUpdate(d + "#langid", {
-      val dir = dedupIndexRoot.resolve(keyDirName(d + "#langid")).toString
-      graft.text.LangIdClassifier.writeModel(langIdModel(s, d), dir, s)
-      dir
-    })
 
   /** The v2 flagship's gate threshold on the round-6 quality score —
     * a low tail-cut (the gate drops the worst ~10% of pages, it doesn't
@@ -503,10 +442,10 @@ object SparkEntry {
           Some(pairsSql)),
         (s"dedup_${m.name}_indexed", (s, d) =>
           graft.dedup.Dedup.fingerprintPairsFrom(m,
-            s.read.parquet(s"${fpIndexDir(s, d, m)}/${m.table}"), maxHamming = 3),
+            s.read.parquet(s"${fpIndex(m).dir(s, d)}/${m.table}"), maxHamming = 3),
           Some(pairsSql)),
         (s"dedup_${m.name}_incremental", (s, d) => {
-          val idx = s.read.parquet(s"${fpIndexDir(s, d, m, evenHalf = true)}/${m.table}")
+          val idx = s.read.parquet(s"${fpIndexHalf(m).dir(s, d)}/${m.table}")
           graft.dedup.Dedup.fingerprintPairsFrom(m,
             idx.unionByName(m.fingerprints(odd(s, d))), maxHamming = 3)
         }, Some(pairsSql)))
@@ -514,7 +453,7 @@ object SparkEntry {
     val gates = family.map { case (m, _, _, gateSql) =>
       (s"dedup_${m.name}_stream_gate", ((s, d) =>
         graft.streaming.MultimodalDedupStream.gateBatchIndexed(m, odd(s, d),
-          s.read.parquet(s"${fpIndexDir(s, d, m, evenHalf = true)}/${m.bandedTable}"),
+          s.read.parquet(s"${fpIndexHalf(m).dir(s, d)}/${m.bandedTable}"),
           maxHamming = 3)): Q,
         Some(gateSql))
     }
@@ -1366,7 +1305,7 @@ object SparkEntry {
     // lifecycle) and the SAME dynamic oracle gates serve-equals-rebuild
     ("tokenize_bpe_indexed",
       (s: SparkSession, d: String) => {
-        val merges = graft.text.TextAnalysis.readBpeModel(s, bpeModelDir(s, d))
+        val merges = graft.text.TextAnalysis.readBpeModel(s, bpeModel.dir(s, d))
         graft.text.TextAnalysis.lastBpeMergesIndexed = Some(merges)
         graft.text.TextAnalysis.tokenizeBpeWith(Collocations.documents(s, d), merges)
       },
@@ -1404,7 +1343,7 @@ object SparkEntry {
     // parquet (build-once per process) into its OWN stash
     ("tokenize_unigram_indexed",
       (s: SparkSession, d: String) => {
-        val model = graft.text.TextAnalysis.readUnigramModel(s, unigramModelDir(s, d))
+        val model = graft.text.TextAnalysis.readUnigramModel(s, unigramModel.dir(s, d))
         graft.text.TextAnalysis.lastUnigramModelIndexed = Some(model)
         graft.text.TextAnalysis.tokenizeUnigramWith(Collocations.documents(s, d), model)
       },
@@ -1418,8 +1357,8 @@ object SparkEntry {
     // DYNAMIC oracle from DEDICATED stashes for BOTH models
     ("tokenizer_eval",
       (s: SparkSession, d: String) => {
-        val merges = graft.text.TextAnalysis.readBpeModel(s, bpeModelDir(s, d))
-        val pieces = graft.text.TextAnalysis.readUnigramModel(s, unigramModelDir(s, d))
+        val merges = graft.text.TextAnalysis.readBpeModel(s, bpeModel.dir(s, d))
+        val pieces = graft.text.TextAnalysis.readUnigramModel(s, unigramModel.dir(s, d))
         graft.text.TextAnalysis.lastEvalBpeMerges = Some(merges)
         graft.text.TextAnalysis.lastEvalUnigramModel = Some(pieces)
         graft.text.TextAnalysis.tokenizerEval(
@@ -1811,7 +1750,7 @@ object SparkEntry {
     // the trained model and oracleSql injects it as VALUES tables.
     ("text_langid_trained",
       (s: SparkSession, d: String) => {
-        val m = langIdModel(s, d)
+        val m = langIdTrained(s, d)
         graft.text.LangIdClassifier.lastLangIdModel = Some(m)
         graft.text.LangIdClassifier.predictWith(Collocations.documents(s, d), m)
       },
@@ -1821,7 +1760,7 @@ object SparkEntry {
     // trained model (off-diagonal mass on a fresh crawl = retrain signal)
     ("text_langid_trained_eval",
       (s: SparkSession, d: String) => {
-        val m = langIdModel(s, d)
+        val m = langIdTrained(s, d)
         graft.text.LangIdClassifier.lastLangIdModelEval = Some(m)
         graft.text.LangIdClassifier.confusionWith(Collocations.documents(s, d), m)
       },
@@ -1832,7 +1771,7 @@ object SparkEntry {
     // in TextAndAnnSpec
     ("text_langid_trained_indexed",
       (s: SparkSession, d: String) => {
-        val m = graft.text.LangIdClassifier.readModel(s, langIdModelDir(s, d))
+        val m = graft.text.LangIdClassifier.readModel(s, langIdModel.dir(s, d))
         graft.text.LangIdClassifier.lastLangIdModelIndexed = Some(m)
         graft.text.LangIdClassifier.predictWith(Collocations.documents(s, d), m)
       },
@@ -1915,7 +1854,7 @@ object SparkEntry {
     ("text_lm_kn_indexed",
       (s: SparkSession, d: String) =>
         graft.text.TextAnalysis.lmScoreKnWith(
-          Collocations.documents(s, d), knModelDir(s, d)),
+          Collocations.documents(s, d), knModel.dir(s, d)),
       Some(OracleSqlExt.lmScoreKnSql(0.75))),
 
     // the pruned serve — KenLM/CCNet ships count-pruned models: singleton
@@ -1926,7 +1865,7 @@ object SparkEntry {
     ("text_lm_kn_pruned",
       (s: SparkSession, d: String) =>
         graft.text.TextAnalysis.lmScoreKnPruned(
-          Collocations.documents(s, d), knModelDir(s, d), minCount = 2),
+          Collocations.documents(s, d), knModel.dir(s, d), minCount = 2),
       Some(OracleSqlExt.lmScoreKnPrunedSql(2, 0.75))),
 
     // the order-3 KN form a KenLM-shape deployment serves: interpolated
@@ -1944,7 +1883,7 @@ object SparkEntry {
     ("text_lm_kn3_indexed",
       (s: SparkSession, d: String) =>
         graft.text.TextAnalysis.lmScoreKn3With(
-          Collocations.documents(s, d), kn3ModelDir(s, d)),
+          Collocations.documents(s, d), kn3Model.dir(s, d)),
       Some(OracleSqlExt.lmScoreKn3Sql(0.75))),
 
     // its count-pruned persisted-model serve twin: rebuild-on-the-pruned-
@@ -1953,7 +1892,7 @@ object SparkEntry {
     ("text_lm_kn3_pruned",
       (s: SparkSession, d: String) =>
         graft.text.TextAnalysis.lmScoreKn3Pruned(
-          Collocations.documents(s, d), kn3ModelDir(s, d), minCount = 2),
+          Collocations.documents(s, d), kn3Model.dir(s, d), minCount = 2),
       Some(OracleSqlExt.lmScoreKn3PrunedSql(2, 0.75))),
 
     // CCNet-style head/middle/tail perplexity terciles over the LM score
@@ -2350,7 +2289,7 @@ object SparkEntry {
     ("dedup_winnow_indexed",
       (s: SparkSession, d: String) =>
         graft.dedup.Dedup.winnowOverlapFrom(
-          s.read.parquet(s"${winnowIndexDir(s, d)}/winnow_fp")),
+          s.read.parquet(s"${winnowIndex.dir(s, d)}/winnow_fp")),
       Some(OracleSqlExt.winnowOverlapSql(3, 4, 2L))),
 
     // incremental ingest: the persisted index covers the even-doc_id
@@ -2359,7 +2298,7 @@ object SparkEntry {
     // SAME full-corpus oracle proves ingest-equals-rebuild
     ("dedup_winnow_incremental",
       (s: SparkSession, d: String) => {
-        val idx = s.read.parquet(s"${winnowIndexDirHalf(s, d)}/winnow_fp")
+        val idx = s.read.parquet(s"${winnowIndexHalf.dir(s, d)}/winnow_fp")
         val fresh = graft.dedup.Dedup.winnowFingerprints(
           Collocations.documents(s, d).filter(pmod(col("doc_id"), lit(2L)) === 1))
         graft.dedup.Dedup.winnowOverlapFrom(idx.unionByName(fresh))
@@ -2439,7 +2378,7 @@ object SparkEntry {
     ("dedup_substring_indexed",
       (s: SparkSession, d: String) =>
         graft.dedup.Dedup.substringMatchesFrom(
-          s.read.parquet(s"${substringIndexDir(s, d)}/substring_anchors"),
+          s.read.parquet(s"${substringIndex.dir(s, d)}/substring_anchors"),
           Collocations.documents(s, d), minLen = 30),
       Some(OracleSqlExt.substringMatchesSql(30))),
 
@@ -2449,7 +2388,7 @@ object SparkEntry {
     // full-corpus oracle proves ingest-equals-rebuild
     ("dedup_substring_incremental",
       (s: SparkSession, d: String) => {
-        val idx = s.read.parquet(s"${substringIndexDirHalf(s, d)}/substring_anchors")
+        val idx = s.read.parquet(s"${substringIndexHalf.dir(s, d)}/substring_anchors")
         val docs = Collocations.documents(s, d)
         val fresh = graft.dedup.Dedup.substringAnchors(
           docs.filter(pmod(col("doc_id"), lit(2L)) === 1), k = 24, w = 7)
@@ -2482,13 +2421,13 @@ object SparkEntry {
       Some(OracleSqlExt.crossSourceDupSql(0.3))),
 
     // build-once/serve-many: materialize the minhash/shingle index to
-    // parquet ONCE per (process, dataset) — see [[dedupIndexDir]] — then
+    // parquet ONCE per (process, dataset) — see [[dedupIndex]] — then
     // verify candidates from the index alone (zero corpus access in the
     // serve plan — asserted in DedupSpec). Same semantics as
     // dedup_ngram_jaccard, so the SAME oracle gates both paths.
     ("dedup_jaccard_indexed",
       (s: SparkSession, d: String) => {
-        val dir = dedupIndexDir(s, d)
+        val dir = dedupIndex.dir(s, d)
         graft.dedup.Dedup.jaccardVerifyFromIndex(
           s.read.parquet(s"$dir/minhash_sigs"), s.read.parquet(s"$dir/shingle_sets"),
           threshold = 0.3)
@@ -2504,7 +2443,7 @@ object SparkEntry {
     // so the SAME full-corpus oracle gates it.
     ("dedup_jaccard_incremental",
       (s: SparkSession, d: String) => {
-        val dir = dedupIndexDirHalf(s, d)
+        val dir = dedupIndexHalf.dir(s, d)
         val delta = Collocations.documents(s, d).filter(pmod(col("doc_id"), lit(2L)) === 1)
         val sigs = s.read.parquet(s"$dir/minhash_sigs")
           .unionByName(graft.dedup.Dedup.minhashSignatures(delta))
@@ -2624,7 +2563,7 @@ object SparkEntry {
     // serve-equals-rebuild pinned in DedupSpec.
     ("dedup_semantic_indexed",
       (s: SparkSession, d: String) => {
-        val cents = graft.similarity.Ann.readIvfModel(s, semanticModelDir(s, d))
+        val cents = graft.similarity.Ann.readIvfModel(s, semanticModel.dir(s, d))
         graft.dedup.Dedup.lastSemanticModelIndexed = Some((cents, 0.4))
         graft.dedup.Dedup.semanticDedupWith(
           s.read.parquet(s"$d/embeddings.parquet"), cents, minCos = 0.4)
@@ -2641,7 +2580,7 @@ object SparkEntry {
     // matches from them (semanticGateSql).
     ("dedup_semantic_stream_gate",
       (s: SparkSession, d: String) => {
-        val dir = semanticGateIndexDir(s, d)
+        val dir = semanticGateIndex.dir(s, d)
         val cents = graft.similarity.Ann.readIvfModel(s, s"$dir/centroids")
         graft.dedup.Dedup.lastSemanticGateModel = Some((cents, 0.4))
         graft.dedup.Dedup.semanticMatchesAgainst(
@@ -2681,7 +2620,7 @@ object SparkEntry {
     // DedupSpec.
     ("decontaminate_semantic_indexed",
       (s: SparkSession, d: String) => {
-        val dir = semanticDeconIndexDir(s, d)
+        val dir = semanticDeconIndex.dir(s, d)
         val cents = graft.similarity.Ann.readIvfModel(s, s"$dir/centroids")
         graft.dedup.Dedup.lastSemanticDeconModelIndexed = Some((cents, 0.4))
         graft.dedup.Dedup.semanticDeconMatches(
@@ -2765,7 +2704,7 @@ object SparkEntry {
     // DEDICATED stash (one slot per entry)
     ("embedding_pca_variance",
       (s: SparkSession, d: String) => {
-        val model = graft.similarity.Pca.readPcaModel(s, pcaModelDir(s, d))
+        val model = graft.similarity.Pca.readPcaModel(s, pcaModel.dir(s, d))
         graft.similarity.Pca.lastPcaVarianceModel = Some(model)
         graft.similarity.Pca.pcaVariance(
           s.read.parquet(s"$d/embeddings.parquet"), model)
@@ -2781,7 +2720,7 @@ object SparkEntry {
     // DEDICATED stash for its dynamic oracle
     ("drift_embedding",
       (s: SparkSession, d: String) => {
-        val model = graft.similarity.Pca.readPcaModel(s, pcaModelDir(s, d))
+        val model = graft.similarity.Pca.readPcaModel(s, pcaModel.dir(s, d))
         graft.similarity.Pca.lastDriftModel = Some(model)
         graft.similarity.Pca.driftEmbeddingPca(
           s.read.parquet(s"$d/embeddings.parquet"), model)
@@ -2797,7 +2736,7 @@ object SparkEntry {
     // Serves the persisted model; DEDICATED stash
     ("ann_pca_recall_eval",
       (s: SparkSession, d: String) => {
-        val model = graft.similarity.Pca.readPcaModel(s, pcaModelDir(s, d))
+        val model = graft.similarity.Pca.readPcaModel(s, pcaModel.dir(s, d))
         graft.similarity.Pca.lastPcaRecallModel = Some(model)
         graft.similarity.Pca.pcaRecallEval(
           s.read.parquet(s"$d/embeddings.parquet"), model, stride = 100, k = 5)
@@ -2809,7 +2748,7 @@ object SparkEntry {
     // trained model here follows; DEDICATED stash for its dynamic oracle
     ("embedding_pca_indexed",
       (s: SparkSession, d: String) => {
-        val model = graft.similarity.Pca.readPcaModel(s, pcaModelDir(s, d))
+        val model = graft.similarity.Pca.readPcaModel(s, pcaModel.dir(s, d))
         graft.similarity.Pca.lastPcaModelIndexed = Some(model)
         graft.similarity.Pca.pcaProject(
           s.read.parquet(s"$d/embeddings.parquet"), model)
@@ -2840,7 +2779,7 @@ object SparkEntry {
     // never gate this query against the rebuild entry's model
     ("ann_ivf_indexed",
       (s: SparkSession, d: String) => {
-        val model = graft.similarity.Ann.readIvfModel(s, ivfModelDir(s, d))
+        val model = graft.similarity.Ann.readIvfModel(s, ivfModel.dir(s, d))
         graft.similarity.Ann.lastIvfModelIndexed = Some((model, 100, 5, 2))
         graft.similarity.Ann.ivfTopKWith(
           s.read.parquet(s"$d/embeddings.parquet"), model, stride = 100, k = 5)
@@ -2942,7 +2881,7 @@ object SparkEntry {
         val docs = Collocations.documents(s, d)
         graft.dedup.Dedup.decontaminateSubstringAgainst(
           docs.filter(col("source") =!= "src0"),
-          s.read.parquet(s"${benchAnchorIndexDir(s, d)}/substring_anchors"),
+          s.read.parquet(s"${benchAnchorIndex.dir(s, d)}/substring_anchors"),
           docs.filter(col("source") === "src0"), minLen = 30)
       },
       Some(OracleSqlExt.decontaminateSubstringSql("source = 'src0'", 30))),
@@ -3076,7 +3015,7 @@ object SparkEntry {
     // the clean chain + all gates from them (OracleSqlExt.ingestGateSql).
     ("pipeline_ingest_gate",
       (s: SparkSession, d: String) => {
-        val dir = pretrainGateIndexDir(s, d)
+        val dir = pretrainGateIndex.dir(s, d)
         val w = qcWeights(s, d)
         // the language gate serves the PERSISTED lang-ID model (the same
         // publishSwap artifact text_langid_trained_indexed reads), the
@@ -3085,10 +3024,10 @@ object SparkEntry {
         // reads), and the semantic-dup gate serves the persisted
         // SemDeDup gate index (the same artifact
         // dedup_semantic_stream_gate reads)
-        val lm = graft.text.LangIdClassifier.readModel(s, langIdModelDir(s, d))
-        val semDir = semanticDeconIndexDir(s, d)
+        val lm = graft.text.LangIdClassifier.readModel(s, langIdModel.dir(s, d))
+        val semDir = semanticDeconIndex.dir(s, d)
         val semCents = graft.similarity.Ann.readIvfModel(s, s"$semDir/centroids")
-        val semGateDir = semanticGateIndexDir(s, d)
+        val semGateDir = semanticGateIndex.dir(s, d)
         val semDupCents = graft.similarity.Ann.readIvfModel(s, s"$semGateDir/centroids")
         graft.streaming.PretrainStream.lastIngestGate =
           Some((w, pretrainGateThreshold, lm, semCents, 0.4, semDupCents, 0.4))
@@ -3106,7 +3045,7 @@ object SparkEntry {
           s.read.parquet(s"$dir/anchors"), s.read.parquet(s"$dir/bench"),
           s.read.parquet(s"$dir/dedup/minhash_buckets"),
           s.read.parquet(s"$dir/dedup/shingle_sets"),
-          m => s.read.parquet(s"${fpIndexDir(s, d, m, evenHalf = true)}/${m.bandedTable}"),
+          m => s.read.parquet(s"${fpIndexHalf(m).dir(s, d)}/${m.bandedTable}"),
           arrEmb, s.read.parquet(s"$semDir/bench"), semCents,
           s.read.parquet(s"$semGateDir/kept"), semDupCents)
       },
@@ -3128,7 +3067,7 @@ object SparkEntry {
     // corpus itself, so this is the one ANN entry whose join properly
     // SHUFFLES both sides (bucket-keyed), not a broadcast/literal model.
     // The DEFAULT is the salted rewrite: the plain bucket join's hot-bucket
-    // hazard is measured (ScaleProbe m=20: plain 72.3 s vs salted 24.4 s on
+    // hazard is measured (40k vectors: plain 72.3 s vs salted 24.4 s on
     // skew-concentrated sign buckets) and unbounded in skew, so the entry a
     // user reaches for by name must be the skew-safe one.
     ("knn_join",

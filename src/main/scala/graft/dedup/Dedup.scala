@@ -221,8 +221,7 @@ object Dedup {
   def minhashC(i: Int): Long = 7919L * i + 1
 
   /** 28-bit half of an md5 hex string as a long: ascii-nibble polynomial
-    * over the 7 chars at [start, start+6]. Shared with Profile's parse
-    * A/B harness so the profiled variant IS the shipped one. */
+    * over the 7 chars at [start, start+6]. */
   private[graft] def md5Half(m: Column, start: Int): Column =
     (0 until 7).map { j =>
       val a = ascii(substring(m, start + j, 1))
@@ -240,7 +239,7 @@ object Dedup {
     * reference plain columns (no re-hash per expression). The halves
     * parse via an ascii-nibble polynomial, not conv(_,16,10): md5 hex is
     * lowercase [0-9a-f], and conv's general radix parser measured ~1.4x
-    * the cost (Profile: 1.04 s vs 0.76 s for the sf0.1 signature table —
+    * the cost (measured: 1.04 s vs 0.76 s for the sf0.1 signature table —
     * the same trade the simhash nibbles use). */
   def minhashSignatures(docs: DataFrame, k: Int = 3, numHashes: Int = 16): DataFrame =
     signaturesFromShingleRows(shingles(docs, k), numHashes)
@@ -2062,7 +2061,7 @@ object Dedup {
     * collides constantly (a k-char gram is far more common than a
     * minLen-char match); large k selects denser anchors whose collisions
     * nearly all verify. Measured curve at 10x sf0.1/minLen=30
-    * (ScaleProbe --substring-geom-only, table in ARCHITECTURE.md):
+    * (anchor-geometry table in ARCHITECTURE.md "Measured scaling"):
     * k=8,w=23 floods the pair join with 288M candidates (385 s extend);
     * k=24,w=7 emits 3.4M anchors but only 305k candidates (3.0 s) —
     * 943x fewer text attaches for the IDENTICAL 10,760 matches, hence

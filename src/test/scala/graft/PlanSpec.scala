@@ -69,10 +69,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("flagship text plan shares the count table through exchange reuse, not a cache") {
-    // why the text path needs no cache: in the final adaptive plan the c2
-    // broadcast reuses the c1 broadcast, N's aggregation reads the unigram
-    // shuffle, and the corpus is scanned once per aggregation (unigram and
-    // bigram), not once per join side
+    // why the text path needs no cache: in the final adaptive plan one
+    // count side's broadcast reuses the other's, N's aggregation reads the
+    // unigram shuffle, and the corpus is scanned once per aggregation
+    // (unigram and bigram), not once per join side. Which side is built
+    // and which reuses it depends on which stage AQE plans first.
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
@@ -81,9 +82,12 @@ class PlanSpec extends SparkSpec {
     top.collect()
     val exec = top.queryExecution.executedPlan
     val aqe = new AdaptiveSparkPlanHelper {}
+    val broadcasts = aqe.collect(exec) { case b: BroadcastExchangeLike => b }
+    assert(broadcasts.size == 2, s"expected 2 broadcasts (unigram counts and N), got ${broadcasts.size}:\n$exec")
     val reused = aqe.collect(exec) { case r: ReusedExchangeExec => r }
-    assert(reused.exists(r => r.child.isInstanceOf[BroadcastExchangeLike] &&
-      r.output.map(_.name) == Seq("lang", "w2", "c2")), s"c2 side must reuse the c1 broadcast:\n$exec")
+    val sides = Set(Seq("lang", "w1", "c1"), Seq("lang", "w2", "c2"))
+    assert(reused.exists(r => r.child.isInstanceOf[BroadcastExchangeLike] && sides(r.output.map(_.name))),
+      s"one count side must reuse the other's broadcast:\n$exec")
     assert(reused.exists(r => r.child.isInstanceOf[ShuffleExchangeLike] &&
       r.output.map(_.name) == Seq("lang", "w", "count")), s"N must reuse the unigram shuffle:\n$exec")
     val scans = aqe.collect(exec) {
@@ -650,6 +654,46 @@ class PlanSpec extends SparkSpec {
       bad.map(b => s"$name: $b")
     }
     assert(offenders.isEmpty, s"scale-unsafe plans:\n${offenders.mkString("\n")}")
+  }
+
+  test("build-once artifacts: one table of distinct keys, and a second prepare runs no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val keys = SparkEntry.artifacts.map(_.key)
+    assert(keys.distinct.size == keys.size, s"duplicate artifact keys: ${keys.diff(keys.distinct)}")
+    SparkEntry.prepare(spark, sf)
+    // job starts reach the listener in order, so once the sentinel job is
+    // seen every job the second prepare started has been seen too
+    val (group, sentinel) = ("artifacts-second-prepare", "artifacts-sentinel")
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+        jobs.add(g -> e.stageInfos.map(_.name).mkString("; "))
+        if (g == sentinel) sentinelSeen.countDown()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val dirs = try {
+      sc.setJobGroup(group, "second prepare")
+      SparkEntry.prepare(spark, sf)
+      val dirs = SparkEntry.artifacts.map(_.dir(spark, sf))
+      sc.setJobGroup(sentinel, "sentinel")
+      spark.range(1).count()
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS), "sentinel job never reached the listener")
+      dirs
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val rebuilt = jobs.asScala.collect { case (`group`, stages) => stages }.toSeq
+    assert(rebuilt.isEmpty, s"second prepare ran ${rebuilt.size} Spark jobs: ${rebuilt.mkString(" | ")}")
+    assert(dirs.distinct.size == dirs.size, s"artifacts share a dir: $dirs")
+    val missing = SparkEntry.artifacts.map(_.key).zip(dirs)
+      .filterNot { case (_, d) => java.nio.file.Files.isDirectory(java.nio.file.Paths.get(d)) }
+    assert(missing.isEmpty, s"artifact dirs missing after prepare: $missing")
   }
 
   test("the LSH bucket-size cap adds no exchange to the candidate self-join") {

@@ -4,15 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session (one per suite via lazy val; JVM-wide reuse through
-  * getOrCreate keeps the whole test run on a single SparkContext). */
+  * getOrCreate keeps the whole test run on a single SparkContext). Four
+  * cores always, whatever `SPARK_GRAFT_CPUS` says, so plan-shape tests do
+  * not depend on the box. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession("4")
 
   /** Runs `body` with the given session confs, then restores each one's
     * previous value (or unsets it): the session is shared by every suite. */
