@@ -1,15 +1,20 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.functions._
+import graft.functions.{CleanToken, NGrams, Tokens}
 
 /** Token/text normalization operators (reference: `NGramUtils.java:8,29-39`,
   * `Job1.java:140-142,170-186`).
   *
-  * All functions are pure `Column` compositions — they stay inside
-  * WholeStageCodegen and are pushed/pruned by Catalyst. No UDFs: at 100 TB a
-  * Scala UDF on the tokenize path would break codegen for the hottest
-  * operator in the engine.
+  * Token cleaning, tokenization and n-gram formation are the codegen'd
+  * expressions of [[graft.functions.Tokenize]]: one compiled byte scan per
+  * token or document inside WholeStageCodegen, no higher-order function,
+  * no per-token regex on ASCII input. They replaced `transform`/`filter`
+  * lambdas over `regexp_replace` chains, which Spark evaluates interpreted
+  * (`CodegenFallback`) once per token; PlanSpec keeps both flagship scan
+  * stages free of them. No UDFs: a Scala UDF would add a serialization
+  * boundary on the hottest operator in the engine.
   */
 object Normalize {
 
@@ -17,16 +22,11 @@ object Normalize {
     * step-for-step so results match the reference and the DuckDB oracle:
     * trim → strip POS suffix at first `_` *only when idx>0* (a leading
     * underscore is kept) → strip leading `[^\p{L}\p{N}]+` → strip trailing →
-    * trim → lowercase. Java regex and RE2 agree on `\p{L}`/`\p{N}` for the
-    * BMP classes used here.
+    * trim ([[graft.functions.CleanToken]]) → lowercase. Java regex and RE2
+    * agree on `\p{L}`/`\p{N}` for the BMP classes used here.
     */
-  def cleanToken(c: Column): Column = {
-    val t      = trim(c)
-    val posCut = when(instr(t, "_") > 1, t.substr(lit(1), instr(t, "_") - 1)).otherwise(t)
-    val noLead = regexp_replace(posCut, "^[^\\p{L}\\p{N}]+", "")
-    val noTail = regexp_replace(noLead, "[^\\p{L}\\p{N}]+$", "")
-    lower(trim(noTail))
-  }
+  def cleanToken(c: Column): Column =
+    lower(GraftSqlBridge.column(CleanToken(GraftSqlBridge.expression(c))))
 
   /** `(year/10)*10` with truncating int division (`NGramUtils.java:8`);
     * years are positive so floor == truncation. Returns BIGINT for
@@ -35,33 +35,25 @@ object Normalize {
     (floor(year.cast("double") / 10) * 10).cast("long")
 
   /** Whitespace tokenization + per-token cleaning + empty-token removal,
-    * all array-local (no explode, no shuffle): `split` on `\s+` then
-    * `transform`/`filter` higher-order functions. */
+    * all array-local (no explode, no shuffle): split on `\s+`, clean and
+    * lowercase each piece, drop empties ([[graft.functions.Tokens]]). */
   def tokensCol(text: Column): Column =
-    filter(transform(split(text, "\\s+"), cleanToken _), t => length(t) > 0)
+    GraftSqlBridge.column(Tokens(GraftSqlBridge.expression(text)))
 
   /** Adjacent-pair (bigram) generation from a cleaned token array —
-    * array-local via `sequence`+`transform`, so bigram formation costs zero
-    * shuffle (vs. a posexplode + self-join on pos+1, which would shuffle the
-    * whole corpus twice at 100 TB). Returns NULL for arrays with <2 tokens;
-    * `explode` skips NULL, giving exactly the reference's "needs >=2 tokens"
-    * drop (`Job1.java:170-171`). */
-  def bigramsCol(toks: Column): Column = {
-    val n = size(toks)
-    when(n >= 2,
-      transform(sequence(lit(1), n - 1),
-        i => struct(element_at(toks, i).as("w1"), element_at(toks, i + 1).as("w2"))))
-  }
+    * array-local, so bigram formation costs zero shuffle (vs. a posexplode
+    * + self-join on pos+1, which would shuffle the whole corpus twice at
+    * 100 TB). Returns NULL for arrays with <2 tokens; `explode` skips NULL,
+    * giving exactly the reference's "needs >=2 tokens" drop
+    * (`Job1.java:170-171`). */
+  def bigramsCol(toks: Column): Column = ngramsCol(toks, 2)
 
   /** Adjacent-triple (trigram) generation from a cleaned token array —
-    * the order-3 sibling of [[bigramsCol]], same array-local shape (zero
-    * shuffle). Returns NULL for arrays with <3 tokens; `explode` skips
-    * NULL, so only docs with at least one full trigram contribute. */
-  def trigramsCol(toks: Column): Column = {
-    val n = size(toks)
-    when(n >= 3,
-      transform(sequence(lit(1), n - 2),
-        i => struct(element_at(toks, i).as("w1"), element_at(toks, i + 1).as("w2"),
-          element_at(toks, i + 2).as("w3"))))
-  }
+    * the order-3 sibling of [[bigramsCol]]. Returns NULL for arrays with
+    * <3 tokens; `explode` skips NULL, so only docs with at least one full
+    * trigram contribute. */
+  def trigramsCol(toks: Column): Column = ngramsCol(toks, 3)
+
+  private def ngramsCol(toks: Column, n: Int): Column =
+    GraftSqlBridge.column(NGrams(GraftSqlBridge.expression(toks), n))
 }

@@ -1,8 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.Tokenize
 import graft.ops.Normalize
 
 /** Raw Google-Books-style n-gram ingestion, format-compatible with the
@@ -12,7 +16,8 @@ import graft.ops.Normalize
   *     fields ignored (`Job1.java:126-138,166-181`);
   *   - language inferred from the input file path — `heb` substring => HE
   *     else EN (`NGramUtils.java:51-79`) — expressed with
-  *     `input_file_name()` so it composes with any directory layout;
+  *     `input_file_name()` so it composes with any directory layout, and
+  *     decided once per file ([[HebrewPath]]);
   *   - malformed rows (unparseable year/occurrence, occ <= 0, missing
   *     fields) dropped, mirroring the reference's try/catch-skip
   *     (`Job1.java:130-138`).
@@ -31,7 +36,14 @@ object NGramSource {
   def read(spark: SparkSession, paths: String*): DataFrame =
     parse(spark.read.text(paths: _*)
       .withColumn("lang",
-        when(lower(input_file_name()).contains("heb"), lit(HE)).otherwise(lit(EN))))
+        when(GraftSqlBridge.column(HebrewPath(GraftSqlBridge.expression(input_file_name()))), lit(HE))
+          .otherwise(lit(EN))))
+
+  private val Heb = UTF8String.fromString("heb")
+
+  /** `lower(path).contains("heb")`, with Spark's `lower`. */
+  def isHebrew(path: UTF8String, useICU: Boolean): Boolean =
+    Tokenize.lower(path, useICU).contains(Heb)
 
   /** The corpus the reference actually points at ships as Hadoop
     * SequenceFiles of (LongWritable offset, Text tsv-line) — the format
@@ -100,4 +112,29 @@ object NGramSource {
       .filter(length(col("w1")) > 0 && length(col("w2")) > 0)
       .select("lang", "w1", "w2", "year", "occurrences")
   }
+}
+
+/** `lower(path).contains("heb")` for `input_file_name()`, decided once per
+  * file rather than once per row: generated code keeps the last path
+  * object and its answer in mutable state and recomputes only when a
+  * different object arrives. `input_file_name()` hands every row of a file
+  * the same immutable `UTF8String`, so a hit is one reference compare and
+  * a miss is the full test: the answer is exact either way. Interpreted
+  * eval runs the full test per row. */
+private[sources] case class HebrewPath(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = BooleanType
+  override def prettyName: String = "graft_hebrew_path"
+  private lazy val useICU: Boolean = Tokenize.icuCaseMappings
+  override def nullSafeEval(path: Any): Any = NGramSource.isHebrew(path.asInstanceOf[UTF8String], useICU)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val last = ctx.addMutableState(classOf[UTF8String].getName, "lastPath")
+    val heb = ctx.addMutableState(CodeGenerator.JAVA_BOOLEAN, "lastPathHebrew")
+    nullSafeCodeGen(ctx, ev, p =>
+      s"""if ($p != $last) {
+         |  $heb = graft.sources.NGramSource.isHebrew($p, $useICU);
+         |  $last = $p;
+         |}
+         |${ev.value} = $heb;""".stripMargin)
+  }
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

@@ -127,6 +127,33 @@ class NGramCollocationsSpec extends SparkSpec {
     assert(langs == Map("en" -> 7L, "he" -> 4L))
   }
 
+  test("lang decided once per file equals lower(path).contains(\"heb\") on every row, compiled and interpreted") {
+    // four tiny files packed into one scan task, so the per-file cache sees
+    // the path change mid-task; an upper-case HEB needs the lowercase
+    val dir = java.nio.file.Files.createTempDirectory("ngram-lang")
+    val files = Seq("eng-1gram.tsv" -> "eng-1gram.tsv", "heb-1gram.tsv" -> "heb-1gram.tsv",
+      "eng-1gram.tsv" -> "Corpus-HEB.tsv", "heb-1gram.tsv" -> "plain.tsv").map { case (from, to) =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(res(from)), dir.resolve(to)).toString
+    }
+    try {
+      val expected = files.map { p =>
+        (if (p.toLowerCase.contains("heb")) NGramSource.HE else NGramSource.EN) -> NGramSource.read(spark, p).count()
+      }.groupMapReduce(_._1)(_._2)(_ + _)
+      def langs(): Map[String, Long] = NGramSource.read(spark, files: _*).groupBy("lang").count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      withConf("spark.sql.files.minPartitionNum" -> "1") {
+        assert(spark.read.text(files: _*).rdd.getNumPartitions == 1, "one scan task reads every file")
+        assert(langs() == expected)
+        withConf("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+          assert(langs() == expected)
+        }
+      }
+    } finally {
+      files.foreach(p => java.nio.file.Files.delete(java.nio.file.Paths.get(p)))
+      java.nio.file.Files.delete(dir)
+    }
+  }
+
   test("unigram counts: POS stripped, cleaned, stopwords removed, weighted sums per decade") {
     val u = NGramCollocations.unigramCounts(uni).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2)) -> r.getLong(3)).toMap

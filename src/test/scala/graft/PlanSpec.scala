@@ -434,24 +434,25 @@ class PlanSpec extends SparkSpec {
   }
 
   test("n-gram path evaluates each per-row expression once, in one lazy plan small enough to JIT") {
-    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, Log, RegExpReplace, StringSplit}
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, Log, StringSplit}
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import graft.collocations.NGramCollocations
+    import graft.functions.CleanToken
     import graft.sources.NGramSource
     val (uniPaths, bgPaths) = ngramPaths
     def in(p: LogicalPlan): Seq[Expression] = p.flatMap(_.expressions.flatMap(_.collect { case e => e }))
     def splits(p: LogicalPlan, re: String) =
       in(p).count { case StringSplit(_, Literal(r, _), _) => r.toString == re; case _ => false }
-    def regexes(p: LogicalPlan) = in(p).count(_.isInstanceOf[RegExpReplace])
+    def cleans(p: LogicalPlan) = in(p).count(_.isInstanceOf[CleanToken])
 
     // a filter on a projected alias would be pushed down as a second copy
     val bg = NGramSource.bigrams(NGramSource.read(spark, bgPaths: _*)).queryExecution.optimizedPlan
     assert(splits(bg, "\t") == 1 && splits(bg, "\\s+") == 1, s"one split per line and ngram:\n$bg")
-    assert(regexes(bg) == 4, s"two regexes per token, two tokens:\n$bg")
+    assert(cleans(bg) == 2, s"one clean per token, two tokens:\n$bg")
     val uni = NGramSource.unigrams(NGramSource.read(spark, uniPaths: _*)).queryExecution.optimizedPlan
-    assert(splits(uni, "\t") == 1 && regexes(uni) == 2, s"one split, one clean:\n$uni")
+    assert(splits(uni, "\t") == 1 && cleans(uni) == 1, s"one split, one clean:\n$uni")
 
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val top = NGramCollocations.fromPaths(spark, uniPaths, bgPaths)
@@ -467,6 +468,59 @@ class PlanSpec extends SparkSpec {
     assert(huge.isEmpty, s"generated methods too large to JIT:\n${huge.mkString("\n")}")
     assert(aqe.collect(exec) { case m: InMemoryTableScanExec => m }.isEmpty, s"no cached table:\n$exec")
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty, "nothing left persisted")
+  }
+
+  /** Expressions of every plan fragment that reads a file, a fragment
+    * being the operators between exchanges; descends through AQE stages,
+    * reused exchanges and cached relations. */
+  private def scanStageExpressions(exec: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
+    import org.apache.spark.sql.execution.{DataSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+    // (operators of the fragment rooted at p, roots of the fragments below)
+    def fragment(p: SparkPlan): (Seq[SparkPlan], Seq[SparkPlan]) = p match {
+      case a: AdaptiveSparkPlanExec  => (Nil, Seq(a.executedPlan))
+      case q: QueryStageExec         => (Nil, Seq(q.plan))
+      case r: ReusedExchangeExec     => (Nil, Seq(r.child))
+      case e: Exchange               => (Nil, Seq(e.child))
+      case m: InMemoryTableScanExec  => (Seq(m), Seq(m.relation.cachedPlan))
+      case other =>
+        val kids = other.children.map(fragment)
+        (other +: kids.flatMap(_._1), kids.flatMap(_._2))
+    }
+    def all(roots: Seq[SparkPlan]): Seq[Seq[SparkPlan]] = roots.flatMap { r =>
+      val (ops, below) = fragment(r)
+      ops +: all(below)
+    }
+    all(Seq(exec)).filter(_.exists(_.isInstanceOf[DataSourceScanExec]))
+      .flatMap(_.flatMap(_.expressions.flatMap(_.collect { case e => e })))
+  }
+
+  test("flagship scan stages run compiled: no higher-order function, regex or other interpreted expression") {
+    // higher-order-function lambdas and regexp_replace evaluate interpreted
+    // or through a String round-trip once per array element; the scan
+    // stages are the critical path of both flagships
+    import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, RegExpReplace}
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import graft.collocations.NGramCollocations
+    spark.sharedState.cacheManager.clearCache()
+    val text = Collocations.topCollocations(Collocations.documents(spark, sf))
+    val ngram = NGramCollocations.fromPaths(spark, ngramPaths._1, ngramPaths._2)
+    Seq("text" -> text, "n-gram" -> ngram).foreach { case (name, df) =>
+      df.collect()
+      val exprs = scanStageExpressions(df.queryExecution.executedPlan)
+      assert(exprs.exists(_.isInstanceOf[graft.functions.CleanToken]) ||
+        exprs.exists(_.isInstanceOf[graft.functions.Tokens]), s"$name: scan stages not found")
+      val interpreted = exprs.filter {
+        case _: HigherOrderFunction | _: RegExpReplace | _: CodegenFallback => true
+        case _ => false
+      }
+      assert(interpreted.isEmpty,
+        s"$name scan stages evaluate interpreted: ${interpreted.map(_.prettyName).distinct.mkString(", ")}\n" +
+          df.queryExecution.executedPlan)
+    }
   }
 
   test("document scans prune to the columns the operator touches") {
